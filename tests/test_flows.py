@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pathlib
 
+import pytest
 from pyspark.ml.linalg import VectorUDT
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -180,6 +181,25 @@ def test_curate_corpus_redacts_pii(spark, sf_small):
     leaked = curated.filter(F.col("text").contains("example.com")).count()
     assert leaked == 0
     assert curated.filter(F.col("text").contains("[REDACTED]")).count() > 0
+
+
+def test_curate_corpus_rejects_scorer_that_drops_a_column(spark, sf_small):
+    """A callable quality_scorer is add-only: the decision attach re-reads
+    the original columns from the input, so a scorer output missing one
+    is refused rather than silently restored."""
+    from yellowrush_spark_ml_pipeline_spark.flows import curate_corpus
+    from yellowrush_spark_ml_pipeline_spark.operators.textstats import (
+        quality_score,
+    )
+    from yellowrush_spark_ml_pipeline_spark.sources import load_table
+
+    docs = load_table(spark, sf_small, "documents")
+
+    def drops_source(d):
+        return quality_score(d).drop("source")
+
+    with pytest.raises(ValueError, match="add-only"):
+        curate_corpus(docs, quality_scorer=drops_source)
 
 
 def test_preprocess_dim_csv_flow(spark, tmp_path):

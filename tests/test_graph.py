@@ -145,6 +145,14 @@ def test_kmeans_lloyd_validates_params(spark):
         kmeans_lloyd(df, n_assign=0)
 
 
+def test_kmeans_lloyd_rejects_vec_out_with_centroids(spark):
+    """The centroid relation has no per-point column to carry ``vec_out``;
+    asking for both is refused instead of silently dropping the column."""
+    df = spark.createDataFrame([(0, [0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="vec_out"):
+        kmeans_lloyd(df, k=1, return_centroids=True, vec_out="_v")
+
+
 # ------------------------------------------------------- triangle counting
 
 

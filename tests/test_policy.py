@@ -6,6 +6,7 @@ design regression even if every functional test stays green.
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -20,6 +21,16 @@ COLLECT_ALLOWED = {
     "operators/similarity.py",  # IVF centroids are driver-small by construction
     "operators/pruning.py",  # bloom bitmap words: ≤ n_bits/64 longs by construction
 }
+
+
+# Public parameters whose names read as materialization or write-layout
+# knobs, with the reason each one is not such a knob.  Each eager site
+# owns one policy; a caller-facing switch for it is dead surface.
+MATERIALIZATION_PARAM_ALLOWED = {
+    # the streaming query's offset/commit log location — a deployment path
+    "streaming/sinks.py:stream_to_parquet.checkpoint_path",
+}
+_MATERIALIZATION_PARAM = re.compile(r"^(persist|prepartition)|checkpoint|_salt$")
 
 
 def _src_files():
@@ -39,6 +50,31 @@ def test_no_unapproved_driver_collects():
     assert not offenders, (
         "driver-side collection outside the allowlist (add a bounded-size "
         f"justification or redesign): {offenders}"
+    )
+
+
+def test_no_materialization_knobs_on_public_functions():
+    """No public function takes a parameter that picks how a relation is
+    checkpointed, persisted, pre-partitioned or salted before a write."""
+    offenders = []
+    for p in _src_files():
+        rel = str(p.relative_to(SRC))
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if node.name.startswith("_"):
+                continue
+            a = node.args
+            for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                key = f"{rel}:{node.name}.{arg.arg}"
+                if (
+                    _MATERIALIZATION_PARAM.search(arg.arg)
+                    and key not in MATERIALIZATION_PARAM_ALLOWED
+                ):
+                    offenders.append(key)
+    assert not offenders, (
+        "materialization/write-layout parameters on public functions (the "
+        f"site should own one policy): {offenders}"
     )
 
 

@@ -174,10 +174,8 @@ def curate_corpus(
     max_bucket_size: int | None = None,
     canonical: str = "min_id",
     hash_fn: str = "xxhash64",
-    persist_intermediate: bool = False,
     quality_scorer=None,
     max_broadcast_rows: int = 1_000_000,
-    decision_checkpoint: bool = True,
 ) -> DataFrame:
     """The LLM training-data curation flow end-to-end: quality scoring →
     threshold filter → language ID → MinHash near-dup pairs → connected
@@ -252,26 +250,28 @@ def curate_corpus(
     # text), then re-attach the raw corpus by id.  The regex stage runs
     # exactly once into the checkpoint; each consumer re-reads the
     # text from the source scan and hash-joins the tiny decision
-    # relation.  Unlike the old opt-in persist of the WHOLE text-bearing
-    # relation (OOM hazard: its cached stats steered the planner into
-    # broadcasting the corpus at 10x data), the checkpointed relation
-    # carries no payload, so a planner broadcasting it is correct at any
-    # scale where it fits and falls back to a shuffle join where not.
+    # relation.  Unlike a persist of the WHOLE text-bearing relation (OOM
+    # hazard: its cached stats steered the planner into broadcasting the
+    # corpus at 10x data), the checkpointed relation carries no payload,
+    # so a planner broadcasting it is correct at any scale where it fits
+    # and falls back to a shuffle join where not.  localCheckpoint, not
+    # persist: it truncates lineage, so no consumer re-plans the regex
+    # stage; its blocks are unreplicated, so an executor loss on a
+    # multi-node cluster fails the flow instead of recomputing it.
     # The attach is a SIZE-GATED broadcast (r12 ADVICE: an explicit
     # broadcast hint never falls back on size, so an unconditional
     # F.broadcast(dec) would pin a corpus-proportional relation into
-    # every executor at 100 TB — the exact hazard the opt-in persist was
-    # disabled for).  A checkpointed relation has no catalyst stats, so
-    # without a hint the planner picks a sort-merge join and shuffles
-    # the TEXT column by doc_id once per consumer — the "join sneaks the
-    # payload shuffle back in" trap of guide §8.4 (measured +2 s on
-    # curate_scored).  Gate: one bounded count over the checkpointed
-    # decision blocks (same contract as semantic_dedup_incremental's
-    # max_broadcast_rows); over the gate, a shuffle-hash hint keeps the
-    # join memory-bounded — the corpus shuffles once by doc_id, which is
-    # the correct plan when the decision relation itself is beyond
-    # broadcast; slicing it further is the guide's Bloom/semi-join
-    # refinement, not the default.
+    # every executor at 100 TB).  A checkpointed relation has no
+    # catalyst stats, so without a hint the planner picks a sort-merge
+    # join and shuffles the TEXT column by doc_id once per consumer —
+    # the "join sneaks the payload shuffle back in" trap of guide §8.4
+    # (measured +2 s on curate_scored).  Gate: one bounded count over
+    # the checkpointed decision blocks (same contract as
+    # semantic_dedup_incremental's max_broadcast_rows); over the gate, a
+    # shuffle-hash hint keeps the join memory-bounded — the corpus
+    # shuffles once by doc_id, which is the correct plan when the
+    # decision relation itself is beyond broadcast; slicing it further
+    # is the guide's Bloom/semi-join refinement, not the default.
     #
     # Contract notes (r12 ADVICE): a callable ``quality_scorer`` must be
     # ADD-ONLY — it may append columns but never modify existing ones
@@ -288,20 +288,8 @@ def curate_corpus(
             f"quality_scorer dropped original columns {missing}; the "
             "scorer contract is add-only (df -> df plus derived columns)"
         )
-    # ``decision_checkpoint=False`` (r12 ADVICE, multi-node durability):
-    # localCheckpoint stores the decision relation unreplicated and cuts
-    # lineage, so an executor loss on a real cluster kills every
-    # downstream consumer; persist() keeps it recomputable at the cost
-    # of re-running the regex stage after a loss.  Single-JVM runs keep
-    # the default (nothing to lose an executor to).
     derived = [c for c in kept.columns if c not in docs.columns]
-    dec = kept.select("doc_id", *derived)
-    if decision_checkpoint:
-        dec = dec.localCheckpoint(eager=True)
-    else:
-        from pyspark import StorageLevel
-
-        dec = dec.persist(StorageLevel.MEMORY_AND_DISK)
+    dec = kept.select("doc_id", *derived).localCheckpoint(eager=True)
     attach = (
         F.broadcast(dec)
         if dec.count() <= max_broadcast_rows
@@ -310,10 +298,6 @@ def curate_corpus(
     kept = docs.join(attach, "doc_id").select(
         *[F.col(c) for c in list(docs.columns) + derived]
     )
-    if persist_intermediate:
-        from pyspark import StorageLevel
-
-        kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
     # hash_fn="md5" switches the dedup tier onto the cross-engine hash
     # (functions/hashing.py) so the WHOLE flow is DuckDB-replayable.
     pairs = minhash_dedup_pairs(

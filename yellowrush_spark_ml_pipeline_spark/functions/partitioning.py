@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Partition-count memo keyed on (SparkContext identity, analyzed-plan
+# Partition-count memo keyed on (Spark application id, analyzed-plan
 # semantic hash).  The ``df.rdd.getNumPartitions()`` probe converts the
 # full analyzed plan to an RDD — driver-side physical planning + file
 # listing, repeated verbatim when the same operator plan is rebuilt
@@ -28,9 +28,12 @@ from pyspark.sql import DataFrame
 # same scan twice).  Semantically-equal plans yield the same partition
 # count within one context (same files, same session conf), so the probe
 # runs once per distinct plan instead of once per call (r12 ADVICE).
+# The application id, not ``id(sparkContext)``, scopes the entry: an
+# ``id()`` is reused once a stopped context is garbage-collected, and a
+# new context over changed files must not inherit the old counts.
 # Bounded: cleared wholesale if it ever grows past _NPART_MEMO_MAX —
 # a memo, not a cache of data.
-_NPART_MEMO: dict[tuple[int, int], int] = {}
+_NPART_MEMO: dict[tuple[str, int], int] = {}
 _NPART_MEMO_MAX = 4096
 
 
@@ -46,7 +49,7 @@ def ensure_scan_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFra
     target = spark.sparkContext.defaultParallelism
     try:
         key = (
-            id(spark.sparkContext),
+            spark.sparkContext.applicationId,
             int(df._jdf.queryExecution().analyzed().semanticHash()),
         )
         n = _NPART_MEMO.get(key)

@@ -22,6 +22,9 @@ from pyspark.sql import functions as F
 #: Fixed-point base for integer PageRank mass: 1.0 of rank == 10^12 units.
 RANK_BASE = 10**12
 
+#: label_propagation checkpoints its labels every this many rounds.
+LPA_CHECKPOINT_EVERY = 2
+
 
 def pagerank(
     edges: DataFrame,
@@ -30,8 +33,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     base: int = RANK_BASE,
-    persist_graph: bool = True,
-    prepartition_dst: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank with INTEGER fixed-point mass — every
     quantity is a BIGINT in units of ``1/base``, so the result is exact,
@@ -65,47 +66,36 @@ def pagerank(
     the unrolled lineage stays shallow (the dedup CC's localCheckpoint
     lesson applies from ~8 rounds up; at 3 it is not needed).
 
-    ``persist_graph`` (default ON — the standard PageRank discipline):
-    the edge list, node list, and out-degree relations are referenced by
-    EVERY unrolled round; without reuse Spark's lazy DAG re-derives
-    them per round — ``iterations`` redundant scans of the relationship
-    table (measured: 49 exchanges vs 21 at 3 rounds on the trade graph).
-    Reuse is via ``localCheckpoint``, not ``persist``: AQE does not
-    re-plan inside an InMemoryRelation, so cached graph relations left
-    every downstream join without runtime skew-splitting/coalescing —
-    measured 84 s -> 19 s for the full 3-round query at the sf1 decade
-    after switching (same lesson as triangle_participation). Only the
-    rank vector stays lazy (each round consumes its predecessor
-    once)."""
+    The edge list, node list, and out-degree relations are always
+    materialized: they are referenced by EVERY unrolled round, and
+    without reuse Spark's lazy DAG re-derives them per round —
+    ``iterations`` redundant scans of the relationship table (measured:
+    49 exchanges vs 21 at 3 rounds on the trade graph). Reuse is via
+    ``localCheckpoint``, not ``persist``: AQE does not re-plan inside
+    an InMemoryRelation, so cached graph relations left every downstream
+    join without runtime skew-splitting/coalescing — measured 84 s ->
+    19 s for the full 3-round query at the sf1 decade after switching
+    (same lesson as triangle_participation). Only the rank vector stays
+    lazy (each round consumes its predecessor once)."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     if not (0 <= damping_pct <= 100):
         raise ValueError("damping_pct must be in [0, 100]")
 
     e = edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
-    # ``prepartition_dst``: hash-partition the checkpointed edge list on
-    # the DESTINATION key once, up front. In the regime where the rank
-    # vector broadcasts (|V| rows vs |E| edges — AQE picks BHJ), each
-    # round's contrib relation then already satisfies the inflow
-    # aggregation's ClusteredDistribution(_dst), so the per-round |E|-row
-    # exchange disappears: iterations x |E| shuffles traded for ONE.
-    # Round-8 falsification probe for the single-host-saturation claim
-    # (VERDICT r7 #7): if the sf1->sf2 step stays ~2.8x with the shuffle
-    # gone, the residual is memory bandwidth, not the plan.
-    if prepartition_dst:
-        e = e.repartition(F.col("_dst"))
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
         .distinct()
     )
-    if persist_graph:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
+    nodes = nodes.localCheckpoint(eager=True)
     n_row = nodes.agg(F.count(F.lit(1)).alias("_n"))
-    outdeg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_outdeg"))
-    if persist_graph:
-        outdeg = outdeg.localCheckpoint(eager=True)
+    outdeg = (
+        e.groupBy("_src")
+        .agg(F.count(F.lit(1)).alias("_outdeg"))
+        .localCheckpoint(eager=True)
+    )
 
     pr = nodes.crossJoin(F.broadcast(n_row)).select(
         "node", F.expr(f"{base} div _n").alias("_pr")
@@ -140,7 +130,6 @@ def personalized_pagerank(
     dst_col: str = "dst",
     seed_col: str = "node",
     base: int = RANK_BASE,
-    persist_graph: bool = True,
 ) -> DataFrame:
     """Personalized (topic-sensitive) PageRank: identical integer
     fixed-point recurrence to :func:`pagerank`, but ALL teleport mass
@@ -154,9 +143,10 @@ def personalized_pagerank(
         pr'(v) = ((100 - d) * (base div |S|) * [v in S] + d * inflow(v)) div 100
 
     Non-seed nodes with no inflow decay to 0 — correct PPR semantics,
-    not a bug. Output and exactness contract identical to
-    :func:`pagerank`; the seed relation enters each round as a
-    broadcast-size membership join (|S| << |V| in practice)."""
+    not a bug. Output, exactness contract and ``localCheckpoint``
+    discipline identical to :func:`pagerank`; the seed relation enters
+    each round as a broadcast-size membership join (|S| << |V| in
+    practice)."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     if not (0 <= damping_pct <= 100):
@@ -168,9 +158,8 @@ def personalized_pagerank(
         .union(e.select(F.col("_dst").alias("node")))
         .distinct()
     )
-    if persist_graph:
-        e = e.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
+    nodes = nodes.localCheckpoint(eager=True)
     outdeg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_outdeg"))
     seed_nodes = (
         seeds.select(F.col(seed_col).alias("node"))
@@ -178,9 +167,8 @@ def personalized_pagerank(
         .join(nodes, "node")  # seeds outside the graph carry no mass
         .withColumn("_is_seed", F.lit(1))
     )
-    if persist_graph:
-        outdeg = outdeg.localCheckpoint(eager=True)
-        seed_nodes = seed_nodes.localCheckpoint(eager=True)
+    outdeg = outdeg.localCheckpoint(eager=True)
+    seed_nodes = seed_nodes.localCheckpoint(eager=True)
     s_row = seed_nodes.agg(F.count(F.lit(1)).alias("_s"))
 
     share = f"({base} div _s)"
@@ -242,7 +230,6 @@ def triangle_participation(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    persist_graph: bool = True,
 ) -> DataFrame:
     """Per-node triangle participation over an undirected graph — the
     clustering/cohesion measure behind community detection and
@@ -271,11 +258,11 @@ def triangle_participation(
     at sf1 on local[32], and the decade ratio is ~11x on 10x data
     (linear). Total payload of all arrays is exactly |E| longs.
 
-    ``persist_graph`` (default ON): the canonical edge list feeds the
-    degree count AND the orientation join, and the oriented list feeds
-    the adjacency build AND the probe side; both are |E|-bounded
-    derived relations that Spark's lazy DAG would otherwise re-derive
-    per reference. They are ``localCheckpoint``-ed rather than
+    The canonical edge list feeds the degree count AND the orientation
+    join, and the oriented list feeds the adjacency build AND the probe
+    side; both are |E|-bounded derived relations that Spark's lazy DAG
+    would otherwise re-derive per reference, so they (and the adjacency
+    arrays) are always ``localCheckpoint``-ed — rather than
     ``persist``-ed: AQE does not re-plan inside an InMemoryRelation,
     so a cached relation would leave the skewed joins without runtime
     skew-splitting (measured on the earlier formulation: 269 s cached
@@ -285,9 +272,8 @@ def triangle_participation(
         edges.filter(u != v)
         .select(F.least(u, v).alias("_a"), F.greatest(u, v).alias("_b"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if persist_graph:
-        canon = canon.localCheckpoint(eager=True)
     deg = (
         canon.select(F.col("_a").alias("node"))
         .union(canon.select(F.col("_b").alias("node")))
@@ -305,16 +291,14 @@ def triangle_participation(
     oriented = ranked.select(
         F.when(a_first, F.col("_a")).otherwise(F.col("_b")).alias("_u"),
         F.when(a_first, F.col("_b")).otherwise(F.col("_a")).alias("_w"),
-    )
-    if persist_graph:
-        oriented = oriented.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     # sorted out-neighbor arrays; total payload across all rows = |E| longs,
     # per-row length bounded by O(sqrt(|E|)) under the orientation
-    adj = oriented.groupBy("_u").agg(
-        F.sort_array(F.collect_list("_w")).alias("_nbrs")
+    adj = (
+        oriented.groupBy("_u")
+        .agg(F.sort_array(F.collect_list("_w")).alias("_nbrs"))
+        .localCheckpoint(eager=True)
     )
-    if persist_graph:
-        adj = adj.localCheckpoint(eager=True)
     probed = oriented.join(
         adj.select(F.col("_u").alias("_x"), F.col("_nbrs").alias("_nx")),
         oriented["_u"] == F.col("_x"),
@@ -336,7 +320,6 @@ def k_core_membership(
     rounds: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    persist_graph: bool = True,
 ) -> DataFrame:
     """Fixed-round k-core peeling: repeatedly delete nodes whose CURRENT
     degree (over the canonical undirected edge set) is below ``k`` —
@@ -370,8 +353,8 @@ def k_core_membership(
     Equal now, strictly safer at 100 TB; the same-context probe also
     put the equal-warmth decade ratios at 3.4x per 10x and 2.0x per
     2x — linear.
-    Each round's survivor edges are ``localCheckpoint``-ed (default
-    ON): the round recurrence references the previous edge list THREE
+    Each round's survivor edges are always ``localCheckpoint``-ed: the
+    round recurrence references the previous edge list THREE
     times (degree count twice via the union, anti-join base once), so
     an unpruned lazy plan grows ~3^rounds and OOMs the DRIVER on plan
     size alone by round 6 — the identical pathology dedup_groups' CC
@@ -389,9 +372,8 @@ def k_core_membership(
         edges.filter(u.isNotNull() & v.isNotNull() & (u != v))
         .select(F.least(u, v).alias("_a"), F.greatest(u, v).alias("_b"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if persist_graph:
-        e = e.localCheckpoint(eager=True)
     for _ in range(rounds):
         deg = (
             e.select(F.col("_a").alias("node"))
@@ -403,9 +385,8 @@ def k_core_membership(
         e = (
             e.join(removed.withColumnRenamed("node", "_a"), "_a", "left_anti")
             .join(removed.withColumnRenamed("node", "_b"), "_b", "left_anti")
+            .localCheckpoint(eager=True)
         )
-        if persist_graph:
-            e = e.localCheckpoint(eager=True)
     final_deg = (
         e.select(F.col("_a").alias("node"))
         .union(e.select(F.col("_b").alias("node")))
@@ -420,8 +401,6 @@ def label_propagation(
     rounds: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    persist_labels: bool = True,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Fixed-round synchronous label propagation (Raghavan et al. 2007)
     — the cheap community detector behind spam-cluster and account-ring
@@ -450,8 +429,8 @@ def label_propagation(
     shuffles and zero sorts (round-8 rewrite; the struct ordering is
     total, so the most-frequent-then-smallest-label tie-break stays
     deterministic for any label type).
-    Labels are ``localCheckpoint``-ed every ``checkpoint_every`` rounds
-    (and always after the last): each round references the previous
+    Labels are ``localCheckpoint``-ed every :data:`LPA_CHECKPOINT_EVERY`
+    rounds (and always after the last): each round references the previous
     labels TWICE (join + self-vote union), so an unbounded lineage grows
     2^rounds — but the checkpoint itself serializes the stage, and
     measured at sf0.1 the every-round cadence costs ~35% more wall than
@@ -492,8 +471,6 @@ def label_propagation(
             )
             .select("node", F.col("_m.l").alias("label"))
         )
-        if persist_labels and (
-            (_r + 1) % checkpoint_every == 0 or _r == rounds - 1
-        ):
+        if (_r + 1) % LPA_CHECKPOINT_EVERY == 0 or _r == rounds - 1:
             labels = labels.localCheckpoint(eager=True)
     return labels

@@ -33,25 +33,13 @@ from ..functions.vector import (
 )
 
 
-def _cluster_for_write(df: DataFrame, key: str, salt: int = 1) -> DataFrame:
-    """Pre-write clustering for a ``partitionBy(key)`` sink: one exchange
-    keyed on the partition column, so each key lands in ONE file instead
-    of up-to-(tasks x keys) tiny files (guide §6 — compact on write).
-
-    ``salt > 1`` (the production knob — r12 ADVICE): keying the exchange
-    on the partition column alone caps write parallelism at one task per
-    key, so a hot/skewed list becomes a single straggler writing one
-    multi-GB file.  A deterministic per-row salt (xxhash64 over the row,
-    never rand() — task retries must reproduce the assignment, guide
-    §2.5) splits each key across up to ``salt`` writer tasks / files.
-    Local-scale default stays 1: lists exceed tasks there, so salting
-    would only multiply small files."""
-    if salt <= 1:
-        return df.repartition(F.col(key))
-    return df.repartition(
-        F.col(key),
-        F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt)),
-    )
+def _cluster_for_write(df: DataFrame, key: str) -> DataFrame:
+    """Pre-write clustering for a ``partitionBy(key)`` sink — the one
+    place the write layout of the IVF, PQ and semantic-state artifacts
+    is decided: one exchange keyed on the partition column, so each key
+    lands in ONE file instead of up-to-(tasks x keys) tiny files (guide
+    §6 — compact on write). Write parallelism is one task per key."""
+    return df.repartition(F.col(key))
 
 
 def brute_force_topk(
@@ -1137,7 +1125,6 @@ def save_pq_index(
     path: str,
     encoding: str = "raw",
     scale_bits: int = 20,
-    write_salt: int = 1,
 ) -> None:
     """Persist a composed IVF-PQ index as a versioned artifact — the
     compressed sibling of :func:`save_ivf_index`: the (id, _list,
@@ -1187,9 +1174,8 @@ def save_pq_index(
     # without it every one of the N input tasks opens a file in every
     # list directory it holds rows for (up to tasks x n_lists tiny
     # files; 32 x 16 measured at sf0.1), which slows the commit AND
-    # every later probe scan.  ``write_salt`` > 1 splits hot lists
-    # across writer tasks (see _cluster_for_write).
-    _cluster_for_write(encoded, "_list", write_salt).write.mode(
+    # every later probe scan.
+    _cluster_for_write(encoded, "_list").write.mode(
         "overwrite"
     ).partitionBy("_list").parquet(_os.path.join(path, "codes.parquet"))
     codebooks.coalesce(1).write.mode("overwrite").parquet(
@@ -1424,7 +1410,6 @@ def semantic_dedup(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     target_cluster_size: int = 64,
-    persist: bool = True,
     quantizer: str = "exact",
     n_lists: "int | str" = "auto",
     fit_fraction: float = 0.25,
@@ -1485,13 +1470,16 @@ def semantic_dedup(
 
     Scale shape: quantizer assignment + one cluster-keyed self-join
     (bounded by cluster size) + one groupBy on the point id + one left
-    join back. No all-pairs join anywhere. ``persist=True`` (default)
-    localCheckpoints TWO relations: the normalized corpus ``v`` (the
-    unrolled Lloyd chain references its input once per round per
-    consumer — a measured 30 parquet scans of the corpus in the lazy
-    plan, 0 ReusedExchange; ONE scan after truncation) and the assigned
-    relation ``pts`` (three consumers: both self-join sides and the
-    audit output). At toy scale the eager materialization costs ~1 s of
+    join back. No all-pairs join anywhere. Two relations are always
+    ``localCheckpoint``-ed: the normalized corpus ``v`` (the unrolled
+    Lloyd chain references its input once per round per consumer — a
+    measured 30 parquet scans of the corpus in the lazy plan, 0
+    ReusedExchange; ONE scan after truncation) and the assigned relation
+    ``pts`` (three consumers: both self-join sides and the audit
+    output). ``localCheckpoint`` rather than ``persist``: the fix is
+    lineage truncation (the graph operators' lesson) — each consumer
+    starts from the materialized blocks, not from the whole upstream
+    chain. At toy scale the eager materialization costs ~1 s of
     constant and removes a 30x corpus-rescan multiplier — the same
     deliberate 100 TB trade as embedding_cosine_dedup's auto buckets."""
     import math as _math
@@ -1500,54 +1488,69 @@ def semantic_dedup(
         raise ValueError(f"quantizer must be 'exact' or 'ivf', got {quantizer!r}")
     v = df.select(
         F.col(id_col), normalize(as_double_array(F.col(emb_col))).alias("_v")
-    )
-    if persist:
-        v = v.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     if quantizer == "ivf":
-        if n_lists == "auto":
-            n = v.count()  # one tiny count job — documented eager exception
-            n_lists = max(8, min(n, _math.ceil(_math.sqrt(n))))
-        assigned_ivf, centroids = ivf_build_index(
-            v,
-            id_col=id_col,
-            vec_col="_v",
-            n_lists=int(n_lists),
-            seed=seed,
-            max_iter=max_iter,
-            fit_fraction=fit_fraction,
-        )
-        # distance to the assigned centroid via a k-ROW broadcast join —
-        # the parameter-sized relation shape (n_lists rows), not a
-        # single row holding every centroid
-        cent_df = v.sparkSession.createDataFrame(
-            [(i, c) for i, c in enumerate(centroids)],
-            "cluster_id int, _c array<double>",
-        )
-        pts = (
-            assigned_ivf.withColumnRenamed("_list", "cluster_id")
-            .join(F.broadcast(cent_df), "cluster_id")
-            .select(
-                F.col(id_col),
-                F.col("cluster_id"),
-                F.round(
-                    euclidean_distance(F.col("_cv"), F.col("_c")), 6
-                ).alias("dist"),
-                F.col("_cv").alias("_v"),
-            )
-        )
-    else:
-        if k == "auto":
-            n = v.count()  # one tiny count job — documented eager exception
-            k = max(8, min(n, _math.ceil(n / max(target_cluster_size, 1))))
-        # vec_out: the assignment carries its input vector out directly —
-        # no id-keyed join back onto v (round 13; bit-identical column)
-        pts = kmeans_lloyd(
-            v, k=k, n_assign=n_assign, emb_col="_v", id_col=id_col,
-            vec_out="_v",
-        )
-    if persist:
-        pts = pts.localCheckpoint(eager=True)
+        pts, _ = _ivf_points(v, id_col, n_lists, fit_fraction, seed, max_iter)
+        return _semantic_prune(pts, threshold, id_col)
+    if k == "auto":
+        n = v.count()  # one tiny count job — documented eager exception
+        k = max(8, min(n, _math.ceil(n / max(target_cluster_size, 1))))
+    # vec_out: the assignment carries its input vector out directly —
+    # no id-keyed join back onto v (bit-identical column)
+    pts = kmeans_lloyd(
+        v, k=k, n_assign=n_assign, emb_col="_v", id_col=id_col,
+        vec_out="_v",
+    ).localCheckpoint(eager=True)
     return _semantic_prune(pts, threshold, id_col)
+
+
+def _ivf_points(
+    v: DataFrame,
+    id_col: str,
+    n_lists: "int | str",
+    fit_fraction: float,
+    seed: int,
+    max_iter: int,
+) -> "tuple[DataFrame, list[list[float]]]":
+    """The sampled-fit IVF assignment both :func:`semantic_dedup` and
+    :func:`semantic_dedup_build` prune over -> (pts, centroids), with
+    ``pts`` = (id, cluster_id, dist, _v) ``localCheckpoint``-ed.
+    ``n_lists="auto"`` sizes the lists at ceil(sqrt(n)), clamped to
+    [8, n], from one tiny count job."""
+    import math as _math
+
+    if n_lists == "auto":
+        n = v.count()  # one tiny count job — documented eager exception
+        n_lists = max(8, min(n, _math.ceil(_math.sqrt(n))))
+    assigned_ivf, centroids = ivf_build_index(
+        v,
+        id_col=id_col,
+        vec_col="_v",
+        n_lists=int(n_lists),
+        seed=seed,
+        max_iter=max_iter,
+        fit_fraction=fit_fraction,
+    )
+    # distance to the assigned centroid via a k-ROW broadcast join —
+    # the parameter-sized relation shape (n_lists rows), not a
+    # single row holding every centroid
+    cent_df = v.sparkSession.createDataFrame(
+        [(i, c) for i, c in enumerate(centroids)],
+        "cluster_id int, _c array<double>",
+    )
+    pts = (
+        assigned_ivf.withColumnRenamed("_list", "cluster_id")
+        .join(F.broadcast(cent_df), "cluster_id")
+        .select(
+            F.col(id_col),
+            F.col("cluster_id"),
+            F.round(
+                euclidean_distance(F.col("_cv"), F.col("_c")), 6
+            ).alias("dist"),
+            F.col("_cv").alias("_v"),
+        )
+    )
+    return pts.localCheckpoint(eager=True), centroids
 
 
 def _semantic_prune(
@@ -1604,7 +1607,6 @@ def semantic_dedup_build(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     target_cluster_size: int = 64,
-    persist: bool = True,
     quantizer: str = "exact",
     n_lists: "int | str" = "auto",
     fit_fraction: float = 0.25,
@@ -1626,44 +1628,20 @@ def semantic_dedup_build(
     quantizer of the :func:`semantic_dedup` ivf path; the returned
     centroids are the fitted model's centers, the same "model is just
     data" JSON footprint either way.  Both feed the incremental judge
-    unchanged."""
+    unchanged.  The normalized corpus and the assigned points are
+    ``localCheckpoint``-ed exactly as in :func:`semantic_dedup`."""
     import math as _math
 
+    v = df.select(
+        F.col(id_col), normalize(as_double_array(F.col(emb_col))).alias("_v")
+    ).localCheckpoint(eager=True)
     if quantizer == "ivf":
-        v = df.select(
-            F.col(id_col),
-            normalize(as_double_array(F.col(emb_col))).alias("_v"),
-        )
-        if persist:
-            v = v.localCheckpoint(eager=True)
-        if n_lists == "auto":
-            n = v.count()
-            n_lists = max(8, min(n, _math.ceil(_math.sqrt(n))))
         # fit ONCE here and reuse for audit + returned state — calling
         # semantic_dedup(quantizer="ivf") separately would re-fit and
         # (with MLlib's engine-internal init) could disagree
-        assigned_ivf, centroids = ivf_build_index(
-            v, id_col=id_col, vec_col="_v", n_lists=int(n_lists),
-            seed=seed, max_iter=max_iter, fit_fraction=fit_fraction,
+        pts, centroids = _ivf_points(
+            v, id_col, n_lists, fit_fraction, seed, max_iter
         )
-        cent_df = v.sparkSession.createDataFrame(
-            [(i, c) for i, c in enumerate(centroids)],
-            "cluster_id int, _c array<double>",
-        )
-        pts = (
-            assigned_ivf.withColumnRenamed("_list", "cluster_id")
-            .join(F.broadcast(cent_df), "cluster_id")
-            .select(
-                F.col(id_col),
-                F.col("cluster_id"),
-                F.round(
-                    euclidean_distance(F.col("_cv"), F.col("_c")), 6
-                ).alias("dist"),
-                F.col("_cv").alias("_v"),
-            )
-        )
-        if persist:
-            pts = pts.localCheckpoint(eager=True)
         return _semantic_prune(pts, threshold, id_col), centroids
     # exact path: run the Lloyd chain ONCE and derive BOTH halves from
     # it — the centroid list via kmeans_lloyd_centroids, the audit by
@@ -1672,11 +1650,6 @@ def semantic_dedup_build(
     # same (dist, cid) argmin tie-break, same 6-digit rounding).
     # Running semantic_dedup() separately would repeat the full chain —
     # 2x training cost and a parameter-drift hazard between call sites.
-    v = df.select(
-        F.col(id_col), normalize(as_double_array(F.col(emb_col))).alias("_v")
-    )
-    if persist:
-        v = v.localCheckpoint(eager=True)
     if k == "auto":
         n = v.count()
         k = max(8, min(n, _math.ceil(n / max(target_cluster_size, 1))))
@@ -1694,9 +1667,7 @@ def semantic_dedup_build(
         F.col("_list").alias("cluster_id"),
         F.round(F.col("_dist"), 6).alias("dist"),
         F.col("_cv").alias("_v"),
-    )
-    if persist:
-        pts = pts.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     return _semantic_prune(pts, threshold, id_col), centroids
 
 
@@ -1708,7 +1679,6 @@ def save_semantic_state(
     centroids: list[list[float]],
     path: str,
     quantizer: str = "exact",
-    write_salt: int = 1,
 ) -> None:
     """Persist a :func:`semantic_dedup_build` result as the versioned
     artifact the daily :func:`semantic_dedup_incremental` job loads:
@@ -1731,9 +1701,8 @@ def save_semantic_state(
             f"quantizer must be 'exact' or 'ivf', got {quantizer!r}"
         )
 
-    # one file per cluster, not one per (task, cluster) — see save_pq_index;
-    # write_salt > 1 splits hot clusters across writer tasks
-    _cluster_for_write(kept, "cluster_id", write_salt).write.mode(
+    # one file per cluster, not one per (task, cluster) — see save_pq_index
+    _cluster_for_write(kept, "cluster_id").write.mode(
         "overwrite"
     ).partitionBy("cluster_id").parquet(_os.path.join(path, "kept.parquet"))
     with open(_os.path.join(path, "centroids.json"), "w") as fh:
@@ -1910,7 +1879,6 @@ def semantic_dedup_incremental(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     kept_emb_col: str | None = None,
-    persist: bool = True,
     broadcast_batch: bool | None = None,
     max_broadcast_rows: int = 1_000_000,
 ) -> DataFrame:
@@ -1956,9 +1924,7 @@ def semantic_dedup_incremental(
 
     * ``None`` (default) — decide from a bounded count of the batch:
       broadcast iff ``count(batch) <= max_broadcast_rows``. The count
-      is cheap when ``persist=True`` (it reads the localCheckpoint the
-      function takes anyway); with ``persist=False`` it costs one extra
-      scan of the batch plan.
+      is cheap: it reads the localCheckpoint the function takes anyway.
     * ``True``  — pin the broadcast (daily-sized batches; zero corpus
       shuffle).
     * ``False`` — shuffle-hash join keyed on cluster_id instead (the
@@ -1970,10 +1936,10 @@ def semantic_dedup_incremental(
     n_close BIGINT, keep INT) — union-compatible with the full build's
     audit table, so the daily merge is an append."""
     kept_emb_col = kept_emb_col or emb_col
-    # round 13: ONE checkpoint, not two — the normalized batch `v` had
-    # its own eager localCheckpoint, but its only consumer is the argmin
-    # below, whose output `bpts` is checkpointed anyway; the first
-    # materialization bought nothing (r12 "Not yet optimized" item).
+    # ONE checkpoint: the assigned batch `bpts` feeds the size gate, both
+    # join sides and the audit output, so it is ``localCheckpoint``-ed
+    # (lineage truncation, as in semantic_dedup); the normalized batch
+    # `v` has only the argmin as consumer and stays lazy.
     # The audit distance reads off the argmin struct itself (ivf_assign
     # with_dist) instead of a k-row broadcast join re-deriving the same
     # expression — bit-identical, one BroadcastHashJoin fewer per judge.
@@ -1987,12 +1953,10 @@ def semantic_dedup_incremental(
         F.col("_list").alias("cluster_id"),
         F.round(F.col("_dist"), 6).alias("dist"),
         F.col("_cv").alias("_v"),
-    )
-    if persist:
-        bpts = bpts.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     if broadcast_batch is None:
-        # Bounded decision, not a guess: one count over the (usually
-        # checkpointed) batch. At 100 TB the corpus never enters this.
+        # Bounded decision, not a guess: one count over the checkpointed
+        # batch. At 100 TB the corpus never enters this.
         broadcast_batch = bpts.count() <= max_broadcast_rows
     cpts = kept.select(
         F.col(id_col).alias("_qid"),
@@ -2138,7 +2102,9 @@ def kmeans_lloyd(
     ``return_centroids=True`` returns the FINAL centroid relation
     (cluster_id, centroid array<double>) — the state the last
     assignment round used — instead of the assignment; see
-    :func:`kmeans_lloyd_centroids` for the collected form.
+    :func:`kmeans_lloyd_centroids` for the collected form. It carries
+    no per-point column, so combining it with ``vec_out`` raises
+    ``ValueError``.
 
     ``vec_out`` (round 13): also emit the input vector under this name —
     the assignment always carried it internally, so a consumer that
@@ -2148,6 +2114,11 @@ def kmeans_lloyd(
     column)."""
     if k < 1 or n_assign < 1:
         raise ValueError("k and n_assign must be >= 1")
+    if vec_out and return_centroids:
+        raise ValueError(
+            "vec_out names a per-point output column; the centroid relation"
+            " returned under return_centroids=True has none"
+        )
     pts = df.select(F.col(id_col), as_double_array(F.col(emb_col)).alias("_x"))
 
     seeds = pts.orderBy(id_col).limit(k)
@@ -2532,9 +2503,7 @@ def ivf_assign_exact(
 IVF_INDEX_FORMAT_VERSION = 1
 
 
-def save_ivf_index(
-    assigned: DataFrame, centroids, path: str, write_salt: int = 1
-) -> None:
+def save_ivf_index(assigned: DataFrame, centroids, path: str) -> None:
     """Persist an IVF index as a versioned artifact — the similarity-
     search analogue of the S7 model sink (and of save_tokenizer for the
     BPE lifecycle): the assigned corpus goes to parquet PARTITIONED BY
@@ -2552,9 +2521,8 @@ def save_ivf_index(
     import os as _os
 
     exact = bool(centroids) and isinstance(centroids[0], tuple)
-    # one file per list, not one per (task, list) — see save_pq_index;
-    # write_salt > 1 splits hot lists across writer tasks
-    _cluster_for_write(assigned, "_list", write_salt).write.mode(
+    # one file per list, not one per (task, list) — see save_pq_index
+    _cluster_for_write(assigned, "_list").write.mode(
         "overwrite"
     ).partitionBy("_list").parquet(_os.path.join(path, "assigned.parquet"))
     payload = (

@@ -1200,7 +1200,6 @@ def source_kl_drift(
     df: DataFrame,
     text_col: str = "text",
     source_col: str = "source",
-    persist_counts: bool = True,
 ) -> DataFrame:
     """Per-source distribution drift: KL(p_source || p_corpus) over the
     unigram token distributions, in nats — the data-curation monitor for
@@ -1226,24 +1225,28 @@ def source_kl_drift(
     1-row corpus total enter as broadcasts. Zero Python, no float
     accumulation anywhere.
 
-    ``persist_counts`` (default ON): the (source, token) count relation
-    feeds THREE consumers (per-source totals, corpus vocabulary, the
-    scored join); without persistence each consumer re-tokenizes the
-    corpus — three full scans at 100 TB. Unlike curate_corpus's
-    intermediate (default OFF there — see the measured broadcast-OOM
-    note in flows.py), this relation is structurally bounded at
-    |sources| x |vocab| regardless of corpus size, so caching it cannot
-    blow up with the data."""
+    The (source, token) count relation is always persisted: it feeds
+    THREE consumers (per-source totals, corpus vocabulary, the scored
+    join), and without reuse each consumer re-tokenizes the corpus —
+    three full scans at 100 TB. A lazy ``persist`` rather than an eager
+    ``localCheckpoint``: the cache fills inside the query's own first
+    job, so building the plan launches no job. Unlike curate_corpus's
+    text-bearing relation (see the measured broadcast-OOM note in
+    flows.py), this relation is structurally bounded at |sources| x
+    |vocab| regardless of corpus size, so caching it cannot blow up
+    with the data."""
+    from pyspark import StorageLevel
+
     df = ensure_scan_parallelism(df)  # spread unsplittable scans (guide 2.5)
     tok = df.select(
         F.col(source_col).alias("source"),
         F.explode(tokens(F.col(text_col))).alias("_t"),
     )
-    st = tok.groupBy("source", "_t").agg(F.count(F.lit(1)).alias("_c_st"))
-    if persist_counts:
-        from pyspark import StorageLevel
-
-        st = st.persist(StorageLevel.MEMORY_AND_DISK)
+    st = (
+        tok.groupBy("source", "_t")
+        .agg(F.count(F.lit(1)).alias("_c_st"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     s_tot = st.groupBy("source").agg(F.sum("_c_st").alias("_c_s"))
     corpus = st.groupBy("_t").agg(F.sum("_c_st").alias("_c_t"))
     total = corpus.agg(F.sum("_c_t").alias("_c"))
