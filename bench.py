@@ -62,6 +62,13 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (cache hits are
+    not counted)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 class Budget:
     """Wall-clock budget for the whole bench process.  `left()` is the
     remaining allowance; phases check it before starting and per-query
@@ -94,19 +101,21 @@ def run_suite(
     budget: Budget | None = None,
     reserve: float = 0.0,
     phase: str = "",
-) -> tuple[dict[str, float], dict[str, str], dict[str, float]]:
+) -> tuple[dict[str, float], dict[str, str], dict[str, float], dict[str, int]]:
     """Time every registered query; queries finishing under
     ``retime_under`` seconds run three times, heavier queries twice —
     both classes report the MIN (round 12; one estimator everywhere so
     cross-round diffs compare plan cost, not host variance — the median
     policy measured a 1.4-1.9x smear on sub-2 s queries with no code
     change).  The max/min spread per query is returned as the third
-    element for the full committed record.  When ``budget`` is given,
-    the loop stops once remaining budget falls under ``reserve`` and
-    records the dropped names."""
+    element for the full committed record, and the number of classes
+    codegen compiled during the query's timed shots as the fourth.
+    When ``budget`` is given, the loop stops once remaining budget falls
+    under ``reserve`` and records the dropped names."""
     timings: dict[str, float] = {}
     failures: dict[str, str] = {}
     spread: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     items = list(entrymod.queries().items())
     for qi, (name, fn) in enumerate(items):
         if budget is not None and budget.left() < reserve:
@@ -121,6 +130,7 @@ def run_suite(
             # nothing it should be charging to queries.
             spark.sparkContext._jvm.System.gc()
         try:
+            c0 = codegen_compiles(spark)
             samples: list[float] = []
             for _ in range(3):
                 t0 = time.perf_counter()
@@ -130,15 +140,19 @@ def run_suite(
                     break
             timings[name] = round(min(samples), 2)
             spread[name] = round(max(samples) / max(min(samples), 1e-3), 2)
+            compiles[name] = codegen_compiles(spark) - c0
         except Exception as exc:  # noqa: BLE001 — record, keep benching
             failures[name] = f"{type(exc).__name__}: {exc}"[:200]
-    return timings, failures, spread
+    return timings, failures, spread, compiles
 
 
 def _emit(out: dict, timings: dict[str, float], summary: dict) -> None:
-    """Print the full record (top-10 slowest on stdout; everything in the
-    committed file) followed by the compact summary line.  The driver
-    keeps a bounded TAIL of stdout, so the summary always goes LAST."""
+    """Print the full record followed by the compact summary line, and
+    write it to the committed file.  The printed line carries every
+    field of the file (the full per-query map, ``spread`` and
+    ``compiles``) plus ``queries_top10``, the ten slowest, and
+    ``queries_full``, the file's name.  The summary always goes LAST,
+    so a reader that keeps only a bounded tail of stdout still gets it."""
     bench_name = (
         "BENCH_LOCAL.json"
         if os.environ.get("SPARK_GRAFT_BENCH_COMMIT") == "1"
@@ -151,17 +165,7 @@ def _emit(out: dict, timings: dict[str, float], summary: dict) -> None:
         json.dump(out, fh, indent=1, sort_keys=True)
         fh.write("\n")
     slow10 = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
-    stdout_out = dict(out, queries=slow10, queries_full=bench_name)
-    stdout_out.pop("spread", None)
-    if out.get("scaling"):
-        stdout_out["scaling"] = dict(
-            out["scaling"],
-            time_ratio={
-                q: out["scaling"]["time_ratio"][q]
-                for q in slow10
-                if q in out["scaling"]["time_ratio"]
-            },
-        )
+    stdout_out = dict(out, queries_top10=slow10, queries_full=bench_name)
     print(json.dumps(stdout_out), flush=True)
     print(json.dumps(summary), flush=True)
 
@@ -182,16 +186,22 @@ def main() -> int:
     # pandas-UDF query alone is charged the whole pool spawn (~5 s).
     warm_df = spark.range(256).repartition(8)
     materialize(warm_df.mapInPandas(lambda it: it, warm_df.schema))
-    # Round 8: codegen/JIT warm-up pass — run EVERY query once at the
-    # smallest SF before any timing. Whole-stage codegen compiles one
-    # generated class per distinct plan stage, once per JVM; without
-    # this pass each heavy query's single timed shot is charged its own
-    # one-time compiles (measured ~4 s of the exact-IVF query's 7 s),
-    # which is JVM startup cost, not plan cost — and it lands unevenly
-    # (fast queries get median-of-3, heavy queries don't). One uniform
-    # pass for all queries, no per-query special-casing; data-scale
-    # effects stay inside the measured runs because sf0.001 is ~1% of
-    # the measured decade. Disable with SPARK_GRAFT_WARMUP_DIR="".
+    # Codegen/JIT warm-up pass: run EVERY query once at the smallest SF
+    # before any timing.  Whole-stage codegen compiles one class per
+    # distinct generated source, and the session's codegen cache
+    # (session.CODEGEN_CACHE_ENTRIES, 8192) holds the whole registry's
+    # ~3.8k sources, so every class the warm-up compiles is still cached
+    # when the timed suite reaches it.  A query's `compiles` count in the
+    # record is therefore 0 unless its timed plan generates code the
+    # warm-up's did not (a different join strategy at the larger scale)
+    # or its generated code differs from run to run.
+    # Without this pass each heavy query's single timed shot is charged
+    # its own one-time compiles (measured ~4 s of the exact-IVF query's
+    # 7 s), which is JVM startup cost, not plan cost — and it lands
+    # unevenly (fast queries get min-of-3, heavy queries don't).  One
+    # uniform pass for all queries, no per-query special-casing;
+    # data-scale effects stay inside the measured runs because sf0.001 is
+    # ~1% of the measured decade. Disable with SPARK_GRAFT_WARMUP_DIR="".
     # Budget: the warmup may spend at most 30% of the allowance — the
     # primary suite is the record and must always run in full.
     warmup_dir = os.environ.get(
@@ -211,7 +221,7 @@ def main() -> int:
                 pass
 
     suite_t0 = time.monotonic()
-    timings, failures, spread = run_suite(spark, entrymod, SF_DIR)
+    timings, failures, spread, compiles = run_suite(spark, entrymod, SF_DIR)
     suite_wall = time.monotonic() - suite_t0
     total = round(sum(timings.values()), 3)
 
@@ -253,6 +263,7 @@ def main() -> int:
             "unit": "sec",
             "queries": timings,
             "spread": spread,
+            "compiles": compiles,
             "sf": _sf_from_dir(SF_DIR),
             "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
             "n_queries": len(timings),
@@ -299,7 +310,7 @@ def main() -> int:
     scaling: dict | None = None
     sec_timings: dict[str, float] = {}
     if scaling_dir and budget.left() > 0.5 * suite_wall:
-        sec_timings, sec_failures, _ = run_suite(
+        sec_timings, sec_failures, _, _ = run_suite(
             spark, entrymod, scaling_dir,
             budget=budget, reserve=30.0, phase="sf0.01_suite",
         )

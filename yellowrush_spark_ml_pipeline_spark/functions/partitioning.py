@@ -20,21 +20,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Partition-count memo keyed on (Spark application id, analyzed-plan
-# semantic hash).  The ``df.rdd.getNumPartitions()`` probe converts the
-# full analyzed plan to an RDD — driver-side physical planning + file
-# listing, repeated verbatim when the same operator plan is rebuilt
-# (every bench shot, every oracle replay, every flow that composes the
-# same scan twice).  Semantically-equal plans yield the same partition
-# count within one context (same files, same session conf), so the probe
-# runs once per distinct plan instead of once per call (r12 ADVICE).
+# Partition-count memo keyed on (Spark application id, the
+# ``_NPART_CONFS`` values, analyzed-plan semantic hash).  The
+# ``df.rdd.getNumPartitions()`` probe converts the full analyzed plan to
+# an RDD — driver-side physical planning + file listing, repeated
+# verbatim when the same operator plan is rebuilt (every bench shot,
+# every oracle replay, every flow that composes the same scan twice).
+# Semantically-equal plans yield the same partition count within one
+# context under the same session conf, so the probe runs once per
+# distinct plan and conf instead of once per call.  ``_NPART_CONFS`` are
+# the runtime confs that set the count (a plan ending in a shuffle, the
+# split of a scan), so a session that changes either gets a fresh probe.
 # The application id, not ``id(sparkContext)``, scopes the entry: an
 # ``id()`` is reused once a stopped context is garbage-collected, and a
 # new context over changed files must not inherit the old counts.
 # Bounded: cleared wholesale if it ever grows past _NPART_MEMO_MAX —
 # a memo, not a cache of data.
-_NPART_MEMO: dict[tuple[str, int], int] = {}
+_NPART_MEMO: dict[tuple[str, str, str, int], int] = {}
 _NPART_MEMO_MAX = 4096
+_NPART_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")
 
 
 def ensure_scan_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
@@ -50,6 +54,7 @@ def ensure_scan_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFra
     try:
         key = (
             spark.sparkContext.applicationId,
+            *(spark.conf.get(k) for k in _NPART_CONFS),
             int(df._jdf.queryExecution().analyzed().semanticHash()),
         )
         n = _NPART_MEMO.get(key)
