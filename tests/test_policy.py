@@ -211,3 +211,46 @@ def test_never_driver_checked_queries_lead_the_window():
         assert max(pos[n] for n in never_oracle) < min(pos[n] for n in never_rows), (
             "oracle-backed never-checked entries must precede rows-only ones"
         )
+
+
+REPO = SRC.parent
+ARTIFACT_CODEC = "sources/artifacts.py"
+
+
+def test_artifact_io_only_in_codec():
+    """meta.json / centroids.json are read and written by one module, so
+    every artifact kind shares the atomic write and the version guard."""
+    offenders = []
+    for p in _src_files():
+        rel = str(p.relative_to(SRC))
+        if rel == ARTIFACT_CODEC:
+            continue
+        text = p.read_text()
+        for m in re.finditer(r"json\.(dump|load)\b|[\"']meta\.json[\"']", text):
+            line = text[: m.start()].count("\n") + 1
+            offenders.append(f"{rel}:{line} {m.group(0)}")
+    assert not offenders, (
+        f"artifact I/O outside {ARTIFACT_CODEC}: {offenders}"
+    )
+
+
+def test_every_tool_is_referenced():
+    """Each tools/*.py is named by a live surface — tests, bench.py,
+    perfbench, the entry file, the verify skill — or by a tool that is;
+    an unreferenced tool is dead code."""
+    live = [REPO / "bench.py", REPO / "__spark_entry__.py",
+            REPO / ".claude" / "skills" / "verify" / "SKILL.md"]
+    live += [p for p in (REPO / "tests").rglob("*.py")
+             if p.resolve() != pathlib.Path(__file__).resolve()]
+    live += list((REPO / "perfbench").rglob("*.py"))
+    tools = {p.stem: p.read_text() for p in (REPO / "tools").glob("*.py")}
+    text = "\n".join(p.read_text() for p in live if p.exists())
+    reached = {t for t in tools if re.search(rf"\b{t}\b", text)}
+    frontier = set(reached)
+    while frontier:
+        src = frontier.pop()
+        for t in tools:
+            if t not in reached and re.search(rf"\b{t}\b", tools[src]):
+                reached.add(t)
+                frontier.add(t)
+    assert reached == set(tools), f"unreferenced tools: {sorted(set(tools) - reached)}"

@@ -651,10 +651,42 @@ def test_pq_train_rejects_indivisible_dim(spark):
         similarity.pq_train(corpus, m=3)
 
 
-def test_pq_search_refuses_gapped_codebook(spark):
+PQ_SEARCHES = ["pq_search_adc", "pq_search_ivf_adc", "pq_search_ivf_residual"]
+
+
+def _pq_searcher(corpus, books, queries, name, m):
+    """``search(codebooks, m)`` for the PQ search ``name`` over ``corpus``
+    encoded with ``books`` — the full scan, or the IVF-composed searches
+    over a 2-list exact index (raw codes, or residual codes)."""
+    from yellowrush_spark_ml_pipeline_spark.operators import similarity
+
+    if name == "pq_search_adc":
+        enc = similarity.pq_encode(corpus, books, m=m)
+        return lambda cb, mm: similarity.pq_search_adc(
+            enc, cb, queries, k=5, m=mm
+        )
+    assigned, cents = similarity.ivf_build_index_exact(
+        corpus, n_lists=2, lloyd_iters=1
+    )
+    if name == "pq_search_ivf_adc":
+        enc = similarity.pq_encode(
+            assigned.select("vec_id", "_list", F.col("_cv").alias("embedding")),
+            books, m=m, extra_cols=["_list"],
+        )
+    else:
+        enc = similarity.pq_encode(
+            similarity.pq_residuals(assigned, cents), books, m=m,
+            emb_col="_rv", extra_cols=["_list"],
+        )
+    fn = getattr(similarity, name)
+    return lambda cb, mm: fn(enc, cb, cents, queries, k=5, m=mm, n_probe=2)
+
+
+@pytest.mark.parametrize("search", PQ_SEARCHES)
+def test_pq_search_refuses_gapped_codebook(spark, search):
     """A codebook whose (subspace, cluster_id) ids are not dense would
-    silently shift the positional ADC lookup — the operator must refuse
-    loudly instead."""
+    silently shift the positional ADC lookup — every PQ search must
+    refuse loudly instead."""
     from py4j.protocol import Py4JJavaError
 
     from yellowrush_spark_ml_pipeline_spark.operators import similarity
@@ -664,12 +696,12 @@ def test_pq_search_refuses_gapped_codebook(spark):
     gapped = cb.filter(
         ~((F.col("subspace") == 1) & (F.col("cluster_id") == 1))
     )
-    enc = similarity.pq_encode(corpus, cb, m=2)
     queries = corpus.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    run = _pq_searcher(corpus, cb, queries, search, m=2)
     with pytest.raises((Py4JJavaError, Exception), match="not dense"):
-        similarity.pq_search_adc(enc, gapped, queries, k=5, m=2).collect()
+        run(gapped, 2).collect()
     # and the dense codebook still searches fine after the guard
-    ok = similarity.pq_search_adc(enc, cb, queries, k=5, m=2).collect()
+    ok = run(cb, 2).collect()
     assert len(ok) == 5

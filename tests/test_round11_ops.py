@@ -16,7 +16,12 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from tests.test_round10_ops import _blob_corpus, _incremental_setup
+from tests.test_round10_ops import (
+    PQ_SEARCHES,
+    _blob_corpus,
+    _incremental_setup,
+    _pq_searcher,
+)
 from yellowrush_spark_ml_pipeline_spark.plans.explain import explain_str
 
 
@@ -105,17 +110,18 @@ def test_pq_encode_rejects_codebook_m_mismatch(spark):
         similarity.pq_encode(df, books, m=2).collect()
 
 
-def test_pq_search_adc_rejects_indivisible_dim(spark):
+@pytest.mark.parametrize("search", PQ_SEARCHES)
+def test_pq_search_adc_rejects_indivisible_dim(spark, search):
     from yellowrush_spark_ml_pipeline_spark.operators import similarity
 
     df = _blob_corpus(spark, n_per=4, n_clusters=2, dim=8)
     books = similarity.pq_train(df, m=4, k=2, n_assign=1)
-    enc = similarity.pq_encode(df, books, m=4)
     queries = df.limit(1).select(
         F.lit(0).alias("query_id"), F.col("embedding")
     )
+    run = _pq_searcher(df, books, queries, search, m=4)
     with pytest.raises(ValueError, match="not divisible"):
-        similarity.pq_search_adc(enc, books, queries, k=3, m=3)
+        run(books, 3)
 
 
 def test_semantic_dedup_build_exact_single_chain_matches_semantic_dedup(spark):

@@ -1,27 +1,40 @@
 """Similarity search over embedding columns (SURVEY.md §2.13).
 
-Two tiers:
+Search tiers, all JVM-side higher-order-function math from
+``functions.vector`` (no Python in the scoring loop):
 
-* ``brute_force_topk`` — exact cosine top-k. The query side is broadcast
-  (queries are few); candidates stream through a BroadcastNestedLoopJoin,
-  then a per-query window takes top-k. Exact, and the right baseline —
-  but O(|queries| × |corpus|) compute, so at 100 TB it's for small query
-  sets or oracle checking.
-* ``lsh_topk`` — sign-random-projection (SRP) bucketed approximate top-k:
-  each vector gets a b-bit sign hash from deterministic pseudo-random
-  hyperplanes; only same-bucket (or neighboring-probe) pairs are scored.
-  Compute drops by ~2^b; recall is tunable with bucket bits / probes.
+* brute force — ``brute_force_topk`` (cosine) / ``brute_force_topk_l2``:
+  broadcast queries x corpus, exact; the oracle-checking baseline.
+* LSH — ``lsh_topk``: sign-random-projection buckets with multiprobe.
+* float IVF — ``ivf_build_index`` (sampled-fit MLlib KMeans),
+  ``ivf_assign``, ``ivf_search_index``.
+* exact IVF — ``ivf_exact_cs`` / ``ivf_build_index_exact``: integer Lloyd
+  over quantized vectors, so build, assign, probe and search replay
+  bit-for-bit in the DuckDB oracle.
+* PQ / IVFADC — ``pq_train``, ``pq_encode``, ``pq_search_adc`` (full
+  scan), ``pq_search_ivf_adc`` (list-pruned), ``pq_search_ivf_residual``
+  (residual codes), ``pq_search_rerank`` (exact re-rank of a shortlist).
+* k-means — ``kmeans_lloyd``: exact, partition-invariant Lloyd.
+* SemDeDup — ``semantic_dedup`` and its build / incremental / daily
+  lifecycle.
 
-Both use JVM-side higher-order-function math from ``functions.vector`` —
-no Python in the scoring loop.
+Every search ends in one probe -> score -> rank path built from shared
+kernels: ``_exact_probes`` (query fan-out to its nearest exact-IVF lists),
+``_float_centroid_dists`` (distances to float centroids),
+``_codebook_row`` + ``_pq_query_lut`` (the PQ lookup table with its
+``dim % m`` and dense-id guards), ``_adc_dist`` (the ADC score fold) and
+``_topk`` (the per-query ``row_number`` window with the (score, id) total
+order). Persisted indexes and the SemDeDup state read and write their
+``meta.json`` / ``centroids.json`` through ``sources.artifacts``.
 """
 
 from __future__ import annotations
 
 import math
+import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import (
@@ -31,15 +44,27 @@ from ..functions.vector import (
     euclidean_distance,
     normalize,
 )
+from ..sources import artifacts
 
 
-def _cluster_for_write(df: DataFrame, key: str) -> DataFrame:
-    """Pre-write clustering for a ``partitionBy(key)`` sink — the one
-    place the write layout of the IVF, PQ and semantic-state artifacts
-    is decided: one exchange keyed on the partition column, so each key
-    lands in ONE file instead of up-to-(tasks x keys) tiny files (guide
-    §6 — compact on write). Write parallelism is one task per key."""
-    return df.repartition(F.col(key))
+def _topk(
+    scored: DataFrame,
+    query_id_col: str,
+    id_col: str,
+    score_col: str,
+    k: int,
+    descending: bool,
+) -> DataFrame:
+    """Per-query top-k of ``scored``: ``rank`` is the ``row_number`` over
+    (score, id asc), so ties break on the id and the output is
+    deterministic. Output: (query_id, id, rank, score)."""
+    score = F.col(score_col).desc() if descending else F.col(score_col).asc()
+    w = Window.partitionBy(query_id_col).orderBy(score, F.col(id_col).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, id_col, "rank", score_col)
+    )
 
 
 def brute_force_topk(
@@ -63,13 +88,8 @@ def brute_force_topk(
         id_col,
         F.round(cosine_similarity(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine")
+    return _topk(
+        scored, query_id_col, id_col, "cosine", k, descending=True
     )
 
 
@@ -100,13 +120,8 @@ def brute_force_topk_l2(
             euclidean_distance(F.col("_qv"), F.col("_cv")), 6
         ).alias("distance"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "distance")
+    return _topk(
+        scored, query_id_col, id_col, "distance", k, descending=False
     )
 
 
@@ -138,14 +153,9 @@ def rrf_fuse(
     score = F.coalesce(
         F.lit(1.0) / (F.lit(rrf_k) + F.col("_ra")), F.lit(0.0)
     ) + F.coalesce(F.lit(1.0) / (F.lit(rrf_k) + F.col("_rb")), F.lit(0.0))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("rrf_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        joined.withColumn("rrf_score", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "rrf_score")
+    return _topk(
+        joined.withColumn("rrf_score", score),
+        query_id_col, id_col, "rrf_score", k, descending=True,
     )
 
 
@@ -231,13 +241,8 @@ def lsh_topk(
         id_col,
         F.round(cosine_similarity(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine")
+    return _topk(
+        scored, query_id_col, id_col, "cosine", k, descending=True
     )
 
 
@@ -298,6 +303,24 @@ def ivf_topk(
     )
 
 
+def _float_centroid_dists(vec: Column, centroids: list[list[float]]) -> Column:
+    """array<struct<d, l>>: the euclidean distance ``d`` from ``vec`` to each
+    float centroid (inlined as a literal array; centroids are driver-small)
+    with its list id ``l``, so ``array_sort`` orders lists nearest first,
+    ties by list id."""
+    return F.array(
+        *[
+            F.struct(
+                euclidean_distance(vec, F.array(*[F.lit(x) for x in ctr])).alias(
+                    "d"
+                ),
+                F.lit(i).alias("l"),
+            )
+            for i, ctr in enumerate(centroids)
+        ]
+    )
+
+
 def ivf_assign(
     df: DataFrame,
     centroids: list[list[float]],
@@ -314,27 +337,14 @@ def ivf_assign(
     Output: (id, _cv double-array, _list) rows, union-compatible with the
     index built by :func:`ivf_build_index`.
 
-    ``with_dist=True`` (round 13) additionally emits ``_dist`` — the
-    euclidean distance to the winning centroid, i.e. the argmin struct's
-    own ``d`` field.  Consumers that need the audit distance (the
-    SemDeDup build/incremental paths) previously re-derived it through a
-    k-row broadcast join against a centroid relation; the join recomputed
-    the IDENTICAL expression (same kernel, same literal doubles) one
-    extra exchange later, so reading it off the argmin is bit-identical
-    and one BroadcastHashJoin cheaper per call site."""
+    ``with_dist=True`` additionally emits ``_dist`` — the euclidean
+    distance to the winning centroid, i.e. the argmin struct's own ``d``
+    field.  Consumers that need the audit distance (the SemDeDup
+    build/incremental paths) read it here: a k-row broadcast join against
+    a centroid relation would recompute the IDENTICAL expression (same
+    kernel, same literal doubles) one exchange later."""
     c = df.select(F.col(id_col), as_double_array(F.col(vec_col)).alias("_cv"))
-    dists = F.array(
-        *[
-            F.struct(
-                euclidean_distance(
-                    F.col("_cv"), F.array(*[F.lit(x) for x in ctr])
-                ).alias("d"),
-                F.lit(i).alias("l"),
-            )
-            for i, ctr in enumerate(centroids)
-        ]
-    )
-    best = F.array_sort(dists)[0]
+    best = F.array_sort(_float_centroid_dists(F.col("_cv"), centroids))[0]
     if with_dist:
         # codegen's subexpression elimination evaluates `best` once for
         # both field extractions (deterministic expression, one project)
@@ -393,17 +403,7 @@ def ivf_search_index(
     q = queries.select(
         F.col(query_id_col), as_double_array(F.col(vec_col)).alias("_qv")
     )
-    dists = F.array(
-        *[
-            F.struct(
-                euclidean_distance(
-                    F.col("_qv"), F.array(*[F.lit(x) for x in ctr])
-                ).alias("d"),
-                F.lit(i).alias("l"),
-            )
-            for i, ctr in enumerate(centroids)
-        ]
-    )
+    dists = _float_centroid_dists(F.col("_qv"), centroids)
     probed = q.withColumn(
         "_list",
         F.explode(
@@ -417,13 +417,8 @@ def ivf_search_index(
         id_col,
         F.round(cosine_similarity(F.col("_qv"), F.col("_cv")), 6).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine")
+    return _topk(
+        scored, query_id_col, id_col, "cosine", k, descending=True
     )
 
 
@@ -549,6 +544,20 @@ def pq_train(
     return out
 
 
+def _codebook_row(codebooks: DataFrame) -> DataFrame:
+    """The m*k codebook rows of :func:`pq_train` collapsed to ONE
+    parameter-sized row ``_cb``: an array of (s, c, v) structs sorted by
+    (subspace, cluster_id), so with dense ids array position s*k + c holds
+    centroid (s, c) and the last element's ``s + 1`` is the codebook's m."""
+    return codebooks.select(
+        F.struct(
+            F.col("subspace").alias("s"),
+            F.col("cluster_id").alias("c"),
+            F.col("centroid").alias("v"),
+        ).alias("_e")
+    ).agg(F.sort_array(F.collect_list("_e")).alias("_cb"))
+
+
 def pq_encode(
     df: DataFrame,
     codebooks: DataFrame,
@@ -562,28 +571,20 @@ def pq_encode(
     Output: (id, codes ARRAY<INT> of length m).
 
     Plan shape: the m*k codebook rows collapse to ONE parameter-sized
-    broadcast row (array of (subspace, cid, vector) structs, sorted);
-    each point computes all m argmins in a single narrow TRANSFORM over
-    that array — zero shuffles, fused into the scan.  This is the
-    frozen-codebook ingest map: daily batches encode without touching
-    the training corpus, exactly like ivf_assign.
+    broadcast row (:func:`_codebook_row`); each point computes all m
+    argmins in a single narrow TRANSFORM over that array — zero
+    shuffles, fused into the scan.  This is the frozen-codebook ingest
+    map: daily batches encode without touching the training corpus,
+    exactly like ivf_assign.
 
     ``extra_cols`` are carried through unchanged — e.g. the IVF list id
     when building a composed IVF-PQ index (codes stored IN the inverted
     lists, the FAISS layout), so no corpus-sized re-join afterwards."""
     # The m-vs-codebook cross-check rides INSIDE the broadcast relation
-    # as a raise_error guard (the _pq_query_lut dense-guard pattern):
-    # _cb is sorted by (s, c), so the last element's subspace + 1 is the
-    # codebook's m.  An eager .first() here would re-execute the full PQ
-    # Lloyd training DAG once per encode call before the broadcast
-    # collect executes it again (r11 ADVICE).
-    raw_cb = codebooks.select(
-        F.struct(
-            F.col("subspace").alias("s"),
-            F.col("cluster_id").alias("c"),
-            F.col("centroid").alias("v"),
-        ).alias("_e")
-    ).agg(F.sort_array(F.collect_list("_e")).alias("_cb"))
+    # as a raise_error guard (as _pq_query_lut's dense guard does): an
+    # eager check here would re-execute the full PQ Lloyd training DAG
+    # once per encode call before the broadcast collect executes it again.
+    raw_cb = _codebook_row(codebooks)
     cb = F.broadcast(
         raw_cb.select(
             F.when(
@@ -646,34 +647,34 @@ def _pq_query_lut(
     m: int,
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
+    keyed: "DataFrame | None" = None,
+    qv: str = "_qv",
 ) -> DataFrame:
-    """Per-query ADC lookup table — (query_id, _k, _lut) with
-    LUT[s*k + c] = ||q_s - centroid(s,c)|| (L2, NOT squared: the score
-    is the sum of per-subspace L2 distances — a deliberate variant of
-    squared-ADC, because euclidean_distance == list_distance is the
-    proven cross-engine-exact kernel while a squared fold summed in
+    """ADC lookup tables — one row per key of ``keyed`` with ``_k`` and
+    ``_lut``, LUT[s*k + c] = ||q_s - centroid(s,c)|| (L2, NOT squared: the
+    score is the sum of per-subspace L2 distances — a deliberate variant of
+    squared-ADC, because euclidean_distance == list_distance is the proven
+    cross-engine-exact kernel while a squared fold summed in
     engine-specific order is not; ranking quality is recall-tested).
-    Shared by :func:`pq_search_adc` (full scan) and
-    :func:`pq_search_ivf_adc` (list-pruned scan).
 
-    Refuses a dim % m mismatch (silently-wrong LUT otherwise) and a
-    non-dense codebook: the positional lookup REQUIRES dense (s, c)
-    ids — a cluster that emptied during Lloyd would silently shift
-    every later position and mis-score candidates.  The dense check is
-    one boolean over the parameter-sized sorted array, per query row
-    (a handful of rows)."""
-    cb = (
-        codebooks.select(
-            F.struct(
-                F.col("subspace").alias("s"),
-                F.col("cluster_id").alias("c"),
-                F.col("centroid").alias("v"),
-            ).alias("_e")
-        ).agg(F.sort_array(F.collect_list("_e")).alias("_cb"))
-    )
-    q = queries.select(
-        F.col(query_id_col), as_double_array(F.col(vec_col)).alias("_qv")
-    ).crossJoin(F.broadcast(cb))
+    ``keyed`` holds the key columns plus the vector column ``qv``; by
+    default it is (query_id, _qv) from ``queries``, one LUT per query
+    (:func:`pq_search_adc`, :func:`pq_search_ivf_adc`).
+    :func:`pq_search_ivf_residual` keys by (query_id, _list) over the
+    query's residual against each probed list.
+
+    Refuses a dim % m mismatch of the ``queries`` vectors (silently-wrong
+    LUT otherwise) and a non-dense codebook: the positional lookup
+    REQUIRES dense (s, c) ids — a cluster that emptied during Lloyd would
+    silently shift every later position and mis-score candidates.  The
+    dense check is one boolean over the parameter-sized sorted array, per
+    LUT row (a handful of rows)."""
+    if keyed is None:
+        keyed = queries.select(
+            F.col(query_id_col), as_double_array(F.col(vec_col)).alias(qv)
+        )
+    keys = [c for c in keyed.columns if c != qv]
+    q = keyed.crossJoin(F.broadcast(_codebook_row(codebooks)))
     first = queries.select(F.size(as_double_array(F.col(vec_col)))).first()
     dim = int(first[0]) if first else 0
     if m < 1 or (first is not None and dim % m != 0):
@@ -684,7 +685,7 @@ def _pq_query_lut(
     lut = F.transform(
         F.col("_cb"),
         lambda e: euclidean_distance(
-            F.slice(F.col("_qv"), e["s"] * F.lit(sub) + 1, sub), e["v"]
+            F.slice(F.col(qv), e["s"] * F.lit(sub) + 1, sub), e["v"]
         ),
     )
     dense = F.aggregate(
@@ -698,7 +699,7 @@ def _pq_query_lut(
         lambda acc, x: acc & x,
     ) & (F.size(F.col("_cb")) == F.lit(m) * kk)
     return q.select(
-        query_id_col,
+        *keys,
         kk.alias("_k"),
         F.when(dense, lut)
         .otherwise(
@@ -712,6 +713,26 @@ def _pq_query_lut(
         )
         .alias("_lut"),
     )
+
+
+def _adc_dist(m: int) -> Column:
+    """ADC score of a candidate: its ``codes`` looked up in the joined
+    ``_lut`` (position s*_k + code), summed in subspace order, rounded to
+    6 digits, as ``approx_dist``."""
+    return F.round(
+        F.aggregate(
+            F.zip_with(
+                F.col("codes"),
+                F.sequence(F.lit(0), F.lit(m - 1)),
+                lambda c, s: F.element_at(
+                    F.col("_lut"), (s * F.col("_k") + c + 1).cast("int")
+                ),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        6,
+    ).alias("approx_dist")
 
 
 def pq_search_adc(
@@ -730,7 +751,7 @@ def pq_search_adc(
     distance is just m table lookups summed — no per-pair vector math,
     which is the entire PQ speedup (dim multiplies -> m adds per
     candidate).  The score is the sum of per-subspace L2 distances (see
-    the LUT note below for why that variant is the cross-engine-exact
+    :func:`_pq_query_lut` for why that variant is the cross-engine-exact
     one); planted-recall tests pin its ranking quality.
 
     Plan shape: the LUT builds on the broadcast (queries x one-row
@@ -741,30 +762,48 @@ def pq_search_adc(
     with the deterministic (distance asc, id asc) total order."""
     qlut = _pq_query_lut(codebooks, queries, m, vec_col, query_id_col)
     scored = encoded.crossJoin(F.broadcast(qlut)).select(
-        query_id_col,
-        F.col(id_col),
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("codes"),
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda c, s: F.element_at(
-                        F.col("_lut"), (s * F.col("_k") + c + 1).cast("int")
+        query_id_col, F.col(id_col), _adc_dist(m)
+    )
+    return _topk(
+        scored, query_id_col, id_col, "approx_dist", k, descending=False
+    )
+
+
+def _exact_probes(
+    queries: DataFrame,
+    centroids: "list[tuple[int, list[int]]] | DataFrame",
+    n_probe: int,
+    vec_col: str,
+    query_id_col: str,
+    scale_bits: int,
+    *carry: Column,
+) -> DataFrame:
+    """Fan each query out to its ``n_probe`` nearest exact-IVF lists by
+    INTEGER centroid distance, ties by list id (the probe rule every
+    exact-IVF search shares).  Output: (query_id, *carry, _qv_i, cs,
+    _list), one row per (query, probed list); ``carry`` are extra query
+    columns selected before the quantized vector ``_qv_i``."""
+    q = queries.select(
+        F.col(query_id_col),
+        *carry,
+        _quantize_ints(as_double_array(F.col(vec_col)), scale_bits).alias(
+            "_qv_i"
+        ),
+    ).crossJoin(F.broadcast(_cs_rel(centroids, queries.sparkSession)))
+    return q.withColumn(
+        "_list",
+        F.explode(
+            F.transform(
+                F.slice(
+                    F.array_sort(
+                        _cs_struct_dists(F.col("_qv_i"), F.col("cs"))
                     ),
+                    1,
+                    n_probe,
                 ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("approx_dist"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "approx_dist")
+                lambda s: s.getField("l"),
+            )
+        ),
     )
 
 
@@ -803,58 +842,17 @@ def pq_search_ivf_adc(
     is exact integer / proven-kernel arithmetic — the whole composed
     lifecycle (coarse Lloyd, subspace Lloyd, encode, probe, LUT, fold
     order) replays in DuckDB."""
-    q = queries.select(
-        F.col(query_id_col),
-        _quantize_ints(as_double_array(F.col(vec_col)), scale_bits).alias(
-            "_qv_i"
-        ),
-    ).crossJoin(F.broadcast(_cs_rel(centroids, queries.sparkSession)))
-    probed = q.withColumn(
-        "_list",
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.array_sort(
-                        _cs_struct_dists(F.col("_qv_i"), F.col("cs"))
-                    ),
-                    1,
-                    n_probe,
-                ),
-                lambda s: s.getField("l"),
-            )
-        ),
+    probed = _exact_probes(
+        queries, centroids, n_probe, vec_col, query_id_col, scale_bits
     ).select(query_id_col, "_list")
     qlut = _pq_query_lut(codebooks, queries, m, vec_col, query_id_col)
     scored = (
         encoded.join(F.broadcast(probed), "_list")
         .join(F.broadcast(qlut), query_id_col)
-        .select(
-            query_id_col,
-            F.col(id_col),
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("codes"),
-                        F.sequence(F.lit(0), F.lit(m - 1)),
-                        lambda c, s: F.element_at(
-                            F.col("_lut"),
-                            (s * F.col("_k") + c + 1).cast("int"),
-                        ),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("approx_dist"),
-        )
+        .select(query_id_col, F.col(id_col), _adc_dist(m))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "approx_dist")
+    return _topk(
+        scored, query_id_col, id_col, "approx_dist", k, descending=False
     )
 
 
@@ -933,32 +931,13 @@ def pq_search_ivf_residual(
     probes/LUTs, pruned narrow scan, one top-k window); only the LUT
     construction gains the per-list centroid join — against the k-row
     centroid relation, broadcast."""
-    spark = queries.sparkSession
-    q = queries.select(
-        F.col(query_id_col),
-        _quantize_ints(as_double_array(F.col(vec_col)), scale_bits).alias(
-            "_qv_i"
-        ),
-    ).crossJoin(F.broadcast(_cs_rel(centroids, spark)))
-    probed = q.withColumn(
-        "_list",
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.array_sort(
-                        _cs_struct_dists(F.col("_qv_i"), F.col("cs"))
-                    ),
-                    1,
-                    n_probe,
-                ),
-                lambda s: s.getField("l"),
-            )
-        ),
+    probed = _exact_probes(
+        queries, centroids, n_probe, vec_col, query_id_col, scale_bits
     ).select(query_id_col, "_qv_i", "_list")
     # per-(query, list) residual of the query against the probed list's
     # centroid — the defining IVFADC step
     scale = float(1 << scale_bits)
-    cent = _ivf_centroid_rel(centroids, spark)
+    cent = _ivf_centroid_rel(centroids, queries.sparkSession)
     qres = probed.join(F.broadcast(cent), "_list").select(
         query_id_col,
         "_list",
@@ -966,83 +945,14 @@ def pq_search_ivf_residual(
             "_qv_i", "_c", lambda a, b: (a - b) / F.lit(scale)
         ).alias("_qr"),
     )
-    # m*k LUT per (query, list) row — same collapsed-codebook + dense
-    # guard as _pq_query_lut, keyed by the pair instead of the query
-    cb = (
-        codebooks.select(
-            F.struct(
-                F.col("subspace").alias("s"),
-                F.col("cluster_id").alias("c"),
-                F.col("centroid").alias("v"),
-            ).alias("_e")
-        ).agg(F.sort_array(F.collect_list("_e")).alias("_cb"))
+    qlut = _pq_query_lut(
+        codebooks, queries, m, vec_col, query_id_col, keyed=qres, qv="_qr"
     )
-    first = queries.select(F.size(as_double_array(F.col(vec_col)))).first()
-    dim = int(first[0]) if first else 0
-    if m < 1 or (first is not None and dim % m != 0):
-        raise ValueError(
-            f"pq_search_ivf_residual: dim {dim} not divisible by m={m}"
-        )
-    sub = dim // m if m else 0
-    kk = F.size(F.filter(F.col("_cb"), lambda e: e["s"] == 0))
-    lut = F.transform(
-        F.col("_cb"),
-        lambda e: euclidean_distance(
-            F.slice(F.col("_qr"), e["s"] * F.lit(sub) + 1, sub), e["v"]
-        ),
+    scored = encoded.join(F.broadcast(qlut), ["_list"]).select(
+        query_id_col, F.col(id_col), _adc_dist(m)
     )
-    dense = F.aggregate(
-        F.zip_with(
-            F.col("_cb"),
-            F.sequence(F.lit(0), F.size(F.col("_cb")) - 1),
-            lambda e, i: (e["s"] == (i / kk).cast("int"))
-            & (e["c"] == F.pmod(i, kk)),
-        ),
-        F.lit(True),
-        lambda acc, x: acc & x,
-    ) & (F.size(F.col("_cb")) == F.lit(m) * kk)
-    qlut = qres.crossJoin(F.broadcast(cb)).select(
-        query_id_col,
-        "_list",
-        kk.alias("_k"),
-        F.when(dense, lut)
-        .otherwise(
-            F.raise_error(
-                F.lit(
-                    "pq_search_ivf_residual: codebook (subspace, cluster_id)"
-                    " ids are not dense — a cluster emptied during training"
-                )
-            )
-        )
-        .alias("_lut"),
-    )
-    scored = encoded.join(
-        F.broadcast(qlut), ["_list"]
-    ).select(
-        query_id_col,
-        F.col(id_col),
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("codes"),
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda c, s: F.element_at(
-                        F.col("_lut"), (s * F.col("_k") + c + 1).cast("int")
-                    ),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("approx_dist"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "approx_dist")
+    return _topk(
+        scored, query_id_col, id_col, "approx_dist", k, descending=False
     )
 
 
@@ -1105,13 +1015,8 @@ def pq_search_rerank(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine")
+    return _topk(
+        scored, query_id_col, id_col, "cosine", k, descending=True
     )
 
 
@@ -1140,63 +1045,52 @@ def save_pq_index(
     the raw-vector LUT (or vice versa) returns silently wrong distances,
     so the marker lets a loader dispatch — and refuse — correctly.
 
-    ``scale_bits`` records the integer-quantizer scale the exact-kind
+    ``scale_bits`` records the integer-quantizer scale the exact
     centroids (and residual codes) were built with; a search reading
     the artifact MUST probe and build residual LUTs at the SAME scale
     or its distances are silently wrong, so the value rides in
-    meta.json and :func:`pq_search_index` takes it from there
-    (r11 ADVICE).
+    meta.json and :func:`pq_search_index` takes it from there.
 
-    ``centroids`` accepts the collected [(list_id, int_vector)] /
-    [float_vector] list forms, or the lazy one-row ``cs`` relation the
-    sibling search functions take (collected here — it is
-    parameter-sized); anything else is refused up front instead of
-    dying later inside payload serialization (r11 ADVICE)."""
+    ``centroids`` accepts the exact forms every PQ search reads: the
+    collected [(list_id, int_vector)] list, or the lazy one-row ``cs``
+    relation of :func:`ivf_exact_cs` (collected here — it is
+    parameter-sized).  Anything else, a float centroid list from
+    :func:`ivf_build_index` included, is refused before anything is
+    written: no PQ search could read the artifact."""
     if encoding not in ("raw", "residual"):
         raise ValueError(f"encoding must be 'raw' or 'residual', got {encoding!r}")
-    import json as _json
-    import os as _os
-
+    accepted = (
+        "save_pq_index: centroids must be a [(list_id, int_vector)] list or"
+        " the one-row 'cs' relation from ivf_exact_cs"
+    )
     if isinstance(centroids, DataFrame):
         if "cs" not in centroids.columns:
             raise ValueError(
-                "save_pq_index: centroids must be a [(list_id, int_vector)]"
-                " list, a [float_vector] list, or the one-row 'cs' relation"
-                f" from ivf_exact_cs; got a DataFrame with columns"
-                f" {centroids.columns}"
+                f"{accepted}; got a DataFrame with columns {centroids.columns}"
             )
         row = centroids.select("cs").first()
         centroids = [
             (int(s["l"]), [int(x) for x in s["c"]])
             for s in (row["cs"] if row else [])
         ]
-    # Repartition by the partition column before the partitioned write:
-    # without it every one of the N input tasks opens a file in every
-    # list directory it holds rows for (up to tasks x n_lists tiny
-    # files; 32 x 16 measured at sf0.1), which slows the commit AND
-    # every later probe scan.
-    _cluster_for_write(encoded, "_list").write.mode(
+    elif not all(isinstance(c, tuple) for c in centroids):
+        raise ValueError(
+            f"{accepted}; got a float centroid list (as ivf_build_index"
+            " returns), which no PQ search can probe"
+        )
+    artifacts.cluster_for_write(encoded, "_list").write.mode(
         "overwrite"
-    ).partitionBy("_list").parquet(_os.path.join(path, "codes.parquet"))
+    ).partitionBy("_list").parquet(os.path.join(path, "codes.parquet"))
     codebooks.coalesce(1).write.mode("overwrite").parquet(
-        _os.path.join(path, "codebooks.parquet")
+        os.path.join(path, "codebooks.parquet")
     )
-    exact = bool(centroids) and isinstance(centroids[0], tuple)
-    payload = (
-        [[int(l), [int(x) for x in c]] for l, c in centroids]
-        if exact
-        else [[float(x) for x in c] for c in centroids]
-    )
-    with open(_os.path.join(path, "centroids.json"), "w") as fh:
-        _json.dump(payload, fh)
-        fh.write("\n")
+    artifacts.write_centroids(path, centroids)
     # m/k for the meta guard come from the parquet JUST WRITTEN, not the
     # input DataFrame: an agg over `codebooks` would re-execute its full
-    # training DAG (4 subspace Lloyd chains for the PQ queries) one more
-    # time per save (r11 ADVICE class — the pq_encode eager-guard bug).
+    # training DAG (m subspace Lloyd chains) once more per save.
     mk = (
         encoded.sparkSession.read.parquet(
-            _os.path.join(path, "codebooks.parquet")
+            os.path.join(path, "codebooks.parquet")
         )
         .agg(
             (F.max("subspace") + 1).alias("_m"),
@@ -1204,22 +1098,18 @@ def save_pq_index(
         )
         .first()
     )
-    with open(_os.path.join(path, "meta.json"), "w") as fh:
-        _json.dump(
-            {
-                "format_version": PQ_INDEX_FORMAT_VERSION,
-                "kind": "exact" if exact else "float",
-                "encoding": encoding,
-                "n_lists": len(payload),
-                "m": int(mk["_m"]) if mk and mk["_m"] is not None else 0,
-                "k": int(mk["_k"]) if mk and mk["_k"] is not None else 0,
-                "scale_bits": int(scale_bits),
-            },
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
-        fh.write("\n")
+    artifacts.write_meta(
+        path,
+        {
+            "format_version": PQ_INDEX_FORMAT_VERSION,
+            "kind": "exact",
+            "encoding": encoding,
+            "n_lists": len(centroids),
+            "m": int(mk["_m"]) if mk and mk["_m"] is not None else 0,
+            "k": int(mk["_k"]) if mk and mk["_k"] is not None else 0,
+            "scale_bits": int(scale_bits),
+        },
+    )
 
 
 def load_pq_index(spark, path: str):
@@ -1227,31 +1117,10 @@ def load_pq_index(spark, path: str):
     centroids, meta) ready for :func:`pq_search_ivf_adc`.  Raises
     ValueError on a missing/garbled meta.json or an unknown
     format_version (refusing beats silently mis-searching)."""
-    import json as _json
-    import os as _os
-
-    try:
-        with open(_os.path.join(path, "meta.json")) as fh:
-            meta = _json.load(fh)
-    except (OSError, ValueError) as exc:
-        raise ValueError(
-            f"not a PQ index artifact (no readable meta.json): {path}"
-        ) from exc
-    ver = meta.get("format_version")
-    if ver != PQ_INDEX_FORMAT_VERSION:
-        raise ValueError(
-            f"PQ index artifact {path} has format_version {ver!r}; this "
-            f"code reads version {PQ_INDEX_FORMAT_VERSION}"
-        )
-    with open(_os.path.join(path, "centroids.json")) as fh:
-        raw = _json.load(fh)
-    centroids = (
-        [(int(l), [int(x) for x in c]) for l, c in raw]
-        if meta.get("kind") == "exact"
-        else [[float(x) for x in c] for c in raw]
-    )
-    encoded = spark.read.parquet(_os.path.join(path, "codes.parquet"))
-    codebooks = spark.read.parquet(_os.path.join(path, "codebooks.parquet"))
+    meta = artifacts.read_meta(path, "PQ index", PQ_INDEX_FORMAT_VERSION)
+    centroids = artifacts.read_centroids(path, "exact")
+    encoded = spark.read.parquet(os.path.join(path, "codes.parquet"))
+    codebooks = spark.read.parquet(os.path.join(path, "codebooks.parquet"))
     return encoded, codebooks, centroids, meta
 
 
@@ -1273,7 +1142,7 @@ def pq_search_index(
     artifact too, so a caller cannot mis-slice or probe/build residual
     LUTs at a different quantizer scale than the index was built with —
     an artifact whose meta omits scale_bits is refused rather than
-    silently searched at the default (r11 ADVICE)."""
+    silently searched at the default."""
     encoded, codebooks, centroids, meta = load_pq_index(spark, path)
     if "scale_bits" not in meta:
         raise ValueError(
@@ -1656,11 +1525,19 @@ def semantic_dedup_build(
     centroids = kmeans_lloyd_centroids(
         v, k=int(k), n_assign=n_assign, emb_col="_v", id_col=id_col
     )
-    # the audit distance comes straight off the frozen-centroid argmin
-    # (ivf_assign with_dist) — bit-identical to the old k-row broadcast
-    # join's re-derivation (same kernel, same literal doubles), one
-    # BroadcastHashJoin fewer in the build
-    pts = ivf_assign(
+    pts = _frozen_points(v, centroids, id_col)
+    return _semantic_prune(pts, threshold, id_col), centroids
+
+
+def _frozen_points(
+    v: DataFrame, centroids: list[list[float]], id_col: str
+) -> DataFrame:
+    """``v`` (id, _v) assigned to FROZEN float centroids -> pts = (id,
+    cluster_id, dist, _v), ``localCheckpoint``-ed for its several
+    consumers.  The distance is read off the argmin struct
+    (:func:`ivf_assign` ``with_dist``) — bit-identical to re-deriving it
+    through a k-row centroid join, one BroadcastHashJoin fewer."""
+    return ivf_assign(
         v, centroids, id_col=id_col, vec_col="_v", with_dist=True
     ).select(
         F.col(id_col),
@@ -1668,7 +1545,6 @@ def semantic_dedup_build(
         F.round(F.col("_dist"), 6).alias("dist"),
         F.col("_cv").alias("_v"),
     ).localCheckpoint(eager=True)
-    return _semantic_prune(pts, threshold, id_col), centroids
 
 
 SEMANTIC_STATE_FORMAT_VERSION = 1
@@ -1688,41 +1564,30 @@ def save_semantic_state(
     format-version meta guard.  Same artifact discipline as
     save_tokenizer / save_ivf_index.
 
-    ``quantizer`` (round 12) records WHICH build produced the frozen
-    centroids ("exact" Lloyd chain vs sampled-fit MLlib "ivf") — the
-    daily loop is identical either way (frozen geometry, no refit),
-    but an audit reading the artifact should know whether its
-    centroids are oracle-replayable."""
-    import json as _json
-    import os as _os
-
+    ``quantizer`` records WHICH build produced the frozen centroids
+    ("exact" Lloyd chain vs sampled-fit MLlib "ivf") — the daily loop is
+    identical either way (frozen geometry, no refit), but an audit
+    reading the artifact should know whether its centroids are
+    oracle-replayable."""
     if quantizer not in ("exact", "ivf"):
         raise ValueError(
             f"quantizer must be 'exact' or 'ivf', got {quantizer!r}"
         )
-
-    # one file per cluster, not one per (task, cluster) — see save_pq_index
-    _cluster_for_write(kept, "cluster_id").write.mode(
+    artifacts.cluster_for_write(kept, "cluster_id").write.mode(
         "overwrite"
-    ).partitionBy("cluster_id").parquet(_os.path.join(path, "kept.parquet"))
-    with open(_os.path.join(path, "centroids.json"), "w") as fh:
-        _json.dump([[float(x) for x in c] for c in centroids], fh)
-        fh.write("\n")
-    with open(_os.path.join(path, "meta.json"), "w") as fh:
-        _json.dump(
-            {
-                "format_version": SEMANTIC_STATE_FORMAT_VERSION,
-                "n_clusters": len(centroids),
-                "quantizer": quantizer,
-                # bumped by every append_semantic_state fold — daily jobs
-                # can assert they consumed the state they expected
-                "state_version": 1,
-            },
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
-        fh.write("\n")
+    ).partitionBy("cluster_id").parquet(os.path.join(path, "kept.parquet"))
+    artifacts.write_centroids(path, [[float(x) for x in c] for c in centroids])
+    artifacts.write_meta(
+        path,
+        {
+            "format_version": SEMANTIC_STATE_FORMAT_VERSION,
+            "n_clusters": len(centroids),
+            "quantizer": quantizer,
+            # bumped by every append_semantic_state fold — daily jobs
+            # can assert they consumed the state they expected
+            "state_version": 1,
+        },
+    )
 
 
 def append_semantic_state(
@@ -1732,7 +1597,7 @@ def append_semantic_state(
     id_col: str = "vec_id",
     batch_tag: "str | None" = None,
 ) -> int:
-    """The WRITE half of the daily SemDeDup loop (round 11): fold a
+    """The WRITE half of the daily SemDeDup loop: fold a
     judged batch's KEEPERS — ``audit`` rows with ``keep = 1`` from
     :func:`semantic_dedup_incremental`, re-joined to the batch for
     their embeddings — into the versioned kept-set artifact, so
@@ -1745,7 +1610,7 @@ def append_semantic_state(
     append), and ``meta.json``'s ``state_version`` is bumped and
     returned so jobs can assert the fold landed.
 
-    Crash seam (r11 ADVICE): the parquet append and the meta bump are
+    Crash seam: the parquet append and the meta bump are
     two non-atomic steps — a failure BETWEEN them leaves keepers folded
     with the version unbumped.  The meta write itself is atomic
     (temp-file + ``os.replace``, never a torn meta.json), and a
@@ -1777,15 +1642,11 @@ def _fold_keepers(
 ) -> int:
     """The write half of :func:`append_semantic_state`, given the
     artifact's column order — so a caller that already loaded the state
-    (``semantic_dedup_daily``) folds without a second artifact
-    load/validate per tick (round 13: one parquet-footer read + meta
-    parse fewer per daily tick; the public append still validates)."""
-    import json as _json
-    import os as _os
-
-    meta_path = _os.path.join(path, "meta.json")
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
+    (``semantic_dedup_daily``) folds without reading the kept-set's
+    parquet footers a second time per tick."""
+    meta = artifacts.read_meta(
+        path, "semantic-dedup state", SEMANTIC_STATE_FORMAT_VERSION
+    )
     tags = list(meta.get("applied_tags", []))
     if batch_tag is not None and batch_tag in tags:
         return int(meta.get("state_version", 1))  # already folded — skip
@@ -1794,19 +1655,15 @@ def _fold_keepers(
         .select(id_col, "cluster_id", "dist")
         .join(batch, id_col)
     )
-    _cluster_for_write(
+    artifacts.cluster_for_write(
         keepers.select(*kept_columns), "cluster_id"
     ).write.mode("append").partitionBy("cluster_id").parquet(
-        _os.path.join(path, "kept.parquet")
+        os.path.join(path, "kept.parquet")
     )
     meta["state_version"] = int(meta.get("state_version", 1)) + 1
     if batch_tag is not None:
         meta["applied_tags"] = tags + [str(batch_tag)]
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump(meta, fh, indent=1, sort_keys=True)
-        fh.write("\n")
-    _os.replace(tmp, meta_path)
+    artifacts.write_meta(path, meta)
     return meta["state_version"]
 
 
@@ -1848,26 +1705,11 @@ def load_semantic_state(spark, path: str):
     """Load a :func:`save_semantic_state` artifact -> (kept, centroids)
     for :func:`semantic_dedup_incremental`.  Raises ValueError on a
     missing/garbled meta.json or an unknown format_version."""
-    import json as _json
-    import os as _os
-
-    try:
-        with open(_os.path.join(path, "meta.json")) as fh:
-            meta = _json.load(fh)
-    except (OSError, ValueError) as exc:
-        raise ValueError(
-            f"not a semantic-dedup state artifact (no readable meta.json): "
-            f"{path}"
-        ) from exc
-    ver = meta.get("format_version")
-    if ver != SEMANTIC_STATE_FORMAT_VERSION:
-        raise ValueError(
-            f"semantic state artifact {path} has format_version {ver!r}; "
-            f"this code reads version {SEMANTIC_STATE_FORMAT_VERSION}"
-        )
-    with open(_os.path.join(path, "centroids.json")) as fh:
-        centroids = [[float(x) for x in c] for c in _json.load(fh)]
-    kept = spark.read.parquet(_os.path.join(path, "kept.parquet"))
+    artifacts.read_meta(
+        path, "semantic-dedup state", SEMANTIC_STATE_FORMAT_VERSION
+    )
+    centroids = artifacts.read_centroids(path, "float")
+    kept = spark.read.parquet(os.path.join(path, "kept.parquet"))
     return kept, centroids
 
 
@@ -1940,20 +1782,10 @@ def semantic_dedup_incremental(
     # join sides and the audit output, so it is ``localCheckpoint``-ed
     # (lineage truncation, as in semantic_dedup); the normalized batch
     # `v` has only the argmin as consumer and stays lazy.
-    # The audit distance reads off the argmin struct itself (ivf_assign
-    # with_dist) instead of a k-row broadcast join re-deriving the same
-    # expression — bit-identical, one BroadcastHashJoin fewer per judge.
     v = batch.select(
         F.col(id_col), normalize(as_double_array(F.col(emb_col))).alias("_v")
     )
-    bpts = ivf_assign(
-        v, centroids, id_col=id_col, vec_col="_v", with_dist=True
-    ).select(
-        F.col(id_col),
-        F.col("_list").alias("cluster_id"),
-        F.round(F.col("_dist"), 6).alias("dist"),
-        F.col("_cv").alias("_v"),
-    ).localCheckpoint(eager=True)
+    bpts = _frozen_points(v, centroids, id_col)
     if broadcast_batch is None:
         # Bounded decision, not a guess: one count over the checkpointed
         # batch. At 100 TB the corpus never enters this.
@@ -2343,24 +2175,6 @@ def _cs_argmin(qv: Column, cs: Column) -> Column:
     return F.array_min(_cs_struct_dists(qv, cs)).getField("l")
 
 
-def _cs_df(spark, centroids: list[tuple[int, list[int]]]):
-    """The driver-small centroid set as a ONE-ROW relation
-    (cs: array<struct<l,c>>) for broadcast crossJoin — centroids travel
-    as data, keeping every distance expression generic."""
-    data = [
-        ([(int(l), [int(x) for x in c]) for l, c in centroids],)
-    ]
-    return spark.createDataFrame(
-        data, "cs array<struct<l:int,c:array<bigint>>>"
-    )
-
-
-def _trunc_div(s: int, n: int) -> int:
-    """Truncate-toward-zero integer division on exact Python ints — the
-    semantics both Spark's div and the oracle's sign-factored // share."""
-    return -((-s) // n) if s < 0 else s // n
-
-
 def ivf_exact_cs(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -2432,11 +2246,14 @@ def ivf_exact_cs(
 
 
 def _cs_rel(df_or_centroids, spark) -> DataFrame:
-    """Accept either a collected centroid list or the lazy one-row cs
-    relation from :func:`ivf_exact_cs`."""
+    """The exact centroid set as a ONE-ROW relation (cs: array<struct<l,c>>)
+    for broadcast crossJoin — centroids travel as data, keeping every
+    distance expression generic.  Accepts the lazy relation from
+    :func:`ivf_exact_cs` as is, or a collected [(list_id, int_vector)]."""
     if isinstance(df_or_centroids, DataFrame):
         return df_or_centroids
-    return _cs_df(spark, df_or_centroids)
+    data = [([(int(l), [int(x) for x in c]) for l, c in df_or_centroids],)]
+    return spark.createDataFrame(data, "cs array<struct<l:int,c:array<bigint>>>")
 
 
 def ivf_build_index_exact(
@@ -2517,30 +2334,18 @@ def save_ivf_index(assigned: DataFrame, centroids, path: str) -> None:
     Accepts BOTH quantizer forms: the exact-integer centroids of
     :func:`ivf_build_index_exact` (``[(list_id, int-vector)]``) and the
     float centroids of :func:`ivf_build_index` (``[[float]]``)."""
-    import json as _json
-    import os as _os
-
-    exact = bool(centroids) and isinstance(centroids[0], tuple)
-    # one file per list, not one per (task, list) — see save_pq_index
-    _cluster_for_write(assigned, "_list").write.mode(
+    artifacts.cluster_for_write(assigned, "_list").write.mode(
         "overwrite"
-    ).partitionBy("_list").parquet(_os.path.join(path, "assigned.parquet"))
-    payload = (
-        [[int(l), [int(x) for x in c]] for l, c in centroids]
-        if exact
-        else [[float(x) for x in c] for c in centroids]
+    ).partitionBy("_list").parquet(os.path.join(path, "assigned.parquet"))
+    kind = artifacts.write_centroids(path, centroids)
+    artifacts.write_meta(
+        path,
+        {
+            "format_version": IVF_INDEX_FORMAT_VERSION,
+            "kind": kind,
+            "n_lists": len(centroids),
+        },
     )
-    with open(_os.path.join(path, "centroids.json"), "w") as fh:
-        _json.dump(payload, fh)
-        fh.write("\n")
-    meta = {
-        "format_version": IVF_INDEX_FORMAT_VERSION,
-        "kind": "exact" if exact else "float",
-        "n_lists": len(centroids),
-    }
-    with open(_os.path.join(path, "meta.json"), "w") as fh:
-        _json.dump(meta, fh, indent=1, sort_keys=True)
-        fh.write("\n")
 
 
 def load_ivf_index(spark, path: str):
@@ -2550,30 +2355,9 @@ def load_ivf_index(spark, path: str):
     daily ingest via the matching assign function.  Raises ValueError on
     a missing/garbled meta.json or an unknown format_version (refusing
     beats silently mis-searching a stale layout)."""
-    import json as _json
-    import os as _os
-
-    try:
-        with open(_os.path.join(path, "meta.json")) as fh:
-            meta = _json.load(fh)
-    except (OSError, ValueError) as exc:
-        raise ValueError(
-            f"not an IVF index artifact (no readable meta.json): {path}"
-        ) from exc
-    ver = meta.get("format_version")
-    if ver != IVF_INDEX_FORMAT_VERSION:
-        raise ValueError(
-            f"IVF index artifact {path} has format_version {ver!r}; this "
-            f"code reads version {IVF_INDEX_FORMAT_VERSION}"
-        )
-    with open(_os.path.join(path, "centroids.json")) as fh:
-        raw = _json.load(fh)
-    centroids = (
-        [(int(l), [int(x) for x in c]) for l, c in raw]
-        if meta.get("kind") == "exact"
-        else [[float(x) for x in c] for c in raw]
-    )
-    assigned = spark.read.parquet(_os.path.join(path, "assigned.parquet"))
+    meta = artifacts.read_meta(path, "IVF index", IVF_INDEX_FORMAT_VERSION)
+    centroids = artifacts.read_centroids(path, meta.get("kind"))
+    assigned = spark.read.parquet(os.path.join(path, "assigned.parquet"))
     return assigned, centroids
 
 
@@ -2592,27 +2376,9 @@ def ivf_search_index_exact(
     centroid distance (ties by list id), exact double cosine runs only
     inside probed lists, per-query window top-k with (cosine desc, id asc)
     total order.  Same broadcast-probe plan shape as `ivf_search_index`."""
-    q = queries.select(
-        F.col(query_id_col),
+    probed = _exact_probes(
+        queries, centroids, n_probe, vec_col, query_id_col, scale_bits,
         as_double_array(F.col(vec_col)).alias("_qv_d"),
-        _quantize_ints(as_double_array(F.col(vec_col)), scale_bits).alias(
-            "_qv_i"
-        ),
-    ).crossJoin(F.broadcast(_cs_rel(centroids, queries.sparkSession)))
-    probed = q.withColumn(
-        "_list",
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.array_sort(
-                        _cs_struct_dists(F.col("_qv_i"), F.col("cs"))
-                    ),
-                    1,
-                    n_probe,
-                ),
-                lambda s: s.getField("l"),
-            )
-        ),
     ).select(query_id_col, "_qv_d", "_list")
     scored = assigned.join(F.broadcast(probed), "_list").select(
         query_id_col,
@@ -2621,11 +2387,6 @@ def ivf_search_index_exact(
             cosine_similarity(F.col("_qv_d"), F.col("_cv")), 6
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine")
+    return _topk(
+        scored, query_id_col, id_col, "cosine", k, descending=True
     )

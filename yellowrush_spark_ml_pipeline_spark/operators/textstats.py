@@ -8,6 +8,8 @@ narrow map stage fused into the scan (no shuffle at all).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -18,6 +20,7 @@ from ..functions.text import (
     tokens,
     whitespace_token_count,
 )
+from ..sources import artifacts
 
 # Tiny per-language stopword marker sets (public common words). A real
 # deployment swaps in fastText/CLD3 via a pandas UDF; the heuristic keeps
@@ -1929,23 +1932,20 @@ def save_tokenizer(
     mis-encoding.  Both relations are parameter-sized (R merge rows,
     |vocab| symbol rows), so overwrite-mode parquet writes are trivial
     at any corpus scale."""
-    import json as _json
-    import os as _os
-
     merges.select(
         "merge_round", "left_sym", "right_sym", "pair_count"
-    ).write.mode("overwrite").parquet(_os.path.join(path, "merges.parquet"))
+    ).write.mode("overwrite").parquet(os.path.join(path, "merges.parquet"))
     vocab.select("token_id", "sym").write.mode("overwrite").parquet(
-        _os.path.join(path, "vocab.parquet")
+        os.path.join(path, "vocab.parquet")
     )
-    meta = {
-        "format_version": TOKENIZER_FORMAT_VERSION,
-        "rounds": int(rounds),
-        "max_word_len": int(max_word_len),
-    }
-    with open(_os.path.join(path, "meta.json"), "w") as fh:
-        _json.dump(meta, fh, indent=1, sort_keys=True)
-        fh.write("\n")
+    artifacts.write_meta(
+        path,
+        {
+            "format_version": TOKENIZER_FORMAT_VERSION,
+            "rounds": int(rounds),
+            "max_word_len": int(max_word_len),
+        },
+    )
 
 
 def load_tokenizer(spark, path: str) -> dict:
@@ -1960,27 +1960,10 @@ def load_tokenizer(spark, path: str) -> dict:
     ``format_version`` this code does not understand (the stale-version
     guard: refusing is strictly better than silently mis-encoding a
     training corpus)."""
-    import json as _json
-    import os as _os
-
-    meta_path = _os.path.join(path, "meta.json")
-    try:
-        with open(meta_path) as fh:
-            meta = _json.load(fh)
-    except (OSError, ValueError) as exc:
-        raise ValueError(
-            f"not a tokenizer artifact (no readable meta.json): {path}"
-        ) from exc
-    ver = meta.get("format_version")
-    if ver != TOKENIZER_FORMAT_VERSION:
-        raise ValueError(
-            f"tokenizer artifact {path} has format_version {ver!r}; this "
-            f"code reads version {TOKENIZER_FORMAT_VERSION} — re-train or "
-            "upgrade"
-        )
+    meta = artifacts.read_meta(path, "tokenizer", TOKENIZER_FORMAT_VERSION)
     return {
-        "merges": spark.read.parquet(_os.path.join(path, "merges.parquet")),
-        "vocab": spark.read.parquet(_os.path.join(path, "vocab.parquet")),
+        "merges": spark.read.parquet(os.path.join(path, "merges.parquet")),
+        "vocab": spark.read.parquet(os.path.join(path, "vocab.parquet")),
         "rounds": int(meta["rounds"]),
         "max_word_len": int(meta["max_word_len"]),
     }
