@@ -20,6 +20,10 @@ Determinism strategy (see SURVEY.md §7 "what's hard"):
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -4849,283 +4853,46 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _driver_green(rec: dict) -> bool:
+    """A grading-driver record verified the entry: rows, schema and value
+    hash matched with no error, or, for a rows-only entry (``err ==
+    "no_oracle"``), Spark produced a row count."""
+    if rec.get("err") == "no_oracle":
+        return rec.get("spark_rows") is not None
+    return bool(rec.get("rows_match") and rec.get("schema_match")
+                and rec.get("hash_match") in (True, None) and not rec.get("err"))
+
+
+@functools.cache
+def _window_order() -> tuple[str, ...]:
+    """Registry names in driver-window order.  The grading driver checks a
+    50-entry prefix of ``queries()`` each round, so names sort by (latest
+    round N whose ``CORRECTNESS_rN.json`` records the entry green, rows-only
+    after oracle-backed, name): never-green entries sort as round 0 and
+    lead, oracle-backed first, then the stalest.  A missing or unreadable
+    record file counts as no rounds."""
+    last: dict[str, int] = {}
+    prefix = os.path.join(os.path.dirname(os.path.abspath(__file__)), "CORRECTNESS_r")
+    for path in glob.glob(prefix + "*.json"):
+        try:
+            rnd = int(path[len(prefix) : -len(".json")])
+            with open(path) as fh:
+                greens = [n for n, rec in json.load(fh).items() if _driver_green(rec)]
+        except (OSError, ValueError, AttributeError):
+            continue
+        for name in greens:
+            last[name] = max(last.get(name, 0), rnd)
+    oracles = oracle_sql()
+    names = [n[2:] for n in globals() if n.startswith("q_")]
+    return tuple(sorted(names, key=lambda n: (last.get(n, 0), n not in oracles, n)))
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-    # Ordering contract (tests/test_policy.py): the grading driver verifies
-    # a 50-entry PREFIX of this dict each round, so the prefix is a rotation
-    # duty roster: (1) any entry with NO CLEAN driver row in any committed
-    # CORRECTNESS_r*.json MUST sit in the first 50, oracle-backed before
-    # rows-only (an err-bearing presentation counts as never-checked —
-    # the r10 verdict's video_pipeline crack); (2) entries whose
-    # implementation or oracle CHANGED this round re-enter the window;
-    # (3) remaining slots rotate through the stalest last-green entries.
-    # Round 12: export_upsampled leads (new — the epoch-keyed final
-    # mile), then the round-12-changed surface re-verifies (winnow
-    # selection rewrite; pack_sequences/epoch_shuffle composite-key
-    # extension -> the pack/export family; PQ-index artifact hardening
-    # -> the persisted search twins; append_semantic_state atomicity ->
-    # the semantic lifecycle pair), then the ENTIRE r6-stale oracle
-    # tail drains (percentile_sketch ... zone_prune — after this window
-    # no entry's last clean presentation is older than r7), and the
-    # remaining slots take the alphabetically-first r7-stale oracle
-    # entries (anti_join ... minhash_dedup_autocap; the late additions
-    # dsir_select and semantic_dedup_daily_ivf displaced moving_average
-    # and nelson_aalen, so the r7 tail continues in r13: moving_average,
-    # nelson_aalen, null_safe_join, pii_redaction, ...).  Every
-    # oracle-backed query is still re-proven on CURRENT testdata every
-    # round by the local mirror (tools/driver_mirror.py ->
-    # MIRROR_LOCAL.json) regardless of window position.
-    # ---- (1) NEW round 12, never driver-checked (oracle-backed first) ----
-        "export_upsampled": q_export_upsampled,
-        "dsir_select": q_dsir_select,
-    # ---- (1b) NEW round 12, rows-only (MLlib build — pytest-pinned) ----
-        "semantic_dedup_daily_ivf": q_semantic_dedup_daily_ivf,
-    # ---- (2) round-12 implementation changes - re-verify ----
-        "winnow_pairs": q_winnow_pairs,
-        "pack_sequences": q_pack_sequences,
-        "pack_efficiency": q_pack_efficiency,
-        "export_shuffled": q_export_shuffled,
-        "export_tokenized": q_export_tokenized,
-        "export_mixture": q_export_mixture,
-        "pq_search": q_pq_search,
-        "pq_search_ivf_persisted": q_pq_search_ivf_persisted,
-        "pq_search_ivf_residual_persisted": q_pq_search_ivf_residual_persisted,
-        "semantic_dedup_daily": q_semantic_dedup_daily,
-        "semantic_dedup_incremental": q_semantic_dedup_incremental,
-    # ---- (3) rotation fill: the full r6-stale oracle tail ----
-        "percentile_sketch": q_percentile_sketch,
-        "profile_table": q_profile_table,
-        "promo_revenue_share": q_promo_revenue_share,
-        "quantize_recall": q_quantize_recall,
-        "range_windows": q_range_windows,
-        "readability": q_readability,
-        "salted_agg": q_salted_agg,
-        "seasonal_decompose": q_seasonal_decompose,
-        "skew_join": q_skew_join,
-        "small_order_revenue": q_small_order_revenue,
-        "snapshot_diff": q_snapshot_diff,
-        "target_encoding": q_target_encoding,
-        "time_weighted_avg": q_time_weighted_avg,
-        "ttr_stats": q_ttr_stats,
-        "unigram_nll": q_unigram_nll,
-        "waiting_suppliers": q_waiting_suppliers,
-        "weighted_median": q_weighted_median,
-        "window_ranks": q_window_ranks,
-        "zone_maps": q_zone_maps,
-        "zone_prune": q_zone_prune,
-    # ---- (3) rotation fill: r7-stale oracle entries (alpha) ----
-        "anti_join": q_anti_join,
-        "asof_join": q_asof_join,
-        "cohens_kappa": q_cohens_kappa,
-        "corpus_stats": q_corpus_stats,
-        "dedup_exact": q_dedup_exact,
-        "dim_join_null_fill": q_dim_join_null_fill,
-        "embedding_norms": q_embedding_norms,
-        "hist_avg_global_fill": q_hist_avg_global_fill,
-        "histogram": q_histogram,
-        "hypertable_rollup": q_hypertable_rollup,
-        "json_extract": q_json_extract,
-        "json_struct_agg": q_json_struct_agg,
-        "label_flags": q_label_flags,
-        "lang_scores": q_lang_scores,
-        "language_id": q_language_id,
-        "minhash_dedup_autocap": q_minhash_dedup_autocap,
-    # ---- beyond the 50-entry window (still mirror-proven every round) ----
-        "moving_average": q_moving_average,
-        "nelson_aalen": q_nelson_aalen,
-        "pq_search_ivf": q_pq_search_ivf,
-        "pq_search_rerank": q_pq_search_rerank,
-        "pq_search_ivf_residual": q_pq_search_ivf_residual,
-        "mixture_upsample": q_mixture_upsample,
-        "curate_scored_persisted": q_curate_scored_persisted,
-        "video_pipeline": q_video_pipeline,
-        "temperature_mixture": q_temperature_mixture,
-        "curate_corpus": q_curate_corpus,
-        "export_manifest": q_export_manifest,
-        "bpe_persisted_encode": q_bpe_persisted_encode,
-        "similarity_ivf_persisted": q_similarity_ivf_persisted,
-        "sketch_stats": q_sketch_stats,
-        "compression_ratio": q_compression_ratio,
-        "language_id_model": q_language_id_model,
-        "media_probe": q_media_probe,
-        "minhash_dedup_fast": q_minhash_dedup_fast,
-        "multimodal_features": q_multimodal_features,
-        "shipmode_priority": q_shipmode_priority,
-        "theil_sen": q_theil_sen,
-        "top_supplier": q_top_supplier,
-        "autocorr": q_autocorr,
-        "bigram_nll": q_bigram_nll,
-        "bitmap_activity": q_bitmap_activity,
-        "bollinger": q_bollinger,
-        "bpe_merges": q_bpe_merges,
-        "calibration_bins": q_calibration_bins,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "dedup_consensus": q_dedup_consensus,
-        "dedup_eval": q_dedup_eval,
-        "fd_violations": q_fd_violations,
-        "filter_funnel": q_filter_funnel,
-        "golden_record": q_golden_record,
-        "group_split": q_group_split,
-        "hll_distinct": q_hll_distinct,
-        "idle_customers": q_idle_customers,
-        "important_stock": q_important_stock,
-        "interpolate_linear": q_interpolate_linear,
-        "k_anonymity": q_k_anonymity,
-        "large_volume_customers": q_large_volume_customers,
-        "line_dedup": q_line_dedup,
-        "lttb_downsample": q_lttb_downsample,
-        "min_cost_supplier": q_min_cost_supplier,
-        "ndcg_eval": q_ndcg_eval,
-        "ols_fit": q_ols_fit,
-        "semantic_dedup_ivf": q_semantic_dedup_ivf,
-        "curate_scored": q_curate_scored,
-        "semantic_dedup": q_semantic_dedup,
-        "bpe_encode": q_bpe_encode,
-        "bpe_roundtrip": q_bpe_roundtrip,
-        "returned_customers": q_returned_customers,
-        "rolling_zscore": q_rolling_zscore,
-        "rollup_merge": q_rollup_merge,
-        "rrf_fusion": q_rrf_fusion,
-        "session_stats": q_session_stats,
-        "shipping_priority": q_shipping_priority,
-        "simhash": q_simhash,
-        "similarity_lsh": q_similarity_lsh,
-        "source_kl_drift": q_source_kl_drift,
-        "source_overlap": q_source_overlap,
-        "table_checksum": q_table_checksum,
-        "top_paths": q_top_paths,
-        "trade_volume": q_trade_volume,
-        "triangles": q_triangles,
-        "unpivot_metrics": q_unpivot_metrics,
-        "weighted_sample": q_weighted_sample,
-        "association_rules": q_association_rules,
-        "benford": q_benford,
-        "burst_runs": q_burst_runs,
-        "chi_square": q_chi_square,
-        "column_entropy": q_column_entropy,
-        "cusum_changepoint": q_cusum_changepoint,
-        "disjunctive_revenue": q_disjunctive_revenue,
-        "excess_suppliers": q_excess_suppliers,
-        "forecast_backtest": q_forecast_backtest,
-        "forecast_revenue": q_forecast_revenue,
-        "gini_revenue": q_gini_revenue,
-        "kaplan_meier": q_kaplan_meier,
-        "mann_whitney": q_mann_whitney,
-        "market_share": q_market_share,
-        "ohlc_bars": q_ohlc_bars,
-        "order_priority_check": q_order_priority_check,
-        "part_supplier_counts": q_part_supplier_counts,
-        "product_profit": q_product_profit,
-        "psi_drift": q_psi_drift,
-        "rfm_segments": q_rfm_segments,
-        "dq_report": q_dq_report,
-        "quantile_state_merge": q_quantile_state_merge,
-        "k_core": q_k_core,
-        "ml_classifier_metrics": q_ml_classifier_metrics,
-        "text_classifier_metrics": q_text_classifier_metrics,
-        "skew_profile": q_skew_profile,
-        "stratified_sample": q_stratified_sample,
-        "strip_html": q_strip_html,
-        "time_period_counts": q_time_period_counts,
-        "token_rarity": q_token_rarity,
-        "url_domains": q_url_domains,
-        "user_durations": q_user_durations,
-        "vocab_topk": q_vocab_topk,
-        "winsorize": q_winsorize,
-        "zorder_key": q_zorder_key,
-        "ab_welch": q_ab_welch,
-        "bm25_topk": q_bm25_topk,
-        "co_visitation": q_co_visitation,
-        "conversion_lag": q_conversion_lag,
-        "customer_distribution": q_customer_distribution,
-        "dedup_groups": q_dedup_groups,
-        "dup_ngram_spans": q_dup_ngram_spans,
-        "event_transitions": q_event_transitions,
-        "ewma": q_ewma,
-        "fingerprint_dedup": q_fingerprint_dedup,
-        "first_touch_attribution": q_first_touch_attribution,
-        "funnel_window": q_funnel_window,
-        "fuzzy_join": q_fuzzy_join,
-        "grouping_sets_revenue": q_grouping_sets_revenue,
-        "incremental_dedup": q_incremental_dedup,
-        "kmeans_lloyd": q_kmeans_lloyd,
-        "linear_attribution": q_linear_attribution,
-        "local_supplier_volume": q_local_supplier_volume,
-        "mad_outliers": q_mad_outliers,
-        "max_concurrency": q_max_concurrency,
-        "minhash_dedup": q_minhash_dedup,
-        "ngram_novelty": q_ngram_novelty,
-        "order_skyline": q_order_skyline,
-        "pagerank_personalized": q_pagerank_personalized,
-        "quantile_normalize": q_quantile_normalize,
-        "similarity_ivf": q_similarity_ivf,
-        "similarity_incremental": q_similarity_incremental,
-        "label_propagation": q_label_propagation,
-        "embedding_dedup": q_embedding_dedup,
-        "embedding_dedup_groups": q_embedding_dedup_groups,
-        "containment": q_containment,
-        "edit_distance": q_edit_distance,
-        "pagerank": q_pagerank,
-        "bigram_topk": q_bigram_topk,
-        "bloom_join": q_bloom_join,
-        "boilerplate_spans": q_boilerplate_spans,
-        "chunk_documents": q_chunk_documents,
-        "cohort_retention": q_cohort_retention,
-        "corr_moments": q_corr_moments,
-        "date_parts": q_date_parts,
-        "date_range_stats": q_date_range_stats,
-        "decontaminate": q_decontaminate,
-        "distinctive_terms": q_distinctive_terms,
-        "domain_cap": q_domain_cap,
-        "embedding_centroids": q_embedding_centroids,
-        "embedding_dim_stats": q_embedding_dim_stats,
-        "embedding_quantize": q_embedding_quantize,
-        "full_outer_reconcile": q_full_outer_reconcile,
-        "funnel": q_funnel,
-        "gap_fill": q_gap_fill,
-        "group_enrichment": q_group_enrichment,
-        "grouped_quantile": q_grouped_quantile,
-        "hilbert_key": q_hilbert_key,
-        "hist_ratio_agg": q_hist_ratio_agg,
-        "invalid_counts": q_invalid_counts,
-        "jaccard_pairs": q_jaccard_pairs,
-        "merge_upsert": q_merge_upsert,
-        "mixture_allocation": q_mixture_allocation,
-        "normalize_urls": q_normalize_urls,
-        "null_counts": q_null_counts,
-        "preprocess_pipeline": q_preprocess_pipeline,
-        "quantile_cutoff": q_quantile_cutoff,
-        "range_filter": q_range_filter,
-        "regional_revenue": q_regional_revenue,
-        "regression_metrics": q_regression_metrics,
-        "repetition_score": q_repetition_score,
-        "sample_k_per_group": q_sample_k_per_group,
-        "scd2": q_scd2,
-        "similarity_bruteforce": q_similarity_bruteforce,
-        "quality_buckets": q_quality_buckets,
-        "tfidf_pairs": q_tfidf_pairs,
-        "woe_iv": q_woe_iv,
-        "top_per_group": q_top_per_group,
-        "null_safe_join": q_null_safe_join,
-        "range_join": q_range_join,
-        "semi_join": q_semi_join,
-        "pivot_revenue": q_pivot_revenue,
-        "rollup_revenue": q_rollup_revenue,
-        "set_ops": q_set_ops,
-        "sliding_windows": q_sliding_windows,
-        "session_windows": q_session_windows,
-        "pii_redaction": q_pii_redaction,
-        "star_join": q_star_join,
-        "top_orders": q_top_orders,
-        "validate_lineitem": q_validate_lineitem,
-        "summary_stats": q_summary_stats,
-        "window_enrich": q_window_enrich,
-        "tumbling_windows": q_tumbling_windows,
-        "sessionize": q_sessionize,
-        "token_counts": q_token_counts,
-        "text_quality": q_text_quality,
-        "pricing_summary": q_pricing_summary,
-    }
+    """Every module-level ``q_<name>`` under ``<name>``, in ``_window_order``.
+    Builders are looked up on each call, so a wrapper set on the module
+    (``perfbench/trace.py``) is what the registry returns."""
+    builders = globals()
+    return {name: builders["q_" + name] for name in _window_order()}
 
 
 # --------------------------------------------------------------------------

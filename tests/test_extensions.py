@@ -299,6 +299,24 @@ def test_dedup_groups_long_chain(spark):
     assert {r.doc_id for r in rows} == set(range(n))
 
 
+@pytest.mark.parametrize(
+    "kwargs, hint",
+    [({}, 'algorithm="star"'), ({"algorithm": "star", "max_iterations": 2}, None)],
+    ids=["label", "star"],
+)
+def test_dedup_groups_raises_when_not_converged(spark, kwargs, hint):
+    """A 30-node path outlasts the label loop's 20 default sweeps and the
+    star loop's 2 rounds: both must refuse rather than return one
+    component split across several group ids."""
+    chain = spark.range(29).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    with pytest.raises(ValueError, match="max_iterations") as err:
+        dedup.dedup_groups(chain, **kwargs).collect()
+    if hint:
+        assert hint in str(err.value)
+
+
 def test_dedup_groups_end_to_end_with_minhash(spark, planted_docs):
     """Full curation path: minhash pairs → components → drop list. The 20
     planted near-dups must each group with their source doc."""

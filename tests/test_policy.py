@@ -254,3 +254,101 @@ def test_every_tool_is_referenced():
                 reached.add(t)
                 frontier.add(t)
     assert reached == set(tools), f"unreferenced tools: {sorted(set(tools) - reached)}"
+
+
+_SESSION_NAMES = {"session", "spark", "sc", "sparkContext"}
+
+
+def test_no_memo_keyed_on_object_id():
+    """No cache is keyed on ``id()`` of a session or context: CPython
+    reuses an id once its object is collected, so a later session can hit
+    an entry built for a dead one.  Key on ``applicationId`` instead."""
+    offenders = []
+    for p in _src_files():
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "id"
+                and node.args
+            ):
+                continue
+            arg = node.args[0]
+            name = arg.attr if isinstance(arg, ast.Attribute) else getattr(arg, "id", None)
+            if name in _SESSION_NAMES:
+                offenders.append(f"{p.relative_to(SRC)}:{node.lineno}")
+    assert not offenders, f"memo keyed on a recyclable id(): {offenders}"
+
+
+def test_registry_is_every_q_builder():
+    """queries() registers each module-level ``def q_<name>`` of the entry
+    file under ``<name>``, and nothing else."""
+    import __spark_entry__ as entrymod
+
+    tree = ast.parse((REPO / "__spark_entry__.py").read_text())
+    defined = {
+        n.name[2:]
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name.startswith("q_")
+    }
+    registry = entrymod.queries()
+    assert set(registry) == defined
+    assert all(fn is getattr(entrymod, "q_" + name) for name, fn in registry.items())
+
+
+def _window_key(last_green: dict[str, int], oracles: set[str]):
+    return lambda n: (last_green.get(n, 0), n not in oracles, n)
+
+
+def test_registry_order_follows_staleness_key():
+    """queries() sorts by (latest round whose committed CORRECTNESS_r*.json
+    records the entry green, rows-only after oracle-backed, name); an
+    entry never recorded green counts as round 0."""
+    import json
+
+    import __spark_entry__ as entrymod
+
+    last: dict[str, int] = {}
+    for path in REPO.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, rec in json.loads(path.read_text()).items():
+            if entrymod._driver_green(rec):
+                last[name] = max(last.get(name, 0), rnd)
+    order = list(entrymod.queries())
+    assert order == sorted(order, key=_window_key(last, set(entrymod.oracle_sql())))
+
+
+def test_registry_returns_swapped_builder(monkeypatch):
+    """A builder replaced on the module after import (perfbench's tracer
+    wraps every ``q_*``) is what queries() hands out."""
+    import __spark_entry__ as entrymod
+
+    def wrapped(spark, sf_dir):
+        raise AssertionError("not called")
+
+    monkeypatch.setattr(entrymod, "q_histogram", wrapped)
+    assert entrymod.queries()["histogram"] is wrapped
+
+
+def test_registry_without_readable_driver_records(tmp_path):
+    """An entry file with no readable CORRECTNESS_r*.json beside it still
+    registers every builder; all count as never green, so the order is
+    oracle-backed first, then by name."""
+    import importlib.util
+    import shutil
+
+    import __spark_entry__ as entrymod
+
+    shutil.copy(REPO / "__spark_entry__.py", tmp_path)
+    (tmp_path / "CORRECTNESS_r97.json").write_text('{"histogram": 1}')
+    (tmp_path / "CORRECTNESS_r98.json").write_text("[1, 2]")
+    (tmp_path / "CORRECTNESS_r99.json").write_text("{not json")
+    (tmp_path / "CORRECTNESS_rx.json").write_text("{}")
+    spec = importlib.util.spec_from_file_location(
+        "_entry_copy", tmp_path / "__spark_entry__.py"
+    )
+    copy = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(copy)
+    order = list(copy.queries())
+    assert set(order) == set(entrymod.queries())
+    assert order == sorted(order, key=_window_key({}, set(copy.oracle_sql())))

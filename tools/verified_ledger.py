@@ -33,21 +33,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _green(rec: dict) -> bool:
-    # Rows-only entries: the driver records err="no_oracle" with the
-    # match fields null — a CLEAN run iff Spark produced a row count.
-    # (video_pipeline's r5 row had spark_rows=null + a real traceback;
-    # that must NOT count as green — or even as "checked", see _checked.)
-    if rec.get("err") == "no_oracle":
-        return rec.get("spark_rows") is not None
-    return bool(
-        rec.get("rows_match")
-        and rec.get("schema_match")
-        and (rec.get("hash_match") in (True, None))
-        and not rec.get("err")
-    )
-
-
 def _checked(rec: dict) -> bool:
     """A presentation counts as checked only if it did not ERROR.
 
@@ -62,6 +47,7 @@ def _checked(rec: dict) -> bool:
 
 def main() -> int:
     import __spark_entry__ as entrymod
+    from __spark_entry__ import _driver_green
 
     names = list(entrymod.queries())
     oracles = set(entrymod.oracle_sql())
@@ -103,7 +89,7 @@ def main() -> int:
     for name in names:
         presented = sorted(r for r, data in rounds.items() if name in data)
         checked = [r for r in presented if _checked(rounds[r][name])]
-        greens = [r for r in checked if _green(rounds[r][name])]
+        greens = [r for r in checked if _driver_green(rounds[r][name])]
         first_green = f"r{min(greens)}" if greens else "—"
         last_green = f"r{max(greens)}" if greens else "—"
         if name in oracles and greens and max(greens) < latest_round:
@@ -112,7 +98,7 @@ def main() -> int:
         mcell = (
             "—"
             if mstat is None
-            else ("green" if _green(mstat) else f"FAIL: {mstat.get('err') or 'hash'}")
+            else ("green" if _driver_green(mstat) else f"FAIL: {mstat.get('err') or 'hash'}")
         )
         tier = "oracle" if name in oracles else "rows-only"
         lines.append(
@@ -131,7 +117,8 @@ def main() -> int:
         "",
         f"Totals: {len(names)} queries ({len(oracles & set(names))} oracle-backed); "
         f"{n_stale} oracle-backed queries whose latest driver green predates "
-        f"round {latest_round} (candidates for prefix rotation).",
+        f"round {latest_round} (queries() orders entries stalest-first for the "
+        "driver's 50-entry window).",
         "",
     ]
     out = os.path.join(REPO, "VERIFIED.md")

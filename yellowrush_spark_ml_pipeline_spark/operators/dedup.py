@@ -409,6 +409,9 @@ def dedup_groups(
       diameter — the choice for adversarial chain-shaped graphs
       (see ``test_dedup_groups_long_chain``).
 
+    A loop that reaches ``max_iterations`` without a fixpoint raises
+    ``ValueError`` rather than return unconverged components.
+
     The loop is driver-coordinated but all data movement is
     joins/aggregations — no collect(); convergence checks are 1-row
     aggregates. Every per-sweep frame is ``localCheckpoint``-ed so plan
@@ -463,6 +466,13 @@ def dedup_groups(
         labels = updated.select("node", "label")
         if changed == 0:
             break
+    else:
+        edges.unpersist()
+        raise ValueError(
+            "dedup_groups: label propagation did not converge within "
+            f"max_iterations={max_iterations}; raise max_iterations, or use "
+            'algorithm="star" for long chains'
+        )
     edges.unpersist()
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("group_id"))
 
@@ -518,6 +528,11 @@ def _dedup_groups_star(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise ValueError(
+            "dedup_groups: star did not converge within "
+            f"max_iterations={max_iterations}; raise max_iterations"
+        )
     roots = edges.select(F.col("v").alias("node")).subtract(
         edges.select(F.col("u").alias("node"))
     )

@@ -357,9 +357,9 @@ def k_core_membership(
     round recurrence references the previous edge list THREE
     times (degree count twice via the union, anti-join base once), so
     an unpruned lazy plan grows ~3^rounds and OOMs the DRIVER on plan
-    size alone by round 6 — the identical pathology dedup_groups' CC
-    loop hit (dedup.py:355); lineage truncation, not mere persistence,
-    is the fix."""
+    size alone by round 6 — the same pathology the per-sweep
+    ``localCheckpoint`` in ``dedup.dedup_groups`` guards against; lineage
+    truncation, not mere persistence, is the fix."""
     if k < 1 or rounds < 1:
         raise ValueError("k and rounds must be >= 1")
     u, v = F.col(src_col), F.col(dst_col)

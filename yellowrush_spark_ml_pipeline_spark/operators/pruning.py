@@ -47,33 +47,23 @@ def _positions(key: Column, n_bits: int, n_hashes: int) -> list[Column]:
     return [F.pmod(h1 + F.lit(i) * h2, F.lit(n_bits)) for i in range(n_hashes)]
 
 
-# The 64 mask VALUES are process-constant; the Column handle is NOT — a
-# pyspark Column wraps a py4j JavaObject that goes stale if the JVM gateway
-# restarts and doesn't exist under Spark Connect. So memoize per active
-# session (keyed by session id), rebuilding the Column lazily.
+def _long_array(values) -> Column:
+    # ONE SQL-parsed ``array<bigint>`` literal: a single py4j call, where
+    # ``F.array(*[F.lit(v) ...])`` (and ``F.lit(list)``, which expands to
+    # the same per-element Columns) costs a round trip per element.
+    return F.expr("array(" + ",".join(f"{int(v)}L" for v in values) + ")")
+
+
+# bit i's single-bit mask; bit 63 is the sign-bit pattern (two's complement)
 _MASK_VALUES: tuple[int, ...] = tuple(
     (1 << i) if i < 63 else -(1 << 63) for i in range(64)
 )
-_MASKS_BY_SESSION: dict[int, Column] = {}
 
 
 def _mask(bit: Column) -> Column:
     # single-bit mask via a 64-long literal lookup: shiftleft() only takes
     # a Python-int shift, so a variable shift is a table lookup instead
-    # (bit 63 as the sign-bit pattern — two's-complement identical).
-    # The lookup array is a stateless plan fragment, memoized because
-    # rebuilding it is 64 py4j round-trips per probe (k probes x 2 uses
-    # per predicate made this the dominant driver-side cost).
-    from pyspark.sql import SparkSession
-
-    session = SparkSession.getActiveSession()
-    key = id(session) if session is not None else 0
-    masks = _MASKS_BY_SESSION.get(key)
-    if masks is None:
-        masks = F.array(*[F.lit(v).cast("long") for v in _MASK_VALUES])
-        _MASKS_BY_SESSION.clear()  # drop handles from any dead session
-        _MASKS_BY_SESSION[key] = masks
-    return F.element_at(masks, bit.cast("int") + 1)
+    return F.element_at(_long_array(_MASK_VALUES), bit.cast("int") + 1)
 
 
 def bloom_build(
@@ -108,13 +98,11 @@ def bloom_might_contain(
     """Membership predicate against a materialized bitmap: AND of the k
     probed bits, each an ``element_at`` on the array literal.
 
-    The bitmap travels as ONE ``array<bigint>`` literal built from a
-    single SQL-parsed expression string (one py4j hop, ~10 ms).
-    ``F.array(*[F.lit(w) ...])`` — and ``F.lit(list)``, which expands to
-    the same per-element Columns — costs a py4j round-trip per word:
-    measured 2-7 s of pure driver-side plan construction for a 2^17-bit
+    The bitmap travels as ONE ``array<bigint>`` literal (``_long_array``,
+    one py4j hop, ~10 ms); a per-word Column costs a py4j round trip per
+    word, measured 2-7 s of driver-side plan construction for a 2^17-bit
     filter before any task ran."""
-    arr = F.expr("array(" + ",".join(f"{int(w)}L" for w in words) + ")")
+    arr = _long_array(words)
     pred = F.lit(True)
     for p in _positions(key, n_bits, n_hashes):
         word = F.element_at(arr, (p / 64).cast("int") + 1)
