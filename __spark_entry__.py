@@ -1128,7 +1128,7 @@ def q_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratification); deterministic NTILE via the (n_chars, doc_id) total
     order."""
     docs = _t(spark, sf_dir, "documents")
-    return aggregates.ntile_buckets(docs, "n_chars", "doc_id", n_buckets=10)
+    return aggregates.ntile_buckets(docs, "n_chars", n_buckets=10)
 
 
 def q_quantile_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -586,6 +586,25 @@ def test_language_id_pluggable_scorer(spark):
     assert "lang_scorer" in inspect.signature(curate_corpus).parameters
 
 
+def test_curate_corpus_threads_lang_scorer(spark):
+    """curate_corpus(lang_scorer=...) labels every kept doc with the
+    plugged model's code instead of the heuristic's."""
+    from yellowrush_spark_ml_pipeline_spark.flows import curate_corpus
+
+    def _toy_lang_scorer(texts):
+        return texts.str.contains("bonjour").map({True: "fr", False: "xx"})
+
+    docs = spark.createDataFrame(
+        [
+            (1, "bonjour le monde entier ce matin"),
+            (2, "the quick brown fox jumps over the lazy dog"),
+        ],
+        ["doc_id", "text"],
+    )
+    out = curate_corpus(docs, min_quality=0.0, lang_scorer=_toy_lang_scorer)
+    assert {r.doc_id: r.lang_pred for r in out.collect()} == {1: "fr", 2: "xx"}
+
+
 def test_quantize_embeddings_roundtrip_error_bound(spark, sf_small):
     """Scalar quantization contract: every code is in [0, 255] and
     dequantization (code*scale + offset) reconstructs each value within

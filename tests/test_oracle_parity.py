@@ -10,13 +10,11 @@ floats bit-exactly — any last-ulp drift between engines fails here first.
 
 from __future__ import annotations
 
-import datetime as dt
-import math
-
-import duckdb
+import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from tools.driver_mirror import _norm_cell, duck_connect, tz_signature
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (
@@ -26,41 +24,7 @@ TABLES = (
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
-
-
-def _norm_cell(v):
-    if v is None:
-        # pandas renders NULL in float columns as NaN; the driver hashes
-        # through pandas on both engines, so None and NaN must normalize
-        # to the same sentinel here too (Spark collect() gives None where
-        # fetchdf() gives NaN for the same unmatched left-join row).
-        return "NaN"
-    if isinstance(v, bool):
-        return int(v)
-    if hasattr(v, "to_pydatetime"):  # pandas Timestamp
-        v = v.to_pydatetime()
-    if isinstance(v, dt.datetime):
-        v = v.replace(tzinfo=None)
-        if v.time() == dt.time(0, 0):  # pandas renders DATE as midnight ts
-            return v.date().isoformat()
-        return v.isoformat(sep=" ")
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if hasattr(v, "item"):  # numpy scalar — keep int-ness vs float-ness
-        v = v.item()
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    if hasattr(v, "__float__") and not isinstance(v, (int, float)):  # Decimal
-        return float(v)
-    return v
+    return duck_connect(SF_DIR, TABLES)
 
 
 def _normalize(rows, cols):
@@ -83,24 +47,18 @@ ORACLES = entrymod.oracle_sql()
 QUERIES = entrymod.queries()
 
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
-def test_oracle_parity(name, spark, duck):
-    assert name in QUERIES, f"oracle_sql has {name} but queries() does not"
-    sdf = QUERIES[name](spark, SF_DIR)
-    spark_cols = sdf.columns
-    # Through pandas like the driver: a NULL in an integer column renders
-    # the WHOLE column float64 on either engine, so comparing collect()
-    # ints against pandas floats would flag spurious type mismatches that
-    # the driver's pandas-vs-pandas hash never sees.
-    spark_pd = sdf.toPandas()
+def _assert_same(name, spark_pd, duck_df):
+    spark_cols = list(spark_pd.columns)
     spark_rows = [tuple(r) for r in spark_pd.itertuples(index=False, name=None)]
-
-    duck_df = duck.execute(ORACLES[name]).fetchdf()
     duck_cols = list(duck_df.columns)
     duck_rows = [tuple(r) for r in duck_df.itertuples(index=False, name=None)]
 
     assert sorted(spark_cols) == sorted(duck_cols), (
         f"{name}: column mismatch spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
+    )
+    assert tz_signature(spark_pd) == tz_signature(duck_df), (
+        f"{name}: timezone mismatch spark={tz_signature(spark_pd)} "
+        f"duck={tz_signature(duck_df)}"
     )
     assert len(spark_rows) == len(duck_rows), (
         f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
@@ -115,6 +73,28 @@ def test_oracle_parity(name, spark, duck):
             if len(mismatches) >= 5:
                 break
     assert not mismatches, f"{name}: value mismatches (first 5): {mismatches}"
+
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_oracle_parity(name, spark, duck):
+    assert name in QUERIES, f"oracle_sql has {name} but queries() does not"
+    # Through pandas like the driver: a NULL in an integer column renders
+    # the WHOLE column float64 on either engine, so comparing collect()
+    # ints against pandas floats would flag spurious type mismatches that
+    # the driver's pandas-vs-pandas hash never sees.
+    spark_pd = QUERIES[name](spark, SF_DIR).toPandas()
+    _assert_same(name, spark_pd, duck.execute(ORACLES[name]).fetchdf())
+
+
+def test_comparator_rejects_tz_aware_against_naive():
+    """The same instants, tz-aware on one side and naive on the other,
+    are a mismatch: the driver fails exactly this case."""
+    naive = pd.DataFrame({"ts": pd.to_datetime(["2024-01-01 00:00", "2024-01-02 06:30"])})
+    aware = naive.assign(ts=naive["ts"].dt.tz_localize("UTC"))
+    _assert_same("naive", naive, naive.copy())
+    with pytest.raises(AssertionError, match="timezone mismatch"):
+        _assert_same("tz", naive, aware)
+    assert [_norm_cell(v) for v in naive["ts"]] != [_norm_cell(v) for v in aware["ts"]]
 
 
 def test_all_queries_run(spark):

@@ -352,3 +352,170 @@ def test_registry_without_readable_driver_records(tmp_path):
     order = list(copy.queries())
     assert set(order) == set(entrymod.queries())
     assert order == sorted(order, key=_window_key({}, set(copy.oracle_sql())))
+
+
+def _public_defs():
+    """(rel, FunctionDef) for every module-level public function."""
+    for p in _src_files():
+        for node in ast.parse(p.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and (
+                not node.name.startswith("_")
+            ):
+                yield str(p.relative_to(SRC)), node
+
+
+def _named_params(fn) -> list[str]:
+    a = fn.args
+    return [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+
+
+def _defaulted_params(fn) -> list[str]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    kw = [x for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return [x.arg for x in pos[len(pos) - len(a.defaults):] + kw]
+
+
+def test_every_public_parameter_is_read():
+    """A public function reads every parameter it accepts; one it never
+    reads is a knob the caller turns for no effect."""
+    offenders = []
+    for rel, fn in _public_defs():
+        a = fn.args
+        params = _named_params(fn) + [x.arg for x in (a.vararg, a.kwarg) if x]
+        read = {
+            n.id
+            for stmt in fn.body
+            for n in ast.walk(stmt)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        offenders += [f"{rel}:{fn.name}.{x}" for x in params if x not in read]
+    assert not offenders, f"public parameters never read: {offenders}"
+
+
+# Defaulted public parameters that no call sets, with the reason each is
+# still a parameter.  A key is a parameter name (allowed on any function)
+# or ``function.parameter``.  Names ending in ``_col`` name a column of
+# the caller's data and are allowed by that rule alone.
+DATA_PARAM_ALLOWED = {
+    "id_a": "column of the caller's pair relation",
+    "id_b": "column of the caller's pair relation",
+    "left_ts": "timestamp column of the caller's left relation",
+    "right_ts": "timestamp column of the caller's right relation",
+    "start_type": "event type in the caller's data that starts the clock",
+    "event_type": "event type in the caller's data that stops the clock",
+    "split_ts": "boundary of the caller's reference window",
+    "how": "join type over the caller's relations",
+    "key_name": "name of the output column the caller receives",
+    "dim": "width of the caller's embedding vectors",
+    "subset": "columns of the caller's data to check",
+    "patterns": "the caller's PII patterns",
+    "replacement": "the caller's redaction token",
+    "left_prefix": "node-id prefix of the caller's left entity",
+    "right_prefix": "node-id prefix of the caller's right entity",
+    "corpus": "the caller's training texts",
+    "profiles": "the caller's trained language profiles",
+    "delete_op": "the caller's delete marker value",
+    "high_value": "the caller's open-interval sentinel",
+    "header": "format of the caller's CSV file",
+    "schema": "schema of the caller's file",
+    "mode": "what a write does to data already at the caller's path",
+    "master": "deployment: the cluster manager to connect to",
+    # families: the value must agree with a sibling some caller sets
+    "scale_bits": "must match the index build's scale_bits (tests build at 16)",
+    "semantic_dedup_build.n_assign": "must match semantic_dedup, whose audit it reproduces",
+    "semantic_dedup_build.target_cluster_size": "must match semantic_dedup, whose audit it reproduces",
+    "minhash_incremental_pairs.num_hashes": "must match minhash_signatures' corpus_sigs",
+    "minhash_incremental_pairs.shingle_n": "must match minhash_signatures' corpus_sigs",
+    "minhash_incremental_pairs.basis": "must match minhash_signatures' corpus_sigs",
+    "minhash_incremental_pairs.bands": "banding of the num_hashes signature columns",
+    "minhash_incremental_pairs.max_bucket_size": "the minhash_dedup_pairs bucket cap, applied to corpus_sigs",
+    "temperature_mixture_sample.modulus": "passed to temperature_mixture_rates, whose modulus is set",
+    "temperature_mixture_upsample.modulus": "passed to temperature_mixture_rates, whose modulus is set",
+    "temperature_mixture_upsample.target_total": "passed to temperature_mixture_rates, whose target_total is set",
+    "bloom_join.n_hashes": "passed to bloom_prune, whose n_hashes is set",
+}
+
+_CALL_SITE_DIRS = ("tools", "perfbench", "tests")
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    if isinstance(f, ast.Name):
+        return f.id
+    return f.attr if isinstance(f, ast.Attribute) else None
+
+
+def test_every_tuning_knob_is_set_somewhere():
+    """Every defaulted public parameter is set, by keyword, by position
+    or through a ``**kwargs`` passthrough, by at least one call in the
+    package, the entry file, ``bench.py``, ``tools/``, ``perfbench/`` or
+    ``tests/``; otherwise it is a constant and belongs in the body.
+
+    A ``**name`` argument that forwards the calling function's own
+    ``**name`` sets, on the callee, whatever keywords reach the caller
+    beyond its named parameters.  Any other ``**mapping`` or ``*args``
+    argument counts as setting every parameter of the callee."""
+    defs = {fn.name: fn for _, fn in _public_defs()}
+    files = _src_files() + [REPO / "__spark_entry__.py", REPO / "bench.py"]
+    for d in _CALL_SITE_DIRS:
+        files += list((REPO / d).rglob("*.py"))
+
+    set_by: dict[str, set[str]] = {}
+    named: dict[str, set[str]] = {}
+    forwards: set[tuple[str, str]] = set()
+
+    def visit(node, enclosing):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            named.setdefault(node.name, set()).update(_named_params(node))
+            enclosing = node
+        if isinstance(node, ast.Call) and (name := _callee(node)):
+            got = set_by.setdefault(name, set())
+            fn = defs.get(name)
+            params = _named_params(fn) if fn else []
+            npos = len(fn.args.posonlyargs + fn.args.args) if fn else 0
+            for i, arg in enumerate(node.args):
+                if isinstance(arg, ast.Starred):
+                    got.update(params)
+                    break
+                if i < npos:
+                    got.add(params[i])
+            for kw in node.keywords:
+                if kw.arg is not None:
+                    got.add(kw.arg)
+                elif (
+                    enclosing is not None
+                    and enclosing.args.kwarg is not None
+                    and isinstance(kw.value, ast.Name)
+                    and kw.value.id == enclosing.args.kwarg.arg
+                ):
+                    forwards.add((enclosing.name, name))
+                else:
+                    got.update(params)
+        for child in ast.iter_child_nodes(node):
+            visit(child, enclosing)
+
+    for p in files:
+        visit(ast.parse(p.read_text()), None)
+    changed = True
+    while changed:
+        changed = False
+        for src, dst in forwards:
+            extra = set_by.get(src, set()) - named.get(src, set())
+            if not extra <= set_by.setdefault(dst, set()):
+                set_by[dst] |= extra
+                changed = True
+
+    offenders = [
+        f"{rel}:{fn.name}.{x}"
+        for rel, fn in _public_defs()
+        for x in _defaulted_params(fn)
+        if x not in set_by.get(fn.name, set())
+        and not x.endswith("_col")
+        and x not in DATA_PARAM_ALLOWED
+        and f"{fn.name}.{x}" not in DATA_PARAM_ALLOWED
+    ]
+    assert not offenders, (
+        "defaulted public parameters no call sets (inline the value, or "
+        f"name the reason in DATA_PARAM_ALLOWED): {offenders}"
+    )

@@ -15,14 +15,11 @@ because every chain is integer/decimal fixed-point.
 
 from __future__ import annotations
 
-import datetime as dt
-import math
-
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from tools.driver_mirror import _norm_cell, duck_connect
 from yellowrush_spark_ml_pipeline_spark.operators import graph
 from yellowrush_spark_ml_pipeline_spark.operators import similarity
 
@@ -32,33 +29,17 @@ TABLES = "customer orders lineitem embeddings documents".split()
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
-
-
-def _norm(v):
-    if v is None:
-        return "NaN"
-    if hasattr(v, "to_pydatetime"):
-        v = v.to_pydatetime()
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat(sep=" ")
-    if hasattr(v, "item"):
-        v = v.item()
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    return v
+    return duck_connect(SF_DIR, TABLES)
 
 
 def _rows(pd_df):
     pd_df = pd_df[sorted(pd_df.columns)]
     return sorted(
-        tuple(_norm(v) for v in r)
-        for r in pd_df.itertuples(index=False, name=None)
+        (
+            tuple(_norm_cell(v) for v in r)
+            for r in pd_df.itertuples(index=False, name=None)
+        ),
+        key=repr,
     )
 
 

@@ -208,9 +208,7 @@ def test_ntile_buckets_histogram_form_equals_row_level_ntile(spark):
         got = {
             r["bucket"]: (r["n_rows"], r["min_value"], r["max_value"],
                           r["total_value"])
-            for r in aggregates.ntile_buckets(
-                df, "n_chars", "doc_id", n_buckets=10
-            ).collect()
+            for r in aggregates.ntile_buckets(df, "n_chars", n_buckets=10).collect()
         }
         w = Window.orderBy(F.col("n_chars").asc(), F.col("doc_id").asc())
         want = {

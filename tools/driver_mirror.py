@@ -14,8 +14,11 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import atexit
 import hashlib
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -26,6 +29,23 @@ SF_DIR = "/root/testdata/sf0.01"
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+
+def duck_connect(sf_dir: str, tables) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf_dir``.
+
+    Spill files go to a private temporary directory, removed when the
+    process exits: DuckDB's default ``.tmp`` under the working directory
+    is shared by every connection started there, so concurrent runs from
+    one directory spill into the same files."""
+    spill = tempfile.mkdtemp(prefix="duckdb-spill-")
+    atexit.register(shutil.rmtree, spill, ignore_errors=True)
+    con = duckdb.connect(config={"temp_directory": spill})
+    for t in tables:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
 
 
 def _norm_cell(v):
@@ -121,18 +141,7 @@ def main() -> int:
     if args.aqe_off:
         extra["spark.sql.adaptive.enabled"] = "false"
     spark = get_spark("driver-mirror", extra_conf=extra)
-    if args.shuffle:
-        spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle))
-    if args.ansi_off:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-    if args.aqe_off:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_connect(SF_DIR, TABLES)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -171,11 +171,9 @@ def curate_corpus(
     partition_col: str = "lang",
     redact: bool = False,
     lang_scorer=None,
-    max_bucket_size: int | None = None,
     canonical: str = "min_id",
     hash_fn: str = "xxhash64",
     quality_scorer=None,
-    max_broadcast_rows: int = 1_000_000,
 ) -> DataFrame:
     """The LLM training-data curation flow end-to-end: quality scoring →
     threshold filter → language ID → MinHash near-dup pairs → connected
@@ -184,9 +182,8 @@ def curate_corpus(
 
     ``lang_scorer`` plugs a real language-ID model (pandas-UDF slot, see
     ``textstats.language_id``) into the flow without any other change;
-    None keeps the zero-Python heuristic. ``max_bucket_size`` is the
-    boilerplate-skew guard on the dedup candidate join (see
-    ``dedup.minhash_lsh_candidates``) — set it for web-scale corpora.
+    None keeps the zero-Python heuristic.  The dedup candidate join runs
+    without a bucket cap (``dedup.minhash_dedup_pairs``' default).
 
     ``quality_scorer`` (round 10) swaps the gate itself — the
     FineWeb-edu shape, where a trained classifier replaces the C4-style
@@ -266,7 +263,7 @@ def curate_corpus(
     # join and shuffles the TEXT column by doc_id once per consumer —
     # the "join sneaks the payload shuffle back in" trap of guide §8.4
     # (measured +2 s on curate_scored).  Gate: one bounded count over
-    # the checkpointed decision blocks (same contract as
+    # the checkpointed decision blocks against 1M rows (same contract as
     # semantic_dedup_incremental's max_broadcast_rows); over the gate, a
     # shuffle-hash hint keeps the join memory-bounded — the corpus
     # shuffles once by doc_id, which is the correct plan when the
@@ -292,7 +289,7 @@ def curate_corpus(
     dec = kept.select("doc_id", *derived).localCheckpoint(eager=True)
     attach = (
         F.broadcast(dec)
-        if dec.count() <= max_broadcast_rows
+        if dec.count() <= 1_000_000
         else dec.hint("shuffle_hash")
     )
     kept = docs.join(attach, "doc_id").select(
@@ -301,8 +298,7 @@ def curate_corpus(
     # hash_fn="md5" switches the dedup tier onto the cross-engine hash
     # (functions/hashing.py) so the WHOLE flow is DuckDB-replayable.
     pairs = minhash_dedup_pairs(
-        kept, jaccard_threshold=jaccard_threshold,
-        max_bucket_size=max_bucket_size, hash_fn=hash_fn,
+        kept, jaccard_threshold=jaccard_threshold, hash_fn=hash_fn
     )
     groups = dedup_groups(pairs)
     # Schema-agnostic output: whatever columns the corpus came with, plus
@@ -331,10 +327,6 @@ def curate_corpus(
 def export_training_set(
     docs: DataFrame,
     output_path: str | None = None,
-    min_quality: float = 0.5,
-    capacity: int = 2048,
-    val_mod: int = 10,
-    seed: int = 42,
     hash_fn: str = "xxhash64",
     **curate_kwargs,
 ) -> tuple[DataFrame, DataFrame]:
@@ -344,10 +336,11 @@ def export_training_set(
     the manifest is the per-(split, lang) accounting a training job
     validates against before reading a byte.
 
-    The split is a seeded hash-mod on ``doc_id`` — exact, partition-
-    invariant, reproducible across backfills, and stable under corpus
-    growth (a doc's split never changes when neighbors arrive, unlike
-    randomSplit). Packing runs WITHIN (split, lang) so no context window
+    The split sends a doc to val iff its seed-42 hash of ``doc_id`` is
+    0 mod 10 — exact, partition-invariant, reproducible across
+    backfills, and stable under corpus growth (a doc's split never
+    changes when neighbors arrive, unlike randomSplit). Packing into
+    2048-token windows runs WITHIN (split, lang) so no context window
     straddles the train/val boundary or mixes languages.
 
     Scale: curation's shuffles are the dedup tiers' own; the split tag is
@@ -358,27 +351,23 @@ def export_training_set(
     from .functions.hashing import md5_hash60
     from .operators.textstats import pack_sequences
 
-    curated = curate_corpus(
-        docs, min_quality=min_quality, hash_fn=hash_fn, **curate_kwargs
-    )
+    curated = curate_corpus(docs, hash_fn=hash_fn, **curate_kwargs)
     # hash_fn="md5": seed folds into the hashed string, keeping the split
     # cross-engine replayable (the xxhash64 default takes the seed natively)
     split_hash = (
-        md5_hash60(
-            F.concat(F.col("doc_id").cast("string"), F.lit(f":{seed}"))
-        )
+        md5_hash60(F.concat(F.col("doc_id").cast("string"), F.lit(":42")))
         if hash_fn == "md5"
-        else F.xxhash64(F.col("doc_id"), F.lit(seed))
+        else F.xxhash64(F.col("doc_id"), F.lit(42))
     )
     tagged = curated.withColumn(
         "split",
         F.when(
-            F.pmod(split_hash, F.lit(val_mod)) == 0,
+            F.pmod(split_hash, F.lit(10)) == 0,
             F.lit("val"),
         ).otherwise(F.lit("train")),
     )
     grouped = tagged.withColumn("_grp", F.concat_ws("/", "split", "lang"))
-    packed = pack_sequences(grouped, group_col="_grp", capacity=capacity)
+    packed = pack_sequences(grouped, group_col="_grp", capacity=2048)
     dataset = tagged.join(
         packed.select("doc_id", F.col("n_tokens").alias("pack_tokens"), "bin_id"),
         "doc_id",
@@ -464,24 +453,20 @@ def epoch_shuffle(
 
 def export_tokenized_set(
     docs: DataFrame,
-    rounds: int = 3,
-    capacity: int = 2048,
-    val_mod: int = 10,
-    seed: int = 42,
     mixture: bool = False,
     source_col: str = "source",
-    mixture_target: int | None = None,
     mixture_factor_milli: int | None = None,
     max_epochs: int = 4,
 ) -> DataFrame:
-    """The tokenizer-complete final mile (round 9): train BPE merges on
-    the corpus, ENCODE it (real token counts, not the whitespace proxy),
-    seeded hash-mod train/val split, context-window packing within
-    (split, lang) driven by the REAL ``n_tokens``, and the deterministic
-    seeded epoch order — the first composition where every stage of
-    train → tokenize → split → pack → shuffle consumes the previous
-    stage's true outputs, and the whole chain stays one lazy plan
-    replayable by the DuckDB oracle.
+    """The tokenizer-complete final mile (round 9): train 3 rounds of BPE
+    merges on the corpus, ENCODE it (real token counts, not the
+    whitespace proxy), a train/val split that sends a doc to val iff the
+    md5 hash of ``doc_id`` seeded 42 is 0 mod 10, 2048-token
+    context-window packing within (split, lang) driven by the REAL
+    ``n_tokens``, and the deterministic seed-42 epoch order — the first
+    composition where every stage of train → tokenize → split → pack →
+    shuffle consumes the previous stage's true outputs, and the whole
+    chain stays one lazy plan replayable by the DuckDB oracle.
 
     Scale: BPE work is dictionary-sized (see bpe_encode); the split tag
     is a narrow map; packing is one window per (split, lang); the epoch
@@ -547,11 +532,9 @@ def export_tokenized_set(
     elif mixture:
         from .operators.textstats import temperature_mixture_sample
 
-        docs = temperature_mixture_sample(
-            docs, source_col, "doc_id", target_total=mixture_target
-        )
-    merges = bpe_merge_rounds(docs, rounds=rounds)
-    enc = bpe_encode(docs, merges, rounds=rounds)
+        docs = temperature_mixture_sample(docs, source_col, "doc_id")
+    merges = bpe_merge_rounds(docs, rounds=3)
+    enc = bpe_encode(docs, merges, rounds=3)
     keep_cols = ["doc_id", "lang"] + (
         [source_col, "rate_micro"] if (mixture or upsample) else []
     )
@@ -572,19 +555,17 @@ def export_tokenized_set(
     # export queries): runtime exchange reuse already dedupes the
     # identical subtrees, so the barrier bought nothing and cost an
     # extra materialization.  Left lazy on evidence.
-    split_hash = md5_hash60(
-        F.concat(F.col("doc_id").cast("string"), F.lit(f":{seed}"))
-    )
+    split_hash = md5_hash60(F.concat(F.col("doc_id").cast("string"), F.lit(":42")))
     tagged = base.withColumn(
         "split",
-        F.when(F.pmod(split_hash, F.lit(val_mod)) == 0, F.lit("val"))
+        F.when(F.pmod(split_hash, F.lit(10)) == 0, F.lit("val"))
         .otherwise(F.lit("train")),
     )
     grouped = tagged.withColumn("_grp", F.concat_ws("/", "split", "lang"))
     packed = pack_sequences(
         grouped,
         group_col="_grp",
-        capacity=capacity,
+        capacity=2048,
         n_tokens_col="n_tokens",
         epoch_col="epoch" if upsample else None,
     )
@@ -597,9 +578,7 @@ def export_tokenized_set(
         ),
         ["doc_id"] + epoch_keys,
     )
-    return epoch_shuffle(
-        dataset, seed=seed, epoch_col="epoch" if upsample else None
-    )
+    return epoch_shuffle(dataset, epoch_col="epoch" if upsample else None)
 
 
 def train_and_evaluate(
@@ -608,7 +587,6 @@ def train_and_evaluate(
     label_col: str,
     sample_fraction: float | None = 0.3,
     model_path: str | None = None,
-    seed: int = 42,
 ) -> dict[str, float]:
     """Model-flow shape (nyc_taxi_final.py:666-966 congestion, :985-1282
     delay — identical structure, different label): sample → split →
@@ -618,7 +596,7 @@ def train_and_evaluate(
     from .ml.pipelines import evaluate_binary, save_model, train_classifier
 
     model, _, test_df = train_classifier(
-        df, feature_cols, label_col, sample_fraction=sample_fraction, seed=seed
+        df, feature_cols, label_col, sample_fraction=sample_fraction
     )
     metrics = evaluate_binary(model, test_df, label_col)
     if model_path:

@@ -41,10 +41,10 @@ _NPART_MEMO_MAX = 4096
 _NPART_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")
 
 
-def ensure_scan_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
+def ensure_scan_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` up to the session's default
-    parallelism iff its current plan yields fewer than ``min_fraction``
-    of that many partitions.  No-op for streaming frames and whenever
+    parallelism iff its current plan yields fewer than half that many
+    partitions.  No-op for streaming frames and whenever
     the input already splits (the 100 TB case); the target derives from
     the session's core count, never a constant."""
     if df.isStreaming:
@@ -65,6 +65,6 @@ def ensure_scan_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFra
             _NPART_MEMO[key] = n
     except Exception:  # noqa: BLE001 — planning-only probe; never fail the op
         return df
-    if n < max(2, int(target * min_fraction)):
+    if n < max(2, int(target * 0.5)):
         return df.repartition(target)
     return df

@@ -13,10 +13,10 @@ from pyspark.sql import functions as F
 EPS = 1e-6  # epsilon division guard, nyc_taxi_final.py:468/:477-478/:526
 
 
-def safe_div(num: Column, den: Column, eps: float = EPS) -> Column:
-    """``num / (den + eps)`` — the reference's epsilon-guarded division
+def safe_div(num: Column, den: Column) -> Column:
+    """``num / (den + EPS)`` — the reference's epsilon-guarded division
     (nyc_taxi_final.py:468)."""
-    return num / (den + F.lit(eps))
+    return num / (den + F.lit(EPS))
 
 
 def duration_minutes(start: Column, end: Column) -> Column:
@@ -63,20 +63,20 @@ def count_if(predicate: Column) -> Column:
     return F.sum(predicate.cast("int"))
 
 
-def decimal_sum(col: Column, scale: int = 4) -> Column:
+def decimal_sum(col: Column) -> Column:
     """Order-independent exact sum of a money-like double.
 
     Double summation is associativity-sensitive: partial-aggregate merge
     order varies run to run, so last-bit results drift — fatal for a
     hash-compared oracle and for reproducible pipelines at 1000-executor
-    scale. Summing in DECIMAL is exact and order-independent; we cast back
-    to double at the end (one deterministic rounding).
+    scale. Summing in DECIMAL(18,4) is exact and order-independent; we
+    cast back to double at the end (one deterministic rounding).
     """
-    return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
+    return F.sum(col.cast("decimal(18,4)")).cast("double")
 
 
-def decimal_avg(col: Column, scale: int = 4) -> Column:
-    """Order-independent mean: exact decimal sum (cast to double once,
-    deterministically) over the non-null count — the oracle-comparable
+def decimal_avg(col: Column) -> Column:
+    """Order-independent mean: exact :func:`decimal_sum` (cast to double
+    once, deterministically) over the non-null count — the oracle-comparable
     `CAST(SUM(CAST(c AS DECIMAL)) AS DOUBLE) / COUNT(c)` shape."""
-    return decimal_sum(col, scale) / F.count(col)
+    return decimal_sum(col) / F.count(col)

@@ -70,13 +70,6 @@ def char_ngrams(text: Column, n: int = 5) -> Column:
     ).otherwise(F.array(norm))
 
 
-def hash64(col: Column, seed: int = 42) -> Column:
-    """xxhash64 — Spark's built-in 64-bit hash (fast, JVM-side). Used for
-    MinHash permutations and fingerprints (engine-internal; not meant to
-    match any other engine's hash)."""
-    return F.xxhash64(col, F.lit(seed))
-
-
 def rolling_fingerprint(text: Column) -> Column:
     """Deterministic 64-bit document fingerprint: xxhash64 of the
     whitespace-normalized lowercased text."""

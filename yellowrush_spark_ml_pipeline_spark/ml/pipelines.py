@@ -44,18 +44,16 @@ class RFConfig:
     extra: dict = field(default_factory=dict)
 
 
-def encode_categorical(
-    df: DataFrame, col: str, handle_invalid: str = "keep", drop_last: bool = False
-) -> tuple[DataFrame, list[str]]:
+def encode_categorical(df: DataFrame, col: str) -> tuple[DataFrame, list[str]]:
     """StringIndexer + OneHotEncoder (M1+M2, nyc_taxi_final.py:581-596):
     categorical column → sparse one-hot vector column ``{col}_ohe``; the
-    intermediate index is dropped like the reference does. Returns the
-    transformed frame and the produced column names."""
-    idx = StringIndexer(
-        inputCol=col, outputCol=f"{col}_idx", handleInvalid=handle_invalid
-    )
+    intermediate index is dropped like the reference does. Unseen labels
+    get their own index (``handleInvalid="keep"``) and every category
+    keeps a slot (``dropLast=False``). Returns the transformed frame and
+    the produced column names."""
+    idx = StringIndexer(inputCol=col, outputCol=f"{col}_idx", handleInvalid="keep")
     ohe = OneHotEncoder(
-        inputCols=[f"{col}_idx"], outputCols=[f"{col}_ohe"], dropLast=drop_last
+        inputCols=[f"{col}_idx"], outputCols=[f"{col}_ohe"], dropLast=False
     )
     model = Pipeline(stages=[idx, ohe]).fit(df)
     out = model.transform(df).drop(col, f"{col}_idx")
@@ -66,14 +64,13 @@ def build_rf_pipeline(
     feature_cols: Sequence[str],
     label_col: str,
     config: RFConfig | None = None,
-    handle_invalid: str = "skip",
 ) -> Pipeline:
     """VectorAssembler → RandomForestClassifier (M3+M4+M5,
     nyc_taxi_final.py:785-805). ``handleInvalid='skip'`` silently drops
-    rows with nulls/NaN — reference behavior, made an explicit argument."""
+    rows with nulls/NaN — reference behavior."""
     cfg = config or RFConfig()
     assembler = VectorAssembler(
-        inputCols=list(feature_cols), outputCol="features", handleInvalid=handle_invalid
+        inputCols=list(feature_cols), outputCol="features", handleInvalid="skip"
     )
     rf = RandomForestClassifier(
         featuresCol="features",
@@ -95,28 +92,26 @@ def build_gbt_pipeline(
     label_col: str,
     max_iter: int = 30,
     max_depth: int = 5,
-    step_size: float = 0.1,
-    seed: int = 42,
-    handle_invalid: str = "skip",
 ) -> Pipeline:
     """VectorAssembler → GBTClassifier: the boosted-tree alternative to
-    the reference's RF (same pipeline shape, drop-in for
-    `train_classifier(builder=...)`). GBT trains sequentially per
-    iteration but each iteration is a full distributed pass — at scale
+    the reference's RF (same pipeline shape and ``handleInvalid='skip'``,
+    step size 0.1, seed 42; drop-in for `train_classifier(builder=...)`).
+    GBT trains sequentially per iteration but each iteration is a full
+    distributed pass — at scale
     the same caching/partitioning rules as RF apply, with ~maxIter
     sequential barriers instead of ~maxDepth."""
     from pyspark.ml.classification import GBTClassifier
 
     assembler = VectorAssembler(
-        inputCols=list(feature_cols), outputCol="features", handleInvalid=handle_invalid
+        inputCols=list(feature_cols), outputCol="features", handleInvalid="skip"
     )
     gbt = GBTClassifier(
         featuresCol="features",
         labelCol=label_col,
         maxIter=max_iter,
         maxDepth=max_depth,
-        stepSize=step_size,
-        seed=seed,
+        stepSize=0.1,
+        seed=42,
         cacheNodeIds=True,
     )
     return Pipeline(stages=[assembler, gbt])
@@ -128,20 +123,19 @@ def train_classifier(
     label_col: str,
     config: RFConfig | None = None,
     sample_fraction: float | None = None,
-    split: tuple[float, float] = (0.8, 0.2),
-    seed: int = 42,
     builder=None,
 ) -> tuple[PipelineModel, DataFrame, DataFrame]:
     """End-to-end M0→M5: optional Bernoulli sample (nyc_taxi_final.py:744)
-    → randomSplit (:808) → fit. Returns (model, train_df, test_df).
+    → 0.8/0.2 randomSplit (:808) → fit, both draws at seed 42. Returns
+    (model, train_df, test_df).
 
     The train split is cached for the fit (tree ensembles scan the data
     once per depth level; without the cache every scan re-runs the whole
     upstream feature plan — measured ~1.8× slower) and unpersisted after,
     mirroring the reference's cache()/unpersist() discipline (:408/:650)."""
     if sample_fraction is not None:
-        df = df.sample(fraction=sample_fraction, seed=seed)
-    train_df, test_df = df.randomSplit(list(split), seed=seed)
+        df = df.sample(fraction=sample_fraction, seed=42)
+    train_df, test_df = df.randomSplit([0.8, 0.2], seed=42)
     train_df = train_df.cache()
     pipeline = (
         builder(feature_cols, label_col)
@@ -274,7 +268,6 @@ def tune_classifier(
     max_depth_grid: Sequence[int] = (4, 8),
     n_folds: int = 3,
     seed: int = 42,
-    parallelism: int = 2,
 ):
     """Hyperparameter search over the reference's RF pipeline: k-fold
     CrossValidator on (numTrees, maxDepth) scored by areaUnderROC — the
@@ -283,8 +276,8 @@ def tune_classifier(
     pipeline object).
 
     Scale posture: total work is folds x grid-size model fits.
-    ``parallelism`` trains candidate models concurrently inside each
-    fold (thread-level on the driver, cluster-level in execution);
+    Two candidate models train concurrently inside each fold
+    (thread-level on the driver, cluster-level in execution);
     MLlib caches each fold's train/validation split once across all
     candidates, so the input is scanned per fold, not per candidate.
     At 100 TB you tune on a stratified sample and refit the winner on
@@ -316,7 +309,7 @@ def tune_classifier(
         evaluator=evaluator,
         numFolds=n_folds,
         seed=seed,
-        parallelism=parallelism,
+        parallelism=2,
         collectSubModels=False,
     )
     model = cv.fit(df)
@@ -431,16 +424,14 @@ def load_model(path: str) -> PipelineModel:
 def build_text_classifier_pipeline(
     text_col: str = "text",
     label_col: str = "label",
-    num_features: int = 1 << 14,
-    reg_param: float = 0.01,
-    max_iter: int = 50,
-    seed: int = 42,
 ) -> Pipeline:
     """Text quality/domain classifier pipeline (the FineWeb-edu /
     fastText-shaped pattern a curation stack trains on a small labeled
     seed set and scores the whole corpus with): RegexTokenizer →
-    HashingTF (feature hashing — no vocabulary fit, so the transform is
-    stateless and scales to any corpus) → IDF → LogisticRegression.
+    HashingTF (2^14 features; feature hashing — no vocabulary fit, so the
+    transform is stateless and scales to any corpus) → IDF →
+    LogisticRegression (regParam 0.01, at most 50 iterations). No stage
+    draws random numbers.
 
     Feature hashing is THE scale choice here: a CountVectorizer fits a
     driver-side vocabulary over the corpus (O(vocab) driver memory, one
@@ -461,15 +452,13 @@ def build_text_classifier_pipeline(
         gaps=True,
         toLowercase=True,
     )
-    tf = HashingTF(
-        inputCol="_words", outputCol="_tf", numFeatures=num_features
-    )
+    tf = HashingTF(inputCol="_words", outputCol="_tf", numFeatures=1 << 14)
     idf = IDF(inputCol="_tf", outputCol="_tfidf")
     lr = LogisticRegression(
         featuresCol="_tfidf",
         labelCol=label_col,
-        regParam=reg_param,
-        maxIter=max_iter,
+        regParam=0.01,
+        maxIter=50,
         standardization=False,
     )
     return Pipeline(stages=[tok, tf, idf, lr])
@@ -479,21 +468,14 @@ def train_quality_classifier(
     labeled: DataFrame,
     text_col: str = "text",
     label_col: str = "label",
-    train_fraction: float = 0.8,
-    seed: int = 42,
-    **pipeline_kwargs,
 ):
     """Fit the text classifier on a labeled seed set and return
     (model, train_df, test_df) — the `train_classifier` contract for the
-    text modality. The split is seeded randomSplit (the seed set is small
-    and driver-adjacent; corpus-scale scoring happens at transform
-    time)."""
-    pipe = build_text_classifier_pipeline(
-        text_col=text_col, label_col=label_col, seed=seed, **pipeline_kwargs
-    )
-    train_df, test_df = labeled.randomSplit(
-        [train_fraction, 1 - train_fraction], seed=seed
-    )
+    text modality. The split is a 0.8/0.2 randomSplit at seed 42 (the
+    seed set is small and driver-adjacent; corpus-scale scoring happens
+    at transform time)."""
+    pipe = build_text_classifier_pipeline(text_col=text_col, label_col=label_col)
+    train_df, test_df = labeled.randomSplit([0.8, 0.2], seed=42)
     return pipe.fit(train_df), train_df, test_df
 
 

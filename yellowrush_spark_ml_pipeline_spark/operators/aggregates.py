@@ -123,13 +123,11 @@ def cube_agg(
 def approx_stats(
     df: DataFrame,
     cols: Sequence[str],
-    percentiles: Sequence[float] = (0.5, 0.95, 0.99),
-    rsd: float = 0.05,
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Sketch-based profiling aggregates: HyperLogLog++ distinct counts
-    (`approx_count_distinct`, ~rsd relative error) and KLL-style
-    approximate percentiles (`percentile_approx`) in ONE pass.
+    (`approx_count_distinct`, ~5 % relative standard deviation) and
+    KLL-style approximate percentiles 0.5/0.95/0.99 (`percentile_approx`
+    at accuracy 10000) in ONE pass.
 
     At 100 TB these are the only affordable forms — exact distinct is a
     full shuffle of every distinct value and exact percentiles a global
@@ -138,9 +136,9 @@ def approx_stats(
     against exact answers in tests/test_extensions.py."""
     aggs: list[Column] = [F.count(F.lit(1)).alias("row_count")]
     for c in cols:
-        aggs.append(F.approx_count_distinct(c, rsd).alias(f"approx_distinct_{c}"))
+        aggs.append(F.approx_count_distinct(c, 0.05).alias(f"approx_distinct_{c}"))
         aggs.append(
-            F.percentile_approx(c, list(percentiles), accuracy).alias(
+            F.percentile_approx(c, [0.5, 0.95, 0.99], 10000).alias(
                 f"approx_percentiles_{c}"
             )
         )
@@ -151,7 +149,6 @@ def assert_valid(
     df: DataFrame,
     date_col: str | None = None,
     nonnegative_cols: Sequence[str] = (),
-    require_rows: bool = True,
 ) -> dict:
     """D10 as a HARD gate: run `validate_table` and raise ``ValueError``
     on any violation (nulls, negatives, empty table) instead of returning
@@ -160,7 +157,7 @@ def assert_valid(
     success for logging."""
     row = validate_table(df, date_col, nonnegative_cols).first().asDict()
     problems = []
-    if require_rows and row["row_count"] == 0:
+    if row["row_count"] == 0:
         problems.append("table is empty")
     for k, v in row.items():
         if (k.startswith("nulls_") or k.startswith("negative_")) and v:
@@ -189,7 +186,6 @@ def summary_stats(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 def ntile_buckets(
     df: DataFrame,
     value_col: str,
-    id_col: str,
     n_buckets: int = 10,
 ) -> DataFrame:
     """Equal-frequency bucketing (NTILE semantics) + per-bucket profile:
@@ -635,7 +631,6 @@ def ab_welch_summary(
     df: DataFrame,
     unit_col: str,
     value_col: str,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Two-arm A/B comparison with Welch's t statistic, computed at the
     EXPERIMENT-UNIT level: per-unit metric totals first (events within a
@@ -645,7 +640,7 @@ def ab_welch_summary(
     hash bucket would tie the assignment to one engine's hash).
 
     Output: one row — (n_a, n_b, mean_a, mean_b, var_a, var_b,
-    welch_t), means/vars/t rounded to ``round_digits``.
+    welch_t), means/vars/t rounded to 6 digits.
 
     Exactness: per-unit totals and the arm-level sum / sum-of-squares
     accumulate in DECIMAL (order-independent); the mean / variance /
@@ -694,7 +689,7 @@ def ab_welch_summary(
         F.col("n_b") - F.lit(1)
     )
     t = (mean_a - mean_b) / F.sqrt(var_a / F.col("n_a") + var_b / F.col("n_b"))
-    r = lambda c: F.round(c, round_digits)  # noqa: E731
+    r = lambda c: F.round(c, 6)  # noqa: E731
     return j.select(
         "n_a",
         "n_b",

@@ -78,10 +78,10 @@ def deterministic_stratified_sample(
     fractions: Mapping[object, float],
     default_fraction: float = 1.0,
     id_col: str = "doc_id",
-    modulus: int = 1_000_000,
 ) -> DataFrame:
     """Exact stratified sampling: keep a row iff a Lehmer hash of its id,
-    reduced mod ``modulus``, falls under its stratum's threshold.
+    reduced mod 1,000,000, falls under its stratum's threshold (the
+    fraction in millionths).
 
     Unlike Bernoulli ``sampleBy`` this is a pure function of the data — no
     RNG stream, no partitioning sensitivity — so the SAME rows survive in
@@ -91,6 +91,7 @@ def deterministic_stratified_sample(
     (p = 2^31-1): multiplicative mixing whose intermediate product stays
     < 2^47, overflow-free in strict/ANSI integer arithmetic in any engine.
     One narrow filter — no shuffle, no collect."""
+    modulus = 1_000_000
     h = F.pmod(_lehmer_hash(df, id_col), F.lit(modulus))
     threshold = None
     for k, frac in fractions.items():

@@ -162,8 +162,8 @@ def _band_signatures(
     )
 
 
-def relative_cap(n_rows: int, floor: int = 64, denom: int = 10_000) -> int:
-    """Corpus-relative skew-cap default: ``max(floor, n_rows // denom)``.
+def relative_cap(n_rows: int) -> int:
+    """Corpus-relative skew-cap default: ``max(64, n_rows // 10_000)``.
 
     Round-7 close of the sf-tuned-constants caveat: an ABSOLUTE bucket/
     block cap tuned at one scale silently changes which candidates exist
@@ -171,13 +171,13 @@ def relative_cap(n_rows: int, floor: int = 64, denom: int = 10_000) -> int:
     loose at sf0.01 lets boilerplate go quadratic). Expressed relative to
     corpus size, the cap keeps the same MEANING across decades: a bucket
     is "boilerplate-skewed" when it holds more than ~0.01% of the corpus
-    (never fewer than ``floor`` members, so small corpora are never
+    (never fewer than 64 members, so small corpora are never
     capped). Pass the result anywhere a ``max_bucket_size`` /
     ``max_block_size`` parameter is taken, or pass the string ``"auto"``
     to those operators to have them derive it from a one-scalar count of
     their own input (a documented bounded driver action — same class as
     the connected-components convergence scalar)."""
-    return max(floor, n_rows // denom)
+    return max(64, n_rows // 10_000)
 
 
 def _resolve_cap(
@@ -254,29 +254,25 @@ def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
     shingle_n: int = 3,
-    bands: int = 8,
     jaccard_threshold: float = 0.7,
     basis: str = "word",
     max_bucket_size: int | str | None = None,
     hash_fn: str = "xxhash64",
     round_digits: int | None = 6,
 ) -> DataFrame:
-    """Full MinHash+LSH near-dup pipeline: signatures → banded candidates →
-    exact n-gram Jaccard verify on the candidates only. ``basis="char"``
-    switches the shingle alphabet for CJK/mixed corpora (use shingle_n≈5);
-    ``max_bucket_size`` caps boilerplate-skewed band buckets (see
-    ``minhash_lsh_candidates``). ``hash_fn="md5"`` switches the whole
+    """Full MinHash+LSH near-dup pipeline: 32-hash signatures → 8 bands
+    of 4 rows → exact n-gram Jaccard verify on the candidates only.
+    ``basis="char"`` switches the shingle alphabet for CJK/mixed corpora
+    (use shingle_n≈5); ``max_bucket_size`` caps boilerplate-skewed band
+    buckets (see ``minhash_lsh_candidates``). ``hash_fn="md5"`` switches
+    the whole
     path onto the cross-engine hash (functions/hashing.py) with exact
     (unhashed) band-bucket keys — deterministic across engines, so a
     DuckDB oracle replays signatures AND candidates AND verify."""
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_n, basis, hash_fn
-    )
+    sigs = minhash_signatures(df, text_col, id_col, 32, shingle_n, basis, hash_fn)
     cands = minhash_lsh_candidates(
-        sigs, id_col, bands, num_hashes // bands, max_bucket_size,
-        exact_keys=(hash_fn == "md5"),
+        sigs, id_col, 8, 4, max_bucket_size, exact_keys=(hash_fn == "md5")
     )
     return ngram_jaccard_verify(
         cands, df, text_col, id_col, shingle_n, jaccard_threshold, basis,
@@ -848,10 +844,9 @@ def containment_pairs(
     shingle_n: int = 3,
     threshold: float = 0.9,
     max_gram_df: int | str = 50,
-    basis: str = "word",
 ) -> DataFrame:
     """ASYMMETRIC near-dup detection: overlap coefficient
-    ``|A ∩ B| / min(|A|, |B|)`` over n-gram shingle sets — the measure
+    ``|A ∩ B| / min(|A|, |B|)`` over word n-gram shingle sets — the measure
     that catches a document CONTAINED in another (quotes, excerpts,
     truncated re-crawls, chapter-in-book). Jaccard misses exactly these:
     a 20-line excerpt of a 2000-line page has Jaccard ~0.01 but
@@ -873,7 +868,7 @@ def containment_pairs(
     from ..functions.partitioning import ensure_scan_parallelism
 
     max_gram_df = _resolve_cap(max_gram_df, docs, id_col)
-    sh = _shingle_expr(text_col, shingle_n, basis)
+    sh = _shingle_expr(text_col, shingle_n, "word")
     sized = (
         ensure_scan_parallelism(docs)
         .select(F.col(id_col).alias("_id"), sh.alias("_sh"))
@@ -1125,14 +1120,13 @@ def winnow_fingerprints(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 8,
-    w: int = 4,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
-    SIGMOD 2003 — the MOSS algorithm): hash every character ``k``-gram,
-    slide a window of ``w`` consecutive hashes, and keep each window's
-    minimum (ties to the RIGHTMOST position, the paper's rule that makes
-    overlapping windows re-select the same gram). Guarantees: any shared
+    SIGMOD 2003 — the MOSS algorithm): hash every character ``k``-gram
+    (k = 8), slide a window of ``w`` (= 4) consecutive hashes, and keep
+    each window's minimum (ties to the RIGHTMOST position, the paper's
+    rule that makes overlapping windows re-select the same gram).
+    Guarantees: any shared
     substring of length >= k + w - 1 between two documents yields at
     least one shared fingerprint, while storing ~2/(w+1) of all grams —
     the local-sampling property that makes winnowing the standard
@@ -1166,6 +1160,7 @@ def winnow_fingerprints(
     from ..functions.partitioning import ensure_scan_parallelism
     from ..functions.text import char_ngrams
 
+    k, w = 8, 4
     # per-gram md5 is the dominant cost and fuses into the docs scan —
     # spread an unsplittable scan first (measured 5.4 s -> 3.3 s at
     # sf0.1, where the docs table is one parquet row group = one task)
@@ -1213,15 +1208,13 @@ def winnow_overlap_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 8,
-    w: int = 4,
     min_shared: int = 2,
     max_fp_df: int = 50,
 ) -> DataFrame:
     """Cross-document overlap candidates from winnowing fingerprints:
     pairs of documents sharing >= ``min_shared`` DISTINCT fingerprint
     hashes — the passage-level near-dup screen (shared substrings of
-    length >= k+w-1 are guaranteed to collide; see
+    length >= 11 are guaranteed to collide; see
     :func:`winnow_fingerprints`).
 
     Output: (id_a, id_b, n_shared) with id_a < id_b, ordered by
@@ -1236,7 +1229,7 @@ def winnow_overlap_pairs(
     # posting join; checkpoint so the whole winnowing pipeline (explode +
     # window argmin) runs once, not once per branch
     fps = (
-        winnow_fingerprints(docs, text_col, id_col, k=k, w=w)
+        winnow_fingerprints(docs, text_col, id_col)
         .select(F.col(id_col).alias("_id"), "fp_hash")
         .distinct()
         .localCheckpoint(eager=True)

@@ -522,11 +522,9 @@ def co_visitation(
 def linear_attribution(
     df: DataFrame,
     convert_type: str = "purchase",
-    credit_base: int = 1_000_000,
     user_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Linear (equal-split) multi-touch attribution: each user's FIRST
     conversion distributes one unit of credit equally across the
@@ -534,7 +532,7 @@ def linear_attribution(
     standard complement to :func:`first_touch_attribution` when the
     middle of the journey must count too.
 
-    Credits are INTEGER micro-units (``credit_base div n_touches``,
+    Credits are INTEGER micro-units (``1_000_000 div n_touches``,
     floor): no float credit accumulation, so per-channel totals are
     exact, partition-invariant, and cross-engine reproducible (the
     unigram_nll/pagerank fixed-point discipline). The remainder
@@ -570,7 +568,7 @@ def linear_attribution(
     )
     credited = touches.join(n_per_user, user_col).select(
         F.col(type_col).alias("channel"),
-        F.expr(f"{credit_base} div _n_touch").alias("_credit"),
+        F.expr("1000000 div _n_touch").alias("_credit"),
     )
     return credited.groupBy("channel").agg(
         F.count(F.lit(1)).alias("n_conversions"),
@@ -659,22 +657,21 @@ def psi_drift(
     ts_col: str = "ts",
     value_col: str = "value",
     split_ts: str = "2024-01-16",
-    bucket_width: float = 50.0,
-    n_buckets: int = 10,
 ) -> DataFrame:
     """Population Stability Index of a metric distribution between a
     reference window (before ``split_ts``) and a current window — the
-    standard model/feature drift monitor. Fixed-width buckets; per
+    standard model/feature drift monitor. Ten fixed-width buckets of
+    width 50 (values from 450 up share the last one); per
     bucket the PSI term (p−q)·ln(p/q) is computed in the repo's
     integer-nanonat formulation: ONE libm log of the exact integer
     ratio (np·Nq)/(nq·Np), rounded once to 1e-9 units, then all-BIGINT
     cross-multiplied accumulation — order-independent and engine-exact.
     Buckets empty on either side are excluded (standard practice) but
     reported with null psi terms so the exclusion is visible. One scan,
-    one ~n_buckets-row aggregation."""
+    one ~10-row aggregation."""
     b = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col(value_col) / F.lit(bucket_width)),
+        F.lit(9),
+        F.floor(F.col(value_col) / F.lit(50.0)),
     ).cast("int")
     is_ref = F.col(ts_col) < F.lit(split_ts).cast("timestamp")
     counts = (
@@ -733,10 +730,9 @@ def survival_risk_sets(
     ts_col: str = "ts",
     start_type: str = "signup",
     event_type: str = "purchase",
-    bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Shared risk-set relation for survival estimators (Kaplan–Meier,
-    Nelson–Aalen): per distinct duration bucket t, the exact integer
+    Nelson–Aalen): per distinct one-hour duration bucket t, the exact integer
     (n_events, n_censored, n_risk) triple — time measured from each
     user's first ``start_type`` to their first subsequent
     ``event_type``, right-censored at corpus end.
@@ -775,7 +771,7 @@ def survival_risk_sets(
                 F.unix_timestamp(F.coalesce(F.col("_p"), F.col("_end")))
                 - F.unix_timestamp(F.col("_s"))
             )
-            / bucket_seconds
+            / 3600
         )
         .cast("bigint")
         .alias("t"),
@@ -810,14 +806,13 @@ def kaplan_meier(
     ts_col: str = "ts",
     start_type: str = "signup",
     event_type: str = "purchase",
-    bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Kaplan–Meier survival curve for start→event conversion (time
     from first ``start_type`` to first subsequent ``event_type``; users
     who never convert are right-censored at the corpus end). The
     standard funnel/retention survival estimator.
 
-    Exactness: durations are integer buckets; risk sets and event
+    Exactness: durations are integer one-hour buckets; risk sets and event
     counts are exact integers from one running-sum window over the
     DISTINCT-duration relation (bounded by the time domain); the
     product Π(1−dᵢ/nᵢ) is carried in log domain with the repo's
@@ -829,8 +824,7 @@ def kaplan_meier(
     from pyspark.sql import Window
 
     risk = survival_risk_sets(
-        df, user_col, type_col, ts_col, start_type, event_type,
-        bucket_seconds,
+        df, user_col, type_col, ts_col, start_type, event_type
     )
     ln_term = F.when(
         F.col("n_risk") > F.col("n_events"),
@@ -876,7 +870,6 @@ def rfm_segments(
     user_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    n_tiles: int = 5,
 ) -> DataFrame:
     """RFM (recency/frequency/monetary) customer segmentation: per-user
     metrics scored into quintiles with NTILE (deterministic via the
@@ -917,13 +910,13 @@ def rfm_segments(
         "recency_days",
         "frequency",
         "monetary_cents",
-        F.ntile(n_tiles)
+        F.ntile(5)
         .over(Window.orderBy(F.col("recency_days").asc(), F.col(user_col).asc()))
         .alias("r_score"),
-        F.ntile(n_tiles)
+        F.ntile(5)
         .over(Window.orderBy(F.col("frequency").desc(), F.col(user_col).asc()))
         .alias("f_score"),
-        F.ntile(n_tiles)
+        F.ntile(5)
         .over(
             Window.orderBy(F.col("monetary_cents").desc(), F.col(user_col).asc())
         )
@@ -942,7 +935,6 @@ def rfm_segments(
 def burst_runs(
     df: DataFrame,
     ts_col: str = "ts",
-    bucket_seconds: int = 3600,
     top_permille: int = 50,
 ) -> DataFrame:
     """Burst (incident) detection on the bucketed count series: the top
@@ -958,7 +950,7 @@ def burst_runs(
 
     hourly = (
         df.select(
-            F.floor(F.unix_timestamp(F.col(ts_col)) / bucket_seconds)
+            F.floor(F.unix_timestamp(F.col(ts_col)) / 3600)
             .cast("bigint")
             .alias("bucket")
         )
@@ -1004,7 +996,6 @@ def nelson_aalen(
     ts_col: str = "ts",
     start_type: str = "signup",
     event_type: str = "purchase",
-    bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Nelson–Aalen cumulative hazard for start→event conversion —
     the sibling of :func:`kaplan_meier` on the SAME risk-set relation
@@ -1021,8 +1012,7 @@ def nelson_aalen(
     from pyspark.sql import Window
 
     risk = survival_risk_sets(
-        df, user_col, type_col, ts_col, start_type, event_type,
-        bucket_seconds,
+        df, user_col, type_col, ts_col, start_type, event_type
     )
     w_cum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
     return (

@@ -116,22 +116,22 @@ def add_expected_duration(
     )
 
 
-def label_threshold_flag(df: DataFrame, col: str, threshold, out_col: str,
-                         strict: bool = True) -> DataFrame:
+def label_threshold_flag(
+    df: DataFrame, col: str, threshold, out_col: str
+) -> DataFrame:
     """D7 (nyc_taxi_final.py:530-533): ``col > threshold → 1 else 0``."""
-    c = F.col(col)
-    pred = c > threshold if strict else c >= threshold
-    return df.withColumn(out_col, binary_flag(pred))
+    return df.withColumn(out_col, binary_flag(F.col(col) > threshold))
 
 
-def label_exceeds(df: DataFrame, col: str, reference_col: str, out_col: str,
-                  multiplier: float = 1.0) -> DataFrame:
-    """D8 (nyc_taxi_final.py:1052-1056): ``col > ref * multiplier``.
+def label_exceeds(
+    df: DataFrame, col: str, reference_col: str, out_col: str
+) -> DataFrame:
+    """D8 (nyc_taxi_final.py:1052-1056): ``col > ref * 1.0``.
 
     The reference's prose says "+10%" but the code multiplies by literally
-    1 — we implement the code semantics and expose the multiplier."""
+    1 — we implement the code semantics, multiplication included."""
     return df.withColumn(
-        out_col, binary_flag(F.col(col) > F.col(reference_col) * F.lit(multiplier))
+        out_col, binary_flag(F.col(col) > F.col(reference_col) * F.lit(1.0))
     )
 
 

@@ -32,10 +32,9 @@ def pagerank(
     damping_pct: int = 85,
     src_col: str = "src",
     dst_col: str = "dst",
-    base: int = RANK_BASE,
 ) -> DataFrame:
     """Fixed-iteration PageRank with INTEGER fixed-point mass — every
-    quantity is a BIGINT in units of ``1/base``, so the result is exact,
+    quantity is a BIGINT in units of ``1/RANK_BASE``, so the result is exact,
     order-independent, and cross-engine reproducible (float PageRank sums
     inflows in nondeterministic order; at nanorank resolution that flips
     low bits run-to-run — the same trap unigram_nll's nanonat
@@ -43,7 +42,7 @@ def pagerank(
 
     Per node v each round::
 
-        pr'(v) = ((100 - d) * (base div N) + d * inflow(v)) div 100
+        pr'(v) = ((100 - d) * (RANK_BASE div N) + d * inflow(v)) div 100
         inflow(v) = sum over in-edges (u, v) of  pr(u) div outdeg(u)
 
     Floor divisions truncate; the lost mass (< outdeg ulps per node per
@@ -53,8 +52,8 @@ def pagerank(
     mass conservation should densify the graph first (e.g. the
     bidirectional edges :func:`bipartite_edges` emits).
 
-    Output: (node, rank_nano) — one row per node, rank in ``1/base``
-    units as BIGINT.
+    Output: (node, rank_nano) — one row per node, rank in
+    ``1/RANK_BASE`` units as BIGINT.
 
     Scale shape: each iteration is (a) the edges relation joined to the
     current rank vector on ``src`` — both sides hash-partitioned on the
@@ -98,7 +97,7 @@ def pagerank(
     )
 
     pr = nodes.crossJoin(F.broadcast(n_row)).select(
-        "node", F.expr(f"{base} div _n").alias("_pr")
+        "node", F.expr(f"{RANK_BASE} div _n").alias("_pr")
     )
     for _ in range(iterations):
         contrib = (
@@ -113,7 +112,7 @@ def pagerank(
             .select(
                 "node",
                 F.expr(
-                    f"(({100 - damping_pct} * ({base} div _n))"
+                    f"(({100 - damping_pct} * ({RANK_BASE} div _n))"
                     f" + {damping_pct} * coalesce(_inflow, 0)) div 100"
                 ).alias("_pr"),
             )
@@ -129,7 +128,6 @@ def personalized_pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     seed_col: str = "node",
-    base: int = RANK_BASE,
 ) -> DataFrame:
     """Personalized (topic-sensitive) PageRank: identical integer
     fixed-point recurrence to :func:`pagerank`, but ALL teleport mass
@@ -140,7 +138,7 @@ def personalized_pagerank(
 
     Per node v each round (S = seed set)::
 
-        pr'(v) = ((100 - d) * (base div |S|) * [v in S] + d * inflow(v)) div 100
+        pr'(v) = ((100 - d) * (RANK_BASE div |S|) * [v in S] + d * inflow(v)) div 100
 
     Non-seed nodes with no inflow decay to 0 — correct PPR semantics,
     not a bug. Output, exactness contract and ``localCheckpoint``
@@ -171,7 +169,7 @@ def personalized_pagerank(
     seed_nodes = seed_nodes.localCheckpoint(eager=True)
     s_row = seed_nodes.agg(F.count(F.lit(1)).alias("_s"))
 
-    share = f"({base} div _s)"
+    share = f"({RANK_BASE} div _s)"
     pr = (
         nodes.join(seed_nodes, "node", "left")
         .crossJoin(F.broadcast(s_row))

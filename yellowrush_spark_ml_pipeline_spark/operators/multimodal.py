@@ -405,14 +405,13 @@ def _decode(payload: bytes, kind: str) -> list[float]:
     return _decode_stub(payload, kind)
 
 
-def encode_mp3_frames(
-    n_frames: int = 8, bitrate_idx: int = 9, rate_idx: int = 0,
-    id3_bytes: int = 0,
-) -> bytes:
-    """Minimal CBR MPEG1 Layer-III byte stream (test fixture): valid
-    4-byte frame headers with zeroed side-info/main data, optionally
-    preceded by an ID3v2 tag of ``id3_bytes`` payload — enough structure
-    for header probing; NOT decodable audio (the codec stays stubbed)."""
+def encode_mp3_frames(n_frames: int = 8, id3_bytes: int = 0) -> bytes:
+    """Minimal CBR MPEG1 Layer-III byte stream (test fixture) at 128 kbit/s
+    and 44.1 kHz: valid 4-byte frame headers with zeroed side-info/main
+    data, optionally preceded by an ID3v2 tag of ``id3_bytes`` payload —
+    enough structure for header probing; NOT decodable audio (the codec
+    stays stubbed)."""
+    bitrate_idx, rate_idx = 9, 0
     bitrate = _MP3_BITRATE_V1_L3[bitrate_idx]
     rate = _MP3_RATES[3][rate_idx]
     frame_len = 144 * bitrate * 1000 // rate
@@ -652,7 +651,7 @@ def probe_media(media: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame, batch_hint: int = 0) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode/featurize media payloads via Arrow-batched mapInPandas.
 
     The UDF consumes (media_id, kind, payload) batches and emits fixed-width
@@ -676,8 +675,6 @@ def extract_features(media: DataFrame, batch_hint: int = 0) -> DataFrame:
             )
 
     cols = media.select("media_id", "kind", "payload")
-    if batch_hint:
-        cols = cols.repartition(batch_hint)
     return cols.mapInPandas(featurize, FEATURES_SCHEMA)
 
 

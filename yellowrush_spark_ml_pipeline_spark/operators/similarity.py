@@ -129,13 +129,12 @@ def rrf_fuse(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
     k: int = 10,
-    rrf_k: int = 60,
     query_id_col: str = "query_id",
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Reciprocal-rank fusion of two rankers' candidate lists — the
     standard hybrid-retrieval combiner (Cormack et al.): score(d) =
-    Σ_systems 1/(rrf_k + rank_s(d)), robust to incomparable raw scores
+    Σ_systems 1/(60 + rank_s(d)), robust to incomparable raw scores
     (cosine vs L2 vs BM25) because only RANKS enter.
 
     Inputs are (query_id, id, rank) relations (e.g. two ``*_topk``
@@ -151,8 +150,8 @@ def rrf_fuse(
     b = ranked_b.select(query_id_col, id_col, F.col("rank").alias("_rb"))
     joined = a.join(b, [query_id_col, id_col], "full_outer")
     score = F.coalesce(
-        F.lit(1.0) / (F.lit(rrf_k) + F.col("_ra")), F.lit(0.0)
-    ) + F.coalesce(F.lit(1.0) / (F.lit(rrf_k) + F.col("_rb")), F.lit(0.0))
+        F.lit(1.0) / (F.lit(60) + F.col("_ra")), F.lit(0.0)
+    ) + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("_rb")), F.lit(0.0))
     return _topk(
         joined.withColumn("rrf_score", score),
         query_id_col, id_col, "rrf_score", k, descending=True,
@@ -204,7 +203,6 @@ def lsh_topk(
     query_id_col: str = "query_id",
     dim: int = 64,
     bucket_bits: int = 8,
-    seed: int = 42,
     probe_radius: int = 1,
 ) -> DataFrame:
     """Approximate cosine top-k: SRP-bucketed candidate generation, exact
@@ -216,8 +214,9 @@ def lsh_topk(
     fan-out multiplies only the QUERY side — tiny and broadcast — so
     corpus-side cost is unchanged while recall rises steeply (a neighbor at
     cosine 0.95 mismatches >=2 of 8 sign bits only ~6% of the time).
-    ``probe_radius=0`` restores single-bucket probing."""
-    planes = _srp_hyperplanes(dim, bucket_bits, seed)
+    ``probe_radius=0`` restores single-bucket probing.  The hyperplanes
+    are drawn from seed 42."""
+    planes = _srp_hyperplanes(dim, bucket_bits, 42)
     c = corpus.select(
         F.col(id_col), as_double_array(F.col(vec_col)).alias("_cv")
     ).withColumn("_bucket", srp_bucket(F.col("_cv"), planes))
@@ -255,24 +254,21 @@ def ivf_topk(
     query_id_col: str = "query_id",
     n_lists: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    max_iter: int = 8,
-    fit_fraction: float = 0.25,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the second scale path next
-    to SRP-LSH (`lsh_topk`).
+    to SRP-LSH (`lsh_topk`).  The quantizer is :func:`ivf_build_index` at
+    its defaults.
 
-    ``max_iter`` caps the quantizer's Lloyd iterations: recall depends on
-    probing the lists nearest the query, not on a fully-converged
-    clustering, and each iteration is a driver-coordinated job.
+    At most 8 Lloyd iterations: recall depends on probing the lists
+    nearest the query, not on a fully-converged clustering, and each
+    iteration is a driver-coordinated job.
 
-    ``fit_fraction`` bounds what the iterative quantizer ever reads: the
-    KMeans fit runs on a seed-pinned Bernoulli sample of the corpus, while
-    list assignment stays a single full scan. Coarse centroids only need
-    enough points to place ``n_lists`` cells over the data distribution, so
-    a sample is statistically sufficient — and at 100 TB it is the
-    difference between ``max_iter`` passes over a sample vs over the whole
-    corpus. ``fit_fraction=1.0`` restores a full-corpus fit.
+    The KMeans fit reads a seed-42 Bernoulli sample of a quarter of the
+    corpus, while list assignment stays a single full scan. Coarse
+    centroids only need enough points to place ``n_lists`` cells over the
+    data distribution, so a sample is statistically sufficient — and at
+    100 TB it is the difference between 8 passes over a sample vs over
+    the whole corpus.
     Search: each query probes its ``n_probe`` nearest centroids — the probe
     assignment happens on the tiny broadcast query side — and exact cosine
     runs only inside the probed lists, cutting scored candidates to
@@ -281,13 +277,7 @@ def ivf_topk(
     what makes IVF the standard billion-scale layout (FAISS-style).
     """
     assigned, centroids = ivf_build_index(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_lists=n_lists,
-        seed=seed,
-        max_iter=max_iter,
-        fit_fraction=fit_fraction,
+        corpus, id_col=id_col, vec_col=vec_col, n_lists=n_lists
     )
     # Query-side probe assignment: distances to all centroids as a literal
     # array (centroids are driver-small by construction), top-n_probe lists.
@@ -362,23 +352,22 @@ def ivf_build_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_lists: int = 16,
-    seed: int = 42,
-    max_iter: int = 8,
     fit_fraction: float = 0.25,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Fit the coarse quantizer (on a seed-pinned sample — see
-    :func:`ivf_topk`) and assign the whole corpus. Returns the assigned
-    index DataFrame (persist it as parquet partitioned by ``_list``) and
-    the centroid list (persist as JSON next to it). Rebuilds are rare,
-    scheduled events; daily ingest goes through :func:`ivf_assign`."""
+    """Fit the coarse quantizer (KMeans, seed 42, at most 8 iterations,
+    on a seed-42 sample — see :func:`ivf_topk`) and assign the whole
+    corpus. Returns the assigned index DataFrame (persist it as parquet
+    partitioned by ``_list``) and the centroid list (persist as JSON next
+    to it). Rebuilds are rare, scheduled events; daily ingest goes
+    through :func:`ivf_assign`."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     c = corpus.select(F.col(id_col), as_double_array(F.col(vec_col)).alias("_cv"))
     cv = c.withColumn("_features", array_to_vector("_cv"))
-    fit_df = cv if fit_fraction >= 1.0 else cv.sample(fraction=fit_fraction, seed=seed)
+    fit_df = cv if fit_fraction >= 1.0 else cv.sample(fraction=fit_fraction, seed=42)
     model = KMeans(
-        k=n_lists, seed=seed, maxIter=max_iter,
+        k=n_lists, seed=42, maxIter=8,
         featuresCol="_features", predictionCol="_list",
     ).fit(fit_df)
     assigned = model.transform(cv).select(id_col, "_cv", "_list")
@@ -426,11 +415,10 @@ def quantize_embeddings(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bits: int = 8,
 ) -> DataFrame:
-    """Per-vector scalar quantization to ``bits``-bit codes — the 4×
+    """Per-vector scalar quantization to 8-bit codes — the 4×
     (float32→int8) memory/IO reduction that makes billion-vector indexes
-    fit storage budgets. Each vector is min/max-scaled to [0, 2^bits-1]
+    fit storage budgets. Each vector is min/max-scaled to [0, 255]
     with its own (scale, offset) pair kept alongside for dequantization.
 
     Engine-portable arithmetic: codes are ``floor(x_norm * levels + 0.5)``
@@ -441,7 +429,7 @@ def quantize_embeddings(
     BEFORE the code transform: inlining them as expressions would embed
     array_min/array_max inside the per-element lambda after projection
     collapse — an O(dim²) scan per row (measured ~3× slower at dim=64)."""
-    levels = (1 << bits) - 1
+    levels = 255
     v = as_double_array(F.col(vec_col))
     vmin, vmax = F.array_min(v), F.array_max(v)
     scale = (vmax - vmin) / F.lit(float(levels))
@@ -1175,24 +1163,22 @@ def embedding_cosine_dedup(
     vec_col: str = "embedding",
     dim: int = 64,
     bucket_bits: "int | str" = 6,
-    seed: int = 42,
     n_tables: int = 1,
-    target_bucket_size: int = 64,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold, SRP-bucketed
     self-join (same-bucket pairs only). Normalized vectors → cosine is a
     plain dot product.
 
     ``bucket_bits="auto"`` derives the bit width from the CORPUS size —
-    ceil(log2(n / target_bucket_size)) — the same corpus-relative
+    ceil(log2(n / 64)) — the same corpus-relative
     discipline as the dedup tier's ``relative_cap``: a FIXED bit width
     makes the self-join quadratic no matter the content (2^b buckets ×
     (n/2^b)² pairs = n²/2^(b+1) — a round-8 three-decade probe measured
     embedding dedup going 2.78x on a 2x step from exactly this), while
-    auto bits hold expected bucket membership at ``target_bucket_size``
+    auto bits hold expected bucket membership at 64
     so candidates stay ~n·target/2 — linear. Deeper buckets lower
     per-table recall for borderline-cosine pairs, so auto mode pairs
-    with ``n_tables`` INDEPENDENT tables (seeded seed+t; candidates are
+    with ``n_tables`` INDEPENDENT tables (seeded 42+t; candidates are
     the distinct union): miss probability multiplies per table —
     P(candidate) = 1-(1-agree^b)^L with agree = 1-acos(cos)/π. Exact
     duplicates (cosine 1.0 — identical normalized vectors) collide in
@@ -1215,7 +1201,7 @@ def embedding_cosine_dedup(
     if bucket_bits == "auto":
         n = df.select(id_col).count()  # one tiny count job, like _resolve_cap
         bucket_bits = max(
-            6, math.ceil(math.log2(max(n / max(target_bucket_size, 1), 2)))
+            6, math.ceil(math.log2(max(n / 64, 2)))
         )
     v = df.select(
         F.col(id_col), normalize(as_double_array(F.col(vec_col))).alias("_v")
@@ -1230,7 +1216,7 @@ def embedding_cosine_dedup(
                         F.lit(t).alias("t"),
                         srp_bucket(
                             F.col("_v"),
-                            _srp_hyperplanes(dim, bucket_bits, seed + t),
+                            _srp_hyperplanes(dim, bucket_bits, 42 + t),
                         ).alias("b"),
                     )
                     for t in range(max(n_tables, 1))
@@ -1282,8 +1268,6 @@ def semantic_dedup(
     quantizer: str = "exact",
     n_lists: "int | str" = "auto",
     fit_fraction: float = 0.25,
-    seed: int = 42,
-    max_iter: int = 8,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     the corpus on the unit sphere, then prune within-cluster cosine
@@ -1359,7 +1343,7 @@ def semantic_dedup(
         F.col(id_col), normalize(as_double_array(F.col(emb_col))).alias("_v")
     ).localCheckpoint(eager=True)
     if quantizer == "ivf":
-        pts, _ = _ivf_points(v, id_col, n_lists, fit_fraction, seed, max_iter)
+        pts, _ = _ivf_points(v, id_col, n_lists, fit_fraction)
         return _semantic_prune(pts, threshold, id_col)
     if k == "auto":
         n = v.count()  # one tiny count job — documented eager exception
@@ -1378,8 +1362,6 @@ def _ivf_points(
     id_col: str,
     n_lists: "int | str",
     fit_fraction: float,
-    seed: int,
-    max_iter: int,
 ) -> "tuple[DataFrame, list[list[float]]]":
     """The sampled-fit IVF assignment both :func:`semantic_dedup` and
     :func:`semantic_dedup_build` prune over -> (pts, centroids), with
@@ -1396,8 +1378,6 @@ def _ivf_points(
         id_col=id_col,
         vec_col="_v",
         n_lists=int(n_lists),
-        seed=seed,
-        max_iter=max_iter,
         fit_fraction=fit_fraction,
     )
     # distance to the assigned centroid via a k-ROW broadcast join —
@@ -1479,8 +1459,6 @@ def semantic_dedup_build(
     quantizer: str = "exact",
     n_lists: "int | str" = "auto",
     fit_fraction: float = 0.25,
-    seed: int = 42,
-    max_iter: int = 8,
 ) -> "tuple[DataFrame, list[list[float]]]":
     """:func:`semantic_dedup` PLUS the frozen quantizer state — the
     build half of the incremental lifecycle.  Returns (audit,
@@ -1508,9 +1486,7 @@ def semantic_dedup_build(
         # fit ONCE here and reuse for audit + returned state — calling
         # semantic_dedup(quantizer="ivf") separately would re-fit and
         # (with MLlib's engine-internal init) could disagree
-        pts, centroids = _ivf_points(
-            v, id_col, n_lists, fit_fraction, seed, max_iter
-        )
+        pts, centroids = _ivf_points(v, id_col, n_lists, fit_fraction)
         return _semantic_prune(pts, threshold, id_col), centroids
     # exact path: run the Lloyd chain ONCE and derive BOTH halves from
     # it — the centroid list via kmeans_lloyd_centroids, the audit by
@@ -1865,7 +1841,6 @@ def class_centroids(
     df: DataFrame,
     group_col: str,
     emb_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Per-group embedding centroids in long format (group, dim, n,
     centroid_val) — the seed step of IVF/KMeans init, class-prototype
@@ -2064,16 +2039,15 @@ def quantized_recall(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    bits: int = 8,
 ) -> DataFrame:
     """Retrieval-quality eval of scalar quantization: per query, the
-    recall@k of cosine top-k over DEQUANTIZED ``bits``-bit codes against
-    full-precision top-k — the measurement that decides whether the 4x
-    int8 storage cut is safe for a given embedding space (the ANN-bench
-    protocol, run as one query). Both paths are deterministic (ties to
-    vec_id), so the oracle replays quantize -> dequantize -> rank ->
-    set-overlap exactly; the output is integer overlap counts, the most
-    drift-proof comparison there is.
+    recall@k of cosine top-k over DEQUANTIZED :func:`quantize_embeddings`
+    codes against full-precision top-k — the measurement that decides
+    whether the 4x int8 storage cut is safe for a given embedding space
+    (the ANN-bench protocol, run as one query). Both paths are
+    deterministic (ties to vec_id), so the oracle replays quantize ->
+    dequantize -> rank -> set-overlap exactly; the output is integer
+    overlap counts, the most drift-proof comparison there is.
 
     Output: (query_id, n_overlap, recall) with recall = n_overlap / k
     rounded to 4, one row per query, ordered by query_id.
@@ -2089,8 +2063,7 @@ def quantized_recall(
         corpus, queries, k, id_col=id_col, vec_col=vec_col,
         query_id_col=query_id_col,
     ).localCheckpoint(eager=True)
-    codes = quantize_embeddings(corpus, id_col=id_col, vec_col=vec_col,
-                                bits=bits)
+    codes = quantize_embeddings(corpus, id_col=id_col, vec_col=vec_col)
     deq = codes.select(
         F.col(id_col),
         F.transform(

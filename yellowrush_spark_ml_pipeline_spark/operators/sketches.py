@@ -202,8 +202,6 @@ CMS_WIDTH = 128
 def cms_heavy_hitters(
     df: DataFrame,
     key_col,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
     top_k: int = 20,
 ) -> DataFrame:
     """Count-Min Sketch (Cormode & Muthukrishnan 2005) heavy hitters with
@@ -212,35 +210,36 @@ def cms_heavy_hitters(
     token-frequency screens, rebuilt on the cross-engine `md5_hash60` +
     universal-hash contract so every counter is replayable in DuckDB.
 
-    Sketch: ``depth`` independent hash rows; row i maps a key to bucket
-    ``((a_i * h + b_i) mod p) mod width`` where h = md5_hash60(key) mod p
-    and (a_i, b_i) come from the deterministic coefficient generator
-    (functions/hashing.py, seed 7). A key's estimate is the MIN of its
-    ``depth`` bucket counters — always >= the true count (counters only
-    ever include extra colliding keys, never miss their own).
+    Sketch: ``CMS_DEPTH`` independent hash rows; row i maps a key to
+    bucket ``((a_i * h + b_i) mod p) mod CMS_WIDTH`` where
+    h = md5_hash60(key) mod p and (a_i, b_i) come from the deterministic
+    coefficient generator (functions/hashing.py, seed 7). A key's
+    estimate is the MIN of its ``CMS_DEPTH`` bucket counters — always
+    >= the true count (counters only ever include extra colliding keys,
+    never miss their own).
 
     Output, for the ``top_k`` keys by TRUE count (ties broken by key):
     (key, true_count, cms_count, overcount), ordered by true_count desc.
 
     Scale shape: the sketch is ONE combinable aggregation producing at
-    most depth*width rows NO MATTER the input size — the mergeable
+    most CMS_DEPTH*CMS_WIDTH rows NO MATTER the input size — the mergeable
     artifact a 100 TB pipeline keeps per (hour, source) and unions into
-    daily rollups. The probe side is top_k*depth rows joined against
+    daily rollups. The probe side is top_k*CMS_DEPTH rows joined against
     the tiny sketch (broadcast). Exact-truth comparison obviously
     re-scans (this is the verification-grade twin, like hll_distinct);
     production keeps only the sketch.
     """
     from ..functions.hashing import MINHASH_P, minhash_coefficients
 
-    coefs = minhash_coefficients(depth, seed=7)
+    coefs = minhash_coefficients(CMS_DEPTH, seed=7)
     keyed = df.select(F.col(key_col).cast("string").alias("key"))
     h = md5_hash60(F.col("key")) % F.lit(MINHASH_P)
 
     def bucket(i: int):
         a, b = coefs[i]
-        return ((F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)) % F.lit(width)
+        return ((F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)) % F.lit(CMS_WIDTH)
 
-    buckets = F.array(*[bucket(i) for i in range(depth)])
+    buckets = F.array(*[bucket(i) for i in range(CMS_DEPTH)])
     sketch = (
         keyed.select(F.posexplode(buckets).alias("_row", "_bucket"))
         .groupBy("_row", "_bucket")

@@ -132,12 +132,10 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("quality_score", F.round(composite, 2))
 
 
-def repetition_score(
-    df: DataFrame, text_col: str = "text", ngram: int = 3
-) -> DataFrame:
-    """Gopher-style repetition rule: fraction of n-gram occurrences taken
-    by the single most frequent n-gram (``top_ngram_frac``), plus the
-    distinct/total n-gram ratio (``ngram_diversity``). Looping/boilerplate
+def repetition_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Gopher-style repetition rule: fraction of word-3-gram occurrences
+    taken by the single most frequent 3-gram (``top_ngram_frac``), plus
+    the distinct/total 3-gram ratio (``ngram_diversity``). Looping/boilerplate
     text scores high on the former and low on the latter; natural prose
     stays near 1/total and ~1.0 respectively.
 
@@ -153,7 +151,7 @@ def repetition_score(
     df = ensure_scan_parallelism(df)  # spread unsplittable scans (guide 2.5)
     from ..functions.text import shingles, tokens
 
-    sh = shingles(tokens(F.col(text_col)), ngram)
+    sh = shingles(tokens(F.col(text_col)), 3)
     sorted_sh = F.array_sort(sh)
     # Longest run of equal adjacent values in the sorted array == count of
     # the most frequent n-gram; boundaries (x != prev) count distincts.
@@ -1009,14 +1007,13 @@ def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """BM25 keyword retrieval over the corpus: top-``k`` docs for a fixed
     term list, Lucene's non-negative idf variant
-    ``ln(1 + (N - df + 0.5)/(df + 0.5))``.
+    ``ln(1 + (N - df + 0.5)/(df + 0.5))`` with the standard k1 = 1.2 and
+    b = 0.75.
 
     Output: (id, n_terms_matched, score) — score rounded to 6 digits
     (the ln() is the one cross-engine last-ulp risk; every other step is
@@ -1059,6 +1056,7 @@ def bm25_topk(
         F.lit(1.0)
         + (F.col("_n") - F.col("_df") + F.lit(0.5)) / (F.col("_df") + F.lit(0.5))
     )
+    k1, b = 1.2, 0.75
     tf_part = (F.col("_tf") * F.lit(k1 + 1.0)) / (
         F.col("_tf")
         + F.lit(k1)
@@ -1419,7 +1417,6 @@ def bigram_nll(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lambda_milli: int = 700,
 ) -> DataFrame:
     """Per-document INTERPOLATED bigram language-model score — the
     next-order sibling of :func:`unigram_nll`: each bigram (w1, w2)
@@ -1462,7 +1459,7 @@ def bigram_nll(
     ctx = bg.groupBy("_w1").agg(F.sum("_c_bg").alias("_c_w1"))
     uni = bg.groupBy("_w2").agg(F.sum("_c_bg").alias("_c_w2"))
     total = ctx.agg(F.sum("_c_w1").alias("_n"))
-    lm, lc = lambda_milli, 1000 - lambda_milli
+    lm, lc = 700, 300
     prob = (
         F.expr(
             f"CAST(CAST({lm} AS DECIMAL(38,0)) * _c_bg * _n"
@@ -1499,11 +1496,16 @@ def bigram_nll(
     )
 
 
+# Words are cut to this many characters before any BPE step.  Training,
+# vocabulary, audit and the saved tokenizer share it, so an encode with
+# the saved value replays training exactly.
+BPE_MAX_WORD_LEN = 24
+
+
 def bpe_merge_rounds(
     docs: DataFrame,
     text_col: str = "text",
     rounds: int = 3,
-    max_word_len: int = 24,
 ) -> DataFrame:
     """Distributed byte-pair-encoding TRAINING rounds (Sennrich et al.
     2016) — the tokenizer-fitting step of an LLM data pipeline, run as
@@ -1516,7 +1518,7 @@ def bpe_merge_rounds(
     is string ``replace(' l r ' -> ' lr ')`` applied 5 times — leftmost
     non-overlapping replace defers an occurrence that shares a
     separator with a just-merged neighbor to the next pass, and 5
-    passes reach the fixpoint for words <= ``max_word_len`` chars
+    passes reach the fixpoint for words <= ``BPE_MAX_WORD_LEN`` chars
     (occurrences per word <= 12, halved per pass). The fixpoint equals
     canonical left-to-right greedy BPE (verified against a pure-Python
     reference in tests); replace() has identical leftmost semantics in
@@ -1536,7 +1538,7 @@ def bpe_merge_rounds(
     wf = (
         docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
         .filter(F.col("w") != "")
-        .select(F.substring("w", 1, max_word_len).alias("word"))
+        .select(F.substring("w", 1, BPE_MAX_WORD_LEN).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -1685,13 +1687,12 @@ def bpe_vocab(
     rounds: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_word_len: int = 24,
 ) -> DataFrame:
     """The (token_id, sym) vocabulary a :func:`bpe_encode` run produces —
     the relation :func:`bpe_decode` inverts ids through. Deterministic:
     distinct encoded symbols of the corpus dictionary, id = row_number by
     symbol, so the same (corpus, merges) always yields the same table."""
-    dw = _bpe_doc_words(docs, text_col, id_col, max_word_len)
+    dw = _bpe_doc_words(docs, text_col, id_col, BPE_MAX_WORD_LEN)
     enc = _bpe_encode_words(dw, merges, rounds)
     return _bpe_vocab_of(enc).select(
         F.col("_tid").alias("token_id"), F.col("_s").alias("sym")
@@ -1748,7 +1749,6 @@ def bpe_roundtrip_audit(
     rounds: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_word_len: int = 24,
 ) -> DataFrame:
     """Tokenizer-lifecycle closure audit: ENCODE the corpus with the
     trained merges, DECODE the token ids back through the vocabulary,
@@ -1766,14 +1766,12 @@ def bpe_roundtrip_audit(
     wrong vocabulary id, a dropped token, or an order bug all flip
     ``roundtrip_ok`` — and the DuckDB oracle replays train + encode +
     decode end-to-end, so the flag itself is differentially checked."""
-    dw = _bpe_doc_words(docs, text_col, id_col, max_word_len)
+    dw = _bpe_doc_words(docs, text_col, id_col, BPE_MAX_WORD_LEN)
     enc_words = _bpe_encode_words(dw, merges, rounds)
     vocab = _bpe_vocab_of(enc_words).select(
         F.col("_tid").alias("token_id"), F.col("_s").alias("sym")
     )
-    encoded = bpe_encode(
-        docs, merges, rounds, text_col, id_col, max_word_len
-    )
+    encoded = bpe_encode(docs, merges, rounds, text_col, id_col)
     dec = bpe_decode(encoded, vocab, id_col)
     orig = dw.groupBy(id_col).agg(
         F.concat_ws(
@@ -1804,7 +1802,7 @@ def bpe_encode(
     rounds: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_word_len: int = 24,
+    max_word_len: int = BPE_MAX_WORD_LEN,
     vocab: "DataFrame | None" = None,
 ) -> DataFrame:
     """Apply a trained BPE merge list (:func:`bpe_merge_rounds` output)
@@ -1917,7 +1915,6 @@ def save_tokenizer(
     vocab: DataFrame,
     path: str,
     rounds: int,
-    max_word_len: int = 24,
 ) -> None:
     """Persist a trained BPE tokenizer as a VERSIONED parquet artifact —
     the S7 model-sink analogue for the tokenizer lifecycle (train once,
@@ -1927,7 +1924,8 @@ def save_tokenizer(
     :func:`bpe_merge_rounds` table — merge_round, left_sym, right_sym,
     pair_count), ``vocab.parquet`` (the :func:`bpe_vocab` table —
     token_id, sym), and ``meta.json`` pinning ``format_version``,
-    ``rounds`` and ``max_word_len`` so a loader can refuse artifacts
+    ``rounds`` and ``max_word_len`` (``BPE_MAX_WORD_LEN``, the cut the
+    merges were trained at) so a loader can refuse artifacts
     written by an incompatible future layout instead of silently
     mis-encoding.  Both relations are parameter-sized (R merge rows,
     |vocab| symbol rows), so overwrite-mode parquet writes are trivial
@@ -1943,7 +1941,7 @@ def save_tokenizer(
         {
             "format_version": TOKENIZER_FORMAT_VERSION,
             "rounds": int(rounds),
-            "max_word_len": int(max_word_len),
+            "max_word_len": BPE_MAX_WORD_LEN,
         },
     )
 

@@ -156,13 +156,12 @@ def rolling_zscore(
     ts_col: str = "ts",
     value_col: str = "value",
     window_days: int = 7,
-    z_threshold: float = 2.0,
 ) -> DataFrame:
     """Rolling z-score anomaly flag over a daily series per key: each
     day's mean is scored against the trailing ``window_days`` window's
     mean/stddev (population variance over the frame, computed from exact
     DECIMAL sum and sum-of-squares so the aggregation order cannot change
-    the double result), and flagged when |z| > ``z_threshold``.
+    the double result), and flagged when |z| > 2.
 
     The variance uses E[x^2] - E[x]^2 on cent-exact sums — every float op
     is a fixed-shape expression over exact integers, so the score is
@@ -207,7 +206,7 @@ def rolling_zscore(
         "day_mean",
         F.round(mean, 6).alias("roll_mean"),
         F.round(z, 6).alias("zscore"),
-        F.coalesce(F.abs(z) > F.lit(z_threshold), F.lit(False)).alias("anomaly"),
+        F.coalesce(F.abs(z) > F.lit(2.0), F.lit(False)).alias("anomaly"),
     )
 
 
@@ -218,7 +217,6 @@ def seasonal_decompose(
     step_seconds: int = 3600,
     period: int = 24,
     trend_half_window: int = 12,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Classical additive seasonal decomposition on a resampled grid:
     ``value = trend + seasonal + residual`` — trend from a centered
@@ -227,7 +225,7 @@ def seasonal_decompose(
     "is this spike load growth, time-of-day, or an anomaly".
 
     Output: (bucket, v, trend, seasonal, residual) per grid step,
-    doubles rounded to ``round_digits``.
+    doubles rounded to 6 digits.
 
     Exactness: grid sums accumulate in DECIMAL; the centered moving
     average divides a decimal-exact windowed sum by its row count
@@ -275,7 +273,7 @@ def seasonal_decompose(
         .cast("decimal(28,8)")
         .alias("_seasonal_dec")
     )
-    r = lambda c: F.round(c, round_digits)  # noqa: E731
+    r = lambda c: F.round(c, 6)  # noqa: E731
     # seasonal/residual go through DECIMAL truncation + exact decimal
     # subtraction instead of a final double ROUND: a residual landing on
     # the half-way boundary flips between engines' tie handling (the
@@ -348,9 +346,8 @@ def autocorrelation(
     df: DataFrame,
     ts_col: str = "ts",
     max_lag: int = 3,
-    bucket_seconds: int = 3600,
 ) -> DataFrame:
-    """Lag-1..max_lag autocorrelation of the bucketed event-count
+    """Lag-1..max_lag autocorrelation of the hourly event-count
     series, in EXACT integer arithmetic: counts are integers, so every
     Pearson moment (n·Σxy−ΣxΣy, n·Σx²−(Σx)², n·Σy²−(Σy)²) is a BIGINT,
     and the signed squared correlation ships as sign(num)·(num²·1e6 div
@@ -367,7 +364,7 @@ def autocorrelation(
     hourly = (
         df.select(
             (
-                F.floor(F.unix_timestamp(F.col(ts_col)) / bucket_seconds)
+                F.floor(F.unix_timestamp(F.col(ts_col)) / 3600)
             ).alias("bucket")
         )
         .groupBy("bucket")
@@ -574,21 +571,19 @@ def theil_sen(
 def seasonal_naive_backtest(
     df: DataFrame,
     ts_col: str = "ts",
-    bucket_seconds: int = 3600,
-    season: int = 24,
 ) -> DataFrame:
     """Backtest of the two canonical zero-parameter forecasters on the
-    bucketed count series — naive (ŷ=y[t−1]) and seasonal-naive
-    (ŷ=y[t−season]) — the baselines every forecasting deployment must
-    beat. Exact integer scoring: absolute errors sum in BIGINT, sMAPE
-    terms are (2e6·|y−ŷ|) div (y+ŷ) per point (0 when both zero),
-    averaged by integer division. One bounded ordered window (the
+    hourly count series — naive (ŷ=y[t−1]) and seasonal-naive
+    (ŷ=y[t−24], the daily season) — the baselines every forecasting
+    deployment must beat. Exact integer scoring: absolute errors sum in
+    BIGINT, sMAPE terms are (2e6·|y−ŷ|) div (y+ŷ) per point (0 when both
+    zero), averaged by integer division. One bounded ordered window (the
     bucketed series), one global row out per model."""
     from pyspark.sql import Window
 
     hourly = (
         df.select(
-            F.floor(F.unix_timestamp(F.col(ts_col)) / bucket_seconds).alias(
+            F.floor(F.unix_timestamp(F.col(ts_col)) / 3600).alias(
                 "bucket"
             )
         )
@@ -599,7 +594,7 @@ def seasonal_naive_backtest(
     preds = hourly.select(
         "y",
         F.lag("y", 1).over(w).alias("p_naive"),
-        F.lag("y", season).over(w).alias("p_seasonal"),
+        F.lag("y", 24).over(w).alias("p_seasonal"),
     )
     def _score(pred_col: str, model: str) -> DataFrame:
         p = preds.filter(F.col(pred_col).isNotNull()).select(
@@ -632,9 +627,8 @@ def ohlc_bars(
     ts_col: str = "ts",
     value_col: str = "value",
     id_col: str = "event_id",
-    bucket_seconds: int = 3600,
 ) -> DataFrame:
-    """OHLC (open/high/low/close) candlestick bars per time bucket —
+    """OHLC (open/high/low/close) candlestick bars per hour bucket —
     the financial-style first/last/extremes rollup. Open/close come
     from row_number over (ts, id) ascending/descending inside the
     bucket (deterministic under timestamp ties), high/low/volume from
@@ -644,7 +638,7 @@ def ohlc_bars(
 
     cents = (F.col(value_col).cast("decimal(12,2)") * 100).cast("bigint")
     base = df.select(
-        F.floor(F.unix_timestamp(F.col(ts_col)) / bucket_seconds)
+        F.floor(F.unix_timestamp(F.col(ts_col)) / 3600)
         .cast("bigint")
         .alias("bucket"),
         F.col(ts_col).alias("_ts"),
@@ -679,9 +673,8 @@ def ohlc_bars(
 def cusum_changepoint(
     df: DataFrame,
     ts_col: str = "ts",
-    bucket_seconds: int = 3600,
 ) -> DataFrame:
-    """CUSUM changepoint locator on the bucketed count series: the
+    """CUSUM changepoint locator on the hourly count series: the
     bucket where the cumulative deviation from the global mean peaks in
     magnitude. Exact integers throughout — the mean never materializes:
     S_t = n·prefix_t − t·total (cross-multiplied CUSUM, DECIMAL(38,0)),
@@ -691,7 +684,7 @@ def cusum_changepoint(
 
     hourly = (
         df.select(
-            F.floor(F.unix_timestamp(F.col(ts_col)) / bucket_seconds)
+            F.floor(F.unix_timestamp(F.col(ts_col)) / 3600)
             .cast("bigint")
             .alias("bucket")
         )
@@ -787,17 +780,14 @@ def range_window_stats(
 def bollinger_bands(
     df: DataFrame,
     ts_col: str = "ts",
-    bucket_seconds: int = 3600,
-    window_buckets: int = 24,
-    k: int = 2,
 ) -> DataFrame:
     """Bollinger-band breach detection on the hourly count series, in
     EXACT integer arithmetic: each bucket's count x is scored against
-    the trailing ``window_buckets`` observed buckets' mean/variance,
-    and flagged when |x - mean| > k·stddev — but the comparison is the
-    cross-multiplied square
+    the trailing 24 observed buckets' mean/variance, and flagged when
+    |x - mean| > 2·stddev — but the comparison is the cross-multiplied
+    square
 
-        (m·x - S)² > k² · (m·Q - S²)   [m buckets, S = Σx, Q = Σx²]
+        (m·x - S)² > 2² · (m·Q - S²)   [m buckets, S = Σx, Q = Σx²]
 
     so no division, no sqrt, no float — bit-identical in any engine,
     and immune to the near-boundary rounding flips a float z-score
@@ -811,7 +801,7 @@ def bollinger_bands(
     from pyspark.sql import Window
 
     secs = F.unix_timestamp(F.col(ts_col))
-    bucket = secs - (secs % F.lit(bucket_seconds))
+    bucket = secs - (secs % F.lit(3600))
     grid = (
         df.select(bucket.alias("bucket_epoch"))
         .groupBy("bucket_epoch")
@@ -819,7 +809,7 @@ def bollinger_bands(
     )
     w = (
         Window.orderBy("bucket_epoch")
-        .rowsBetween(-(window_buckets - 1), 0)
+        .rowsBetween(-23, 0)
     )
     stats = grid.select(
         "bucket_epoch",
@@ -832,10 +822,10 @@ def bollinger_bands(
     )
     dev = F.expr("CAST(m AS DECIMAL(38,0)) * x - s")
     breach = F.expr(
-        f"CAST((CAST(m AS DECIMAL(38,0)) * x - s)"
-        f" * (CAST(m AS DECIMAL(38,0)) * x - s) AS DECIMAL(38,0))"
-        f" > CAST({k * k} AS DECIMAL(38,0))"
-        f" * (CAST(m AS DECIMAL(38,0)) * _q - CAST(s AS DECIMAL(38,0)) * s)"
+        "CAST((CAST(m AS DECIMAL(38,0)) * x - s)"
+        " * (CAST(m AS DECIMAL(38,0)) * x - s) AS DECIMAL(38,0))"
+        " > CAST(4 AS DECIMAL(38,0))"
+        " * (CAST(m AS DECIMAL(38,0)) * _q - CAST(s AS DECIMAL(38,0)) * s)"
     )
     return stats.select(
         "bucket_epoch",

@@ -13,9 +13,10 @@ import re
 from pyspark.sql import DataFrame
 
 
-def explain_str(df: DataFrame, mode: str = "formatted") -> str:
+def explain_str(df: DataFrame) -> str:
+    """The physical plan as ``EXPLAIN FORMATTED`` prints it."""
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), mode
+        df._jdf.queryExecution(), "formatted"
     )
 
 

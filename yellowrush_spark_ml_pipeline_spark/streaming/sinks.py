@@ -21,13 +21,13 @@ def stream_to_parquet(
     output_path: str,
     checkpoint_path: str,
     partition_cols: list[str] | None = None,
-    trigger_available_now: bool = True,
     transform: Callable[[DataFrame], DataFrame] | None = None,
 ) -> StreamingQuery:
     """Land a stream as parquet through foreachBatch: the batch writer
     handles layout (optional hive partitioning), the checkpoint makes
-    epochs replayable. ``transform`` runs per batch — the hook for the
-    engine's batch operators inside a stream."""
+    epochs replayable.  The query runs with ``availableNow``: it drains
+    the input present at start, then stops. ``transform`` runs per
+    batch — the hook for the engine's batch operators inside a stream."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         out = transform(batch_df) if transform else batch_df
@@ -36,10 +36,9 @@ def stream_to_parquet(
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(output_path)
 
-    writer = (
+    return (
         stream_df.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

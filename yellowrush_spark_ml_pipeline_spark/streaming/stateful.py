@@ -32,11 +32,11 @@ def streaming_dedup(
     dedup_cols: list[str] | None = None,
     ts_col: str | None = None,
     watermark: str = "1 hour",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Streaming exact deduplication: ``dropDuplicates`` backed by the
     state store, so a duplicate arriving in a LATER micro-batch is still
-    suppressed (state remembers seen keys).
+    suppressed (state remembers seen keys).  One source file per
+    micro-batch.
 
     With ``ts_col`` set, uses ``dropDuplicatesWithinWatermark``: a
     duplicate key arriving within the watermark delay is dropped and the
@@ -46,7 +46,7 @@ def streaming_dedup(
     acceptable for bounded backfills)."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_path)
     )
     if ts_col is not None:
@@ -62,10 +62,10 @@ def streaming_enrich(
     dim: "DataFrame",
     on: str,
     how: str = "left",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Stream-static enrichment join: every micro-batch joins the live
-    stream against a static dimension (user profile, weather, parts).
+    """Stream-static enrichment join: every micro-batch (one source file)
+    joins the live stream against a static dimension (user profile,
+    weather, parts).
 
     The static side is broadcast — per micro-batch there is no shuffle of
     the stream, exactly the J2/D9 pattern lifted to streaming. The dim is
@@ -73,7 +73,7 @@ def streaming_enrich(
     changing updates without restarting the query."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_path)
     )
     from pyspark.sql import functions as F
@@ -88,7 +88,6 @@ def streaming_interval_join(
     schema: StructType,
     key_col: str = "user_id",
     ts_col: str = "ts",
-    watermark: str = "30 minutes",
     max_delay: str = "1 hour",
     left_type: str | None = None,
     right_type: str | None = None,
@@ -98,9 +97,9 @@ def streaming_interval_join(
     within ``(left.ts, left.ts + max_delay]`` for the same key —
     click→purchase attribution as two live streams.
 
-    Both sides carry watermarks and the join condition is a closed time
-    range, which is what lets Spark BOUND THE JOIN STATE: each side's
-    buffered rows are dropped once the other side's watermark passes
+    Both sides carry 30-minute watermarks and the join condition is a
+    closed time range, which is what lets Spark BOUND THE JOIN STATE:
+    each side's buffered rows are dropped once the other side's watermark passes
     ts + max_delay. Without the range condition the state grows forever —
     that, not correctness, is why unconstrained stream-stream equi-joins
     are rejected for append output. State size is O(events inside the
@@ -111,7 +110,7 @@ def streaming_interval_join(
         s = (
             spark.readStream.schema(schema)
             .parquet(path)
-            .withWatermark(ts_col, watermark)
+            .withWatermark(ts_col, "30 minutes")
         )
         if flt is not None:
             s = s.filter(F.col(type_col) == flt)
@@ -303,17 +302,14 @@ def streaming_near_dup_candidates(
     schema: StructType,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    max_bucket_size: int = 50,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Streaming MinHash-LSH near-duplicate candidates: the incremental
     dedup shape (new batch vs everything already seen) as a continuous
     stream. Emits (id_a, id_b, band_id) candidate pairs the moment the
     later document arrives — verify with the exact Jaccard join
-    downstream (batch or foreachBatch).
+    downstream (batch or foreachBatch).  Signatures are 32 xxhash64
+    minima over word 3-gram shingles, banded 8 x 4.
 
     Plan shape: signatures are computed PER ROW with the narrow
     ``array_min(transform(...))`` formulation — deliberately the
@@ -322,7 +318,7 @@ def streaming_near_dup_candidates(
     chaining stateful ops is where streaming plans go to die). Banding
     explodes each doc to its ``bands`` bucket rows, and the ONLY
     stateful hop keys the state store by (band_id, band_hash): state is
-    the bucket's member id list, capped at ``max_bucket_size`` — the
+    the bucket's member id list, capped at 50 ids — the
     same boilerplate-skew guard as the batch tier, which here also
     bounds per-key state memory. Total state is O(docs x bands) ids —
     at 100 TB/day you add a TTL (GroupStateTimeout) so buckets idle past
@@ -334,6 +330,7 @@ def streaming_near_dup_candidates(
 
     from ..functions.text import shingles, tokens
 
+    num_hashes, bands, shingle_n, max_bucket_size = 32, 8, 3, 50
     sh = F.array_distinct(shingles(tokens(F.col(text_col)), shingle_n))
     mins = F.array(
         *[
@@ -422,7 +419,6 @@ def streaming_semantic_dedup(
     threshold: float = 0.9,
     emb_col: str = "embedding",
     id_col: str = "vec_id",
-    max_cluster_members: int = 512,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Streaming SemDeDup — the embedding-tier member of the stateful
@@ -435,7 +431,7 @@ def streaming_semantic_dedup(
     centroid literals (the ``ivf_assign`` expression — no shuffle, no
     Python).  The ONE stateful hop keys the state store by cluster_id;
     state is the cluster's kept members — (ids, normalized vectors),
-    capped at ``max_cluster_members``.  An arriving doc is judged
+    capped at 512 members.  An arriving doc is judged
     against the stored members (cosine >= ``threshold`` -> pruned,
     emitting the incumbent that claimed it); survivors are appended to
     state and emitted with ``keep = 1``.
@@ -465,6 +461,7 @@ def streaming_semantic_dedup(
 
     from ..functions.vector import as_double_array, normalize
 
+    max_cluster_members = 512
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
