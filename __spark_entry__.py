@@ -4896,20 +4896,242 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # --------------------------------------------------------------------------
-# Parameterized oracle builders for the ITERATIVE operators. Each generates
-# a DuckDB CTE chain unrolled to the requested round count, mirroring the
-# corresponding Spark loop round for round in integer/decimal fixed-point —
-# so the comparison is exact at ANY count. oracle_sql() consumes them at the
-# registry configs; tests/test_recurrence_probes.py re-runs both engines at
-# ALTERNATE counts so the recurrence itself (not one unrolling) is
-# differentially verified.
+# DuckDB oracle fragments. oracle_sql() maps each oracle-backed query to
+# the DuckDB SQL that recomputes its result; the correctness gate hash-
+# matches the two engines. Every CTE chain that more than one oracle
+# replays is built by exactly one function below, and its docstring names
+# the keys that use it. The iterative chains mirror the Spark loop round
+# for round in integer or decimal fixed-point, so the comparison is exact
+# at any round count: oracle_sql() calls the public oracle_* generators at
+# the registry configs, and tests/test_recurrence_probes.py re-runs both
+# engines at alternate counts.
 
 
-def _trade_graph_head_sql(base: int) -> str:
+def _h60(x: str) -> str:
+    """md5_hash60 of the VARCHAR expression ``x`` (functions/hashing.py):
+    the first 15 hex digits of its md5 as a BIGINT."""
+    return f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
+
+
+def _lehmer_micro(x: str) -> str:
+    """The MINSTD Lehmer hash of integer ``x`` mod 10^6 (cleaning.py's
+    deterministic per-row coin, compared against a rate in micro-units)."""
+    return f"(({x} % 2147483647) * 48271) % 2147483647 % 1000000"
+
+
+def _dec_mean(v: str) -> str:
+    """Per-group mean of the DOUBLE ``v``: the sum is taken in 18-place
+    decimals and the quotient rounded to 8 places, so the mean does not
+    depend on summation order. Used by the Lloyd updates,
+    embedding_dim_stats and embedding_centroids."""
+    return (
+        f"CAST(CAST(CAST(SUM(CAST({v} AS DECIMAL(28,18))) AS DOUBLE)\n"
+        "                             / COUNT(*) AS DECIMAL(28,8)) AS DOUBLE)"
+    )
+
+
+# One line's discounted price, l_extendedprice * (1 - l_discount), as an
+# exact DECIMAL(18,4) product, and its SUM back as a DOUBLE: the revenue
+# term of the TPC-H-shaped oracles (pricing_summary, regional_revenue,
+# local_supplier_volume, trade_volume, returned_customers,
+# shipping_priority, market_share, ...).
+_DISC_PRICE = """CAST(CAST(l_extendedprice AS DECIMAL(12,2))
+                                 * CAST(1 - l_discount AS DECIMAL(4,2))
+                            AS DECIMAL(18,4))"""
+_DISC_REVENUE = f"CAST(SUM({_DISC_PRICE}) AS DOUBLE)"
+
+
+def _quality_features(cols: str, src: str) -> str:
+    """The per-doc inputs of textstats.quality_score over ``src`` (which
+    must expose ``text``), next to the columns ``cols``: character count,
+    punctuation and digit counts, the lower-cased word list and its
+    stopword hits. Read by _QUALITY_SCORE in text_quality, corpus_stats,
+    mixture_allocation and the curate_* / export_* chains."""
+    return rf"""SELECT {cols},
+                       length(text) AS n_chars_c,
+                       length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS punct,
+                       length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS digits,
+                       list_filter(regexp_split_to_array(lower(text), '[^\p{{L}}\p{{N}}]+'), t -> t <> '') AS toks,
+                       len(list_filter(
+                           list_filter(regexp_split_to_array(lower(text), '[^\p{{L}}\p{{N}}]+'), t -> t <> ''),
+                           t -> list_contains(['the','and','of','to','a','in','is','that'], t))) AS stop_hits
+                FROM {src}"""
+
+
+# textstats.quality_score over the _quality_features columns: four 0.25
+# checks (word count, punctuation ratio, stopword ratio, mean word length),
+# each on the 6-place rounded ratio the Spark side compares.
+_QUALITY_SCORE = """ROUND(
+                       (CASE WHEN len(toks) BETWEEN 5 AND 100000 THEN 0.25 ELSE 0.0 END)
+                     + (CASE WHEN ROUND(punct / greatest(n_chars_c, 1), 6) <= 0.2 THEN 0.25 ELSE 0.0 END)
+                     + (CASE WHEN ROUND(stop_hits / greatest(len(toks), 1), 6) >= 0.01 THEN 0.25 ELSE 0.0 END)
+                     + (CASE WHEN ROUND(CASE WHEN len(toks) > 0
+                                  THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks)
+                                  ELSE 0.0 END, 6) BETWEEN 2 AND 12 THEN 0.25 ELSE 0.0 END),
+                   2)"""
+
+
+# events.sessionize: a new session starts at a user's first event or after
+# a gap of more than 1800 s; session_id is the running count of starts.
+# The ``s`` CTE of session_stats, top_paths and co_visitation.
+_SESSIONS = """s AS (
+                SELECT event_id, user_id, event_type, ts,
+                       CAST(SUM(brk) OVER (PARTITION BY user_id
+                                           ORDER BY ts, event_id
+                                           ROWS UNBOUNDED PRECEDING)
+                            AS BIGINT) AS session_id
+                FROM (
+                    SELECT event_id, user_id, event_type, ts,
+                           CASE WHEN LAG(ts) OVER (PARTITION BY user_id
+                                                   ORDER BY ts, event_id)
+                                     IS NULL
+                                     OR floor(epoch(ts))
+                                        - floor(epoch(LAG(ts) OVER (
+                                            PARTITION BY user_id
+                                            ORDER BY ts, event_id))) > 1800
+                                THEN 1 ELSE 0 END AS brk
+                    FROM events
+                )
+            )"""
+
+
+def _lang_id_sql(cols: str, src: str) -> str:
+    """The stopword-vote language-ID heuristic over the docs of ``src``
+    (which must expose ``text``), next to the columns ``cols``: per-doc
+    stopword hits for de/en/es/fr and CJK particle counts for zh, the
+    highest vote winning (ties in the order zh, fr, es, en, de). Used by
+    language_id and the curate_* / export_* chains."""
+    return rf"""
+            SELECT {cols},
+                   CASE
+                     WHEN s_zh >= s_fr AND s_zh >= s_es AND s_zh >= s_en AND s_zh >= s_de THEN 'zh'
+                     WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
+                     WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
+                     WHEN s_en >= s_de THEN 'en'
+                     ELSE 'de'
+                   END AS lang_pred
+            FROM (
+                SELECT {cols},
+                       len(list_filter(toks, t -> list_contains(['der','die','und','das','ist','nicht','ein','zu'], t))) AS s_de,
+                       len(list_filter(toks, t -> list_contains(['the','and','of','to','a','in','is','that'], t))) AS s_en,
+                       len(list_filter(toks, t -> list_contains(['el','la','de','que','y','los','en','un'], t))) AS s_es,
+                       len(list_filter(toks, t -> list_contains(['le','la','et','les','des','un','une','est'], t))) AS s_fr,
+                         (length(text) - length(regexp_replace(text, '的', '', 'g')))
+                       + (length(text) - length(regexp_replace(text, '是', '', 'g')))
+                       + (length(text) - length(regexp_replace(text, '了', '', 'g')))
+                       + (length(text) - length(regexp_replace(text, '在', '', 'g')))
+                       + (length(text) - length(regexp_replace(text, '我', '', 'g')))
+                       + (length(text) - length(regexp_replace(text, '有', '', 'g')))
+                       + (length(text) - length(regexp_replace(text, '和', '', 'g')))
+                       + (length(text) - length(regexp_replace(text, '不', '', 'g'))) AS s_zh
+                FROM (
+                    SELECT {cols}, text,
+                           list_filter(regexp_split_to_array(lower(text), '[^\p{{L}}\p{{N}}]+'), t -> t <> '') AS toks
+                    FROM {src}
+                )
+            )"""
+
+
+# Time to first purchase after signup, in whole hours, censored at the last
+# event: per-hour event and censoring counts and the at-risk count before
+# each hour. The head of kaplan_meier and nelson_aalen.
+_SURVIVAL_RISK = """starts AS (
+                SELECT user_id, MIN(ts) AS s FROM events
+                WHERE event_type = 'signup' GROUP BY 1
+            ), fc AS (
+                SELECT st.user_id, st.s, MIN(e.ts) AS p
+                FROM starts st LEFT JOIN events e
+                  ON e.user_id = st.user_id
+                 AND e.event_type = 'purchase' AND e.ts >= st.s
+                GROUP BY 1, 2
+            ), endt AS (SELECT MAX(ts) AS e FROM events),
+            durs AS (
+                SELECT CAST(FLOOR((FLOOR(epoch(COALESCE(p, endt.e)))
+                                   - FLOOR(epoch(s))) / 3600)
+                            AS BIGINT) AS t,
+                       CASE WHEN p IS NOT NULL THEN 1 ELSE 0 END AS is_event
+                FROM fc CROSS JOIN endt
+            ), per_t AS (
+                SELECT t, SUM(is_event) AS n_events,
+                       SUM(1 - is_event) AS n_censored
+                FROM durs GROUP BY t
+            ), tot AS (
+                SELECT SUM(n_events + n_censored) AS n_total FROM per_t
+            ), risk AS (
+                SELECT t, n_events, n_censored,
+                       n_total - COALESCE(SUM(n_events + n_censored) OVER (
+                           ORDER BY t
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                       ), 0) AS n_risk
+                FROM per_t CROSS JOIN tot
+            )"""
+
+
+# The distinct word 8-grams of each doc (lower-cased, split on non-
+# alphanumerics; a doc shorter than 8 words is one gram). The head of
+# decontaminate and boilerplate_spans.
+_DOC_GRAMS8 = r"""toks AS (
+                SELECT doc_id,
+                       list_filter(string_split_regex(lower(text), '[^\p{L}\p{N}]+'),
+                                   x -> x != '') AS toks
+                FROM documents
+            ), doc_grams AS (
+                SELECT DISTINCT doc_id, gram FROM (
+                    SELECT doc_id,
+                           unnest(list_transform(
+                               range(0, greatest(len(toks) - 8, 0) + 1),
+                               i -> array_to_string(toks[i+1:i+8], ' '))) AS gram
+                    FROM toks
+                ) WHERE gram <> ''
+            )"""
+
+
+def _temperature_rates(src: str, target: str, cap: str) -> str:
+    """per -> sm -> tot -> rr: the temperature-mixture rates of the sources
+    of ``src``. Each source weighs s_micro = floor(sqrt(n_docs) * 10^6);
+    its rate_micro is min(cap, target * s_micro * 10^6 // (S * n_docs)),
+    ``target`` an expression of the total doc count big_n and S the
+    summed weight. Used by temperature_mixture, mixture_upsample,
+    export_mixture and export_upsampled."""
+    return f"""per AS (
+                SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
+                FROM {src} GROUP BY source
+            ), sm AS (
+                SELECT source, n_docs,
+                       CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000)
+                            AS BIGINT) AS s_micro
+                FROM per
+            ), tot AS (
+                SELECT CAST(SUM(s_micro) AS HUGEINT) AS big_s,
+                       CAST(SUM(n_docs) AS HUGEINT) AS big_n
+                FROM sm
+            ), rr AS (
+                SELECT source, n_docs,
+                       least({cap},
+                             CAST((({target}) * s_micro * 1000000)
+                                  // (big_s * n_docs) AS BIGINT))
+                           AS rate_micro
+                FROM sm, tot
+            )"""
+
+
+def _upsample_copies(src: str) -> str:
+    """Copies of each doc of ``src`` under its source's rate ``rr``: the
+    whole epochs of rate_micro, plus one when the doc's Lehmer coin falls
+    under the fractional part (mixture_upsample, export_upsampled)."""
+    return f"""SELECT d.source, d.doc_id, rr.rate_micro,
+                       (rr.rate_micro // 1000000)
+                       + CASE WHEN {_lehmer_micro("d.doc_id")}
+                                   < (rr.rate_micro % 1000000)
+                              THEN 1 ELSE 0 END AS n_copies
+                FROM {src} d JOIN rr USING (source)"""
+
+
+def _trade_graph_head_sql() -> str:
     """Shared WITH-head: the bidirectional customer--supplier trade graph
     (matches graph.bipartite_edges on orders x lineitem), node set, node
     count, out-degrees, and the uniform starting mass p0."""
-    return """
+    return f"""
             WITH pairs AS (
                 SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS l,
                                 's' || CAST(l_suppkey AS VARCHAR) AS r
@@ -4925,11 +5147,43 @@ def _trade_graph_head_sql(base: int) -> str:
             ), outdeg AS (
                 SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src
             ), p0 AS (
-                SELECT node, {base} // nn.n AS pr FROM nodes CROSS JOIN nn
-            )""".format(base=base)
+                SELECT node, {graph.RANK_BASE} // nn.n AS pr FROM nodes CROSS JOIN nn
+            )"""
 
 
-def oracle_lpa_sql(rounds: int = 3, limit: int = 25) -> str:
+def _rank_rounds(
+    iterations: int, damping_pct: int, mass: str, teleport: str, joins: str
+) -> str:
+    """``iterations`` rounds of graph.pagerank's BIGINT fixed-point update
+    from the mass ``{mass}0``, then the top-25 SELECT. Round i splits
+    each node's mass over its out-edges (c{i}), sums the inflow (f{i})
+    and sets {mass}{i} = ((100 - d) * teleport + d * inflow) // 100;
+    ``joins`` brings in what ``teleport`` reads. Used by pagerank and
+    pagerank_personalized."""
+    parts = []
+    for i in range(1, iterations + 1):
+        parts.append(f""", c{i} AS (
+                SELECT e.dst, p.pr // o.outdeg AS contrib
+                FROM edges e JOIN {mass}{i - 1} p ON e.src = p.node
+                             JOIN outdeg o ON e.src = o.src
+            ), f{i} AS (
+                SELECT dst, SUM(contrib) AS inflow FROM c{i} GROUP BY dst
+            ), {mass}{i} AS (
+                SELECT n.node,
+                       (({100 - damping_pct} * {teleport})
+                        + {damping_pct} * COALESCE(f.inflow, 0)) // 100 AS pr
+                FROM nodes n LEFT JOIN f{i} f ON n.node = f.dst
+                             {joins}
+            )""")
+    parts.append(f"""
+            SELECT node, CAST(pr AS BIGINT) AS rank_nano
+            FROM {mass}{iterations}
+            ORDER BY rank_nano DESC, node ASC LIMIT 25
+        """)
+    return "".join(parts)
+
+
+def oracle_lpa_sql(rounds: int = 3) -> str:
     """DuckDB oracle for graph.label_propagation at any round count."""
     body = "".join(
         f""", l{r} AS (
@@ -4963,76 +5217,19 @@ def oracle_lpa_sql(rounds: int = 3, limit: int = 25) -> str:
             ){body}
             SELECT label, CAST(COUNT(*) AS BIGINT) AS n_members
             FROM l{rounds} GROUP BY 1
-            ORDER BY n_members DESC, label ASC LIMIT {limit}
+            ORDER BY n_members DESC, label ASC LIMIT 25
         """
 
 
-def oracle_bpe_sql(rounds: int = 3, tokclass: str = r"'[^\p{L}\p{N}]+'") -> str:
-    """DuckDB oracle for textstats.bpe_merge_rounds at any round count."""
-    parts = [
-        f"""
-            WITH tok AS (
-                SELECT list_filter(
-                           regexp_split_to_array(lower(text), {tokclass}),
-                           x -> x <> '') AS ws
-                FROM documents
-            ), w0 AS (
-                SELECT substr(unnest(ws), 1, 24) AS word FROM tok
-            ), wf AS (
-                SELECT ' ' || regexp_replace(word, '(.)', '\\1 ', 'g')
-                           AS sym,
-                       COUNT(*) AS n
-                FROM w0 GROUP BY 1
-            )"""
-    ]
-    prev = "wf"
-    sels = []
-    for r in range(1, rounds + 1):
-        rep = "sym"
-        for _ in range(5):
-            rep = (
-                f"replace({rep}, ' ' || t.l || ' ' || t.r || ' ',"
-                f" ' ' || t.l || t.r || ' ')"
-            )
-        parts.append(f""", p{r} AS (
-                SELECT a[i] AS l, a[i+1] AS r, SUM(n) AS cnt FROM (
-                    SELECT string_split(trim(sym), ' ') AS a, n,
-                           unnest(range(1, len(string_split(trim(sym), ' '))))
-                               AS i
-                    FROM {prev}
-                ) GROUP BY 1, 2
-            ), t{r} AS (
-                SELECT l, r, cnt FROM p{r}
-                ORDER BY cnt DESC, l ASC, r ASC LIMIT 1
-            ), w{r} AS (
-                SELECT {rep} AS sym, n
-                FROM {prev} CROSS JOIN t{r} t
-            )""")
-        sels.append(
-            f"SELECT {r} AS merge_round, l AS left_sym, r AS right_sym,"
-            f" CAST(cnt AS BIGINT) AS pair_count FROM t{r}"
-        )
-        prev = f"w{r}"
-    return (
-        "".join(parts)
-        + " "
-        + " UNION ALL ".join(sels)
-        + " ORDER BY merge_round"
-    )
-
-
-def _oracle_bpe_chain(
-    rounds: int = 3,
-    tokclass: str = r"'[^\p{L}\p{N}]+'",
-    doc_rel: str = "documents",
-    prefix: str = "",
+def _bpe_train_ctes(
+    rounds: int, tokclass: str, doc_rel: str = "documents", prefix: str = ""
 ) -> str:
-    """Shared DuckDB replay of BPE train + encode up to the per-word id
-    lists: the full training chain (every w{r} materialized), the
-    deterministic ROW_NUMBER vocabulary, per-word id lists ordered by
-    symbol position, and the per-occurrence doc word stream (dw). Ends
-    inside the WITH clause so callers append their own tail CTEs /
-    SELECT (encode output, roundtrip decode, tokenized export)."""
+    """The BPE training replay of textstats.bpe_merge_rounds, opening the
+    WITH clause (after the caller's ``prefix`` CTEs): word frequencies wf
+    over the first 24 chars of each token of ``doc_rel``, then per round
+    the pair counts p{r}, the top pair t{r} (count desc, then l, r) and
+    the 5-pass merge w{r}. Used by bpe_merges and, through
+    _oracle_bpe_chain, every encode and export oracle."""
     parts = [
         f"""
             WITH {prefix}tok AS (
@@ -5072,10 +5269,40 @@ def _oracle_bpe_chain(
                 FROM {prev} CROSS JOIN t{r} t
             )""")
         prev = f"w{r}"
-    parts.append(f""", dict AS (
+    return "".join(parts)
+
+
+def oracle_bpe_sql(rounds: int = 3, tokclass: str = r"'[^\p{L}\p{N}]+'") -> str:
+    """DuckDB oracle for textstats.bpe_merge_rounds at any round count."""
+    sels = [
+        f"SELECT {r} AS merge_round, l AS left_sym, r AS right_sym,"
+        f" CAST(cnt AS BIGINT) AS pair_count FROM t{r}"
+        for r in range(1, rounds + 1)
+    ]
+    return (
+        _bpe_train_ctes(rounds, tokclass)
+        + " "
+        + " UNION ALL ".join(sels)
+        + " ORDER BY merge_round"
+    )
+
+
+def _oracle_bpe_chain(
+    rounds: int = 3,
+    tokclass: str = r"'[^\p{L}\p{N}]+'",
+    doc_rel: str = "documents",
+    prefix: str = "",
+) -> str:
+    """Shared DuckDB replay of BPE train + encode up to the per-word id
+    lists: the training chain of _bpe_train_ctes, the deterministic
+    ROW_NUMBER vocabulary, per-word id lists ordered by symbol position,
+    and the per-occurrence doc word stream (dw). Ends inside the WITH
+    clause so callers append their own tail CTEs / SELECT (encode output,
+    roundtrip decode, tokenized export)."""
+    return _bpe_train_ctes(rounds, tokclass, doc_rel, prefix) + f""", dict AS (
                 SELECT replace(sym, ' ', '') AS word,
                        string_split(trim(sym), ' ') AS syms
-                FROM {prev}
+                FROM w{rounds}
             ), vocab AS (
                 SELECT s, CAST(ROW_NUMBER() OVER (ORDER BY s) AS INT) AS tid
                 FROM (SELECT DISTINCT unnest(syms) AS s FROM dict)
@@ -5097,8 +5324,7 @@ def _oracle_bpe_chain(
                                x -> x <> '') AS ws
                     FROM {doc_rel}
                 )
-            )""")
-    return "".join(parts)
+            )"""
 
 
 def oracle_bpe_encode_sql(
@@ -5160,293 +5386,185 @@ def oracle_bpe_encode_sql(
     return "".join(parts)
 
 
+def _export_token_counts(doc_rel: str, cols: str) -> str:
+    """nt: each doc of ``doc_rel`` with ``cols`` and its BPE token count
+    through the _oracle_bpe_chain id lists (zero-token docs kept with 0)."""
+    return f"""
+            , nt AS (
+                SELECT {cols},
+                       CAST(COALESCE(SUM(len(x.ids)), 0) AS BIGINT)
+                           AS n_tokens
+                FROM {doc_rel} d
+                LEFT JOIN (
+                    SELECT dw.doc_id, w.ids
+                    FROM dw JOIN wids w USING (word)
+                ) x ON d.doc_id = x.doc_id
+                GROUP BY {cols}
+            )"""
+
+
+# flows.export_tokenized_set's split column: a doc is validation when the
+# md5_hash60 of ``doc_id:42`` is 0 mod 10.
+_EXPORT_SPLIT = (
+    "CASE WHEN " + _h60("(doc_id::VARCHAR || ':42')") + " % 10 = 0\n"
+    "                            THEN 'val' ELSE 'train' END AS split"
+)
+
+
+def _export_pack_rank(cols: str, tokens: str, order: str, out: str, rel: str = "keyed") -> str:
+    """packed -> keyed and the final SELECT of flows.export_tokenized_set
+    over ``tagged``: 2048-token bins by the running ``tokens`` sum within
+    (split, lang) in ``order``, the Lehmer-md5 epoch key (48271 *
+    md5_hash60('split/lang/bin:42') mod 2^61-1, multiplied in HUGEINT as
+    Spark's DECIMAL(38,0)) and the total epoch order. ``cols`` are kept
+    from tagged; ``out`` are selected from ``rel``. Used by
+    export_tokenized, export_mixture, export_upsampled and
+    export_shuffled."""
+    key = _h60("(split || '/' || lang || '/' || bin_id::VARCHAR || ':42')")
+    return f"""packed AS (
+                SELECT {cols},
+                       CAST({tokens} AS BIGINT) AS pack_tokens,
+                       (SUM({tokens}) OVER (PARTITION BY split, lang
+                                            ORDER BY {order}
+                                            ROWS UNBOUNDED PRECEDING)
+                        - {tokens}) // 2048 AS bin_id
+                FROM tagged
+            ), keyed AS (
+                SELECT *,
+                       CAST((48271::HUGEINT * {key}) % 2305843009213693951 AS BIGINT)
+                           AS shuffle_key
+                FROM packed
+            )
+            SELECT {out}, shuffle_key,
+                   CAST(ROW_NUMBER() OVER (
+                       ORDER BY shuffle_key, split, lang, bin_id, {order}
+                   ) AS BIGINT) AS epoch_rank
+            FROM {rel}"""
+
+
+# The skewed sub-corpus the mixture exports rebalance: src0/src1 whole,
+# every 3rd doc of the other sources.
+_EXPORT_MIX_BASE = """base AS (
+                SELECT * FROM documents
+                WHERE source IN ('src0', 'src1') OR doc_id % 3 = 0
+            ), """
+
+
 def oracle_export_tokenized_sql(
-    rounds: int = 3,
-    tokclass: str = r"'[^\p{L}\p{N}]+'",
-    capacity: int = 2048,
-    val_mod: int = 10,
-    seed: int = 42,
+    rounds: int = 3, tokclass: str = r"'[^\p{L}\p{N}]+'"
 ) -> str:
     """DuckDB replay of flows.export_tokenized_set end-to-end: the shared
     BPE train+encode chain (per-doc REAL token counts via the id lists),
     the seeded md5 split, the (split, lang) packing window over those
-    counts, the Lehmer-md5 epoch key (multiply through HUGEINT mirroring
-    Spark's DECIMAL(38,0) route), and the exact total order."""
-    h60 = lambda x: f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"  # noqa: E731
-    return _oracle_bpe_chain(rounds, tokclass) + f"""
-            , nt AS (
-                SELECT d.doc_id, d.lang,
-                       CAST(COALESCE(SUM(len(x.ids)), 0) AS BIGINT)
-                           AS n_tokens
-                FROM documents d
-                LEFT JOIN (
-                    SELECT dw.doc_id, w.ids
-                    FROM dw JOIN wids w USING (word)
-                ) x ON d.doc_id = x.doc_id
-                GROUP BY d.doc_id, d.lang
-            ), tagged AS (
+    counts, the Lehmer-md5 epoch key and the exact total order."""
+    return (
+        _oracle_bpe_chain(rounds, tokclass)
+        + _export_token_counts("documents", "d.doc_id, d.lang")
+        + f""", tagged AS (
                 SELECT doc_id, lang, n_tokens,
-                       CASE WHEN {h60(f"(doc_id::VARCHAR || ':{seed}')")}
-                                 % {val_mod} = 0
-                            THEN 'val' ELSE 'train' END AS split
+                       {_EXPORT_SPLIT}
                 FROM nt
-            ), packed AS (
-                SELECT doc_id, split, lang,
-                       CAST(n_tokens AS BIGINT) AS pack_tokens,
-                       (SUM(n_tokens) OVER (PARTITION BY split, lang
-                                            ORDER BY doc_id
-                                            ROWS UNBOUNDED PRECEDING)
-                        - n_tokens) // {capacity} AS bin_id
-                FROM tagged
-            ), keyed AS (
-                SELECT *,
-                       CAST((48271::HUGEINT * {h60(
-                           "(split || '/' || lang || '/' || "
-                           f"bin_id::VARCHAR || ':{seed}')"
-                       )}) % 2305843009213693951 AS BIGINT) AS shuffle_key
-                FROM packed
-            )
-            SELECT doc_id, split, lang, CAST(bin_id AS BIGINT) AS bin_id,
-                   pack_tokens, shuffle_key,
-                   CAST(ROW_NUMBER() OVER (
-                       ORDER BY shuffle_key, split, lang, bin_id, doc_id
-                   ) AS BIGINT) AS epoch_rank
-            FROM keyed"""
+            ), """
+        + _export_pack_rank(
+            "doc_id, split, lang", "n_tokens", "doc_id",
+            "doc_id, split, lang, CAST(bin_id AS BIGINT) AS bin_id, pack_tokens",
+        )
+    )
 
 
 def oracle_export_mixture_sql(
-    rounds: int = 3,
-    tokclass: str = r"'[^\p{L}\p{N}]+'",
-    capacity: int = 2048,
-    val_mod: int = 10,
-    seed: int = 42,
+    rounds: int = 3, tokclass: str = r"'[^\p{L}\p{N}]+'"
 ) -> str:
     """DuckDB replay of flows.export_tokenized_set(mixture=True) over the
-    skewed sub-corpus (src0/src1 whole, every 3rd doc elsewhere): the
-    temperature-mixture rate CTEs + deterministic hash selection decide
-    the corpus, the BPE chain trains on the REBALANCED mixture, and the
-    split/pack/epoch tail runs over the surviving docs with the
-    per-source rate_micro audit joined through to the final order."""
-    h60 = lambda x: f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"  # noqa: E731
-    prefix = """base AS (
-                SELECT * FROM documents
-                WHERE source IN ('src0', 'src1') OR doc_id % 3 = 0
-            ), per AS (
-                SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
-                FROM base GROUP BY source
-            ), sm AS (
-                SELECT source, n_docs,
-                       CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000)
-                            AS BIGINT) AS s_micro
-                FROM per
-            ), tot AS (
-                SELECT CAST(SUM(s_micro) AS HUGEINT) AS big_s,
-                       CAST(SUM(n_docs) AS HUGEINT) AS big_n
-                FROM sm
-            ), rr AS (
-                SELECT source,
-                       least(1000000,
-                             CAST(((big_n // 2) * s_micro * 1000000)
-                                  // (big_s * n_docs) AS BIGINT))
-                           AS rate_micro
-                FROM sm, tot
-            ), mixdocs AS (
+    skewed sub-corpus: the temperature-mixture rates + deterministic hash
+    selection decide the corpus, the BPE chain trains on the REBALANCED
+    mixture, and the split/pack/epoch tail runs over the surviving docs
+    with the per-source rate_micro audit joined through to the final
+    order."""
+    prefix = (
+        _EXPORT_MIX_BASE
+        + _temperature_rates("base", "big_n // 2", "1000000")
+        + f""", mixdocs AS (
                 SELECT d.* FROM base d JOIN rr USING (source)
-                WHERE ((d.doc_id % 2147483647) * 48271) % 2147483647
-                      % 1000000 < rr.rate_micro
+                WHERE {_lehmer_micro("d.doc_id")} < rr.rate_micro
             ), """
-    return _oracle_bpe_chain(
-        rounds, tokclass, doc_rel="mixdocs", prefix=prefix
-    ) + f"""
-            , nt AS (
-                SELECT d.doc_id, d.lang, d.source,
-                       CAST(COALESCE(SUM(len(x.ids)), 0) AS BIGINT)
-                           AS n_tokens
-                FROM mixdocs d
-                LEFT JOIN (
-                    SELECT dw.doc_id, w.ids
-                    FROM dw JOIN wids w USING (word)
-                ) x ON d.doc_id = x.doc_id
-                GROUP BY d.doc_id, d.lang, d.source
-            ), tagged AS (
+    )
+    return (
+        _oracle_bpe_chain(rounds, tokclass, doc_rel="mixdocs", prefix=prefix)
+        + _export_token_counts("mixdocs", "d.doc_id, d.lang, d.source")
+        + f""", tagged AS (
                 SELECT doc_id, lang, source, n_tokens,
-                       CASE WHEN {h60(f"(doc_id::VARCHAR || ':{seed}')")}
-                                 % {val_mod} = 0
-                            THEN 'val' ELSE 'train' END AS split
+                       {_EXPORT_SPLIT}
                 FROM nt
-            ), packed AS (
-                SELECT doc_id, split, lang, source,
-                       CAST(n_tokens AS BIGINT) AS pack_tokens,
-                       (SUM(n_tokens) OVER (PARTITION BY split, lang
-                                            ORDER BY doc_id
-                                            ROWS UNBOUNDED PRECEDING)
-                        - n_tokens) // {capacity} AS bin_id
-                FROM tagged
-            ), keyed AS (
-                SELECT *,
-                       CAST((48271::HUGEINT * {h60(
-                           "(split || '/' || lang || '/' || "
-                           f"bin_id::VARCHAR || ':{seed}')"
-                       )}) % 2305843009213693951 AS BIGINT) AS shuffle_key
-                FROM packed
-            )
-            SELECT k.doc_id, k.split, k.lang, k.source,
-                   CAST(k.bin_id AS BIGINT) AS bin_id, k.pack_tokens,
-                   rr.rate_micro, k.shuffle_key,
-                   CAST(ROW_NUMBER() OVER (
-                       ORDER BY k.shuffle_key, k.split, k.lang, k.bin_id,
-                                k.doc_id
-                   ) AS BIGINT) AS epoch_rank
-            FROM keyed k JOIN rr USING (source)"""
+            ), """
+        + _export_pack_rank(
+            "doc_id, split, lang, source", "n_tokens", "doc_id",
+            "doc_id, split, lang, source, CAST(bin_id AS BIGINT) AS bin_id,"
+            " pack_tokens, rate_micro",
+            rel="keyed JOIN rr USING (source)",
+        )
+    )
 
 
 def oracle_export_upsampled_sql(
-    rounds: int = 3,
-    tokclass: str = r"'[^\p{L}\p{N}]+'",
-    capacity: int = 2048,
-    val_mod: int = 10,
-    seed: int = 42,
-    factor_milli: int = 2500,
-    max_epochs: int = 4,
+    rounds: int = 3, tokclass: str = r"'[^\p{L}\p{N}]+'"
 ) -> str:
-    """DuckDB replay of flows.export_tokenized_set(mixture_factor_milli=...)
+    """DuckDB replay of flows.export_tokenized_set(mixture_factor_milli=2500)
     over the skewed sub-corpus: uncapped temperature rates (ceilinged at
-    max_epochs whole epochs) decide per-doc copy counts, the BPE chain
-    trains on the epoch-0 support (each unique surviving doc once), and
-    the split/pack/epoch tail runs over the (doc_id, epoch)-keyed
-    expansion — packing window ordered by the composite key, total
-    order tie-broken on the epoch."""
-    h60 = lambda x: f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"  # noqa: E731
-    prefix = f"""base AS (
-                SELECT * FROM documents
-                WHERE source IN ('src0', 'src1') OR doc_id % 3 = 0
-            ), per AS (
-                SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
-                FROM base GROUP BY source
-            ), sm AS (
-                SELECT source, n_docs,
-                       CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000)
-                            AS BIGINT) AS s_micro
-                FROM per
-            ), tot AS (
-                SELECT CAST(SUM(s_micro) AS HUGEINT) AS big_s,
-                       CAST(SUM(n_docs) AS HUGEINT) AS big_n
-                FROM sm
-            ), rr AS (
-                SELECT source,
-                       least(CAST({max_epochs * 1000000} AS BIGINT),
-                             CAST((((big_n * {factor_milli}) // 1000)
-                                   * s_micro * 1000000)
-                                  // (big_s * n_docs) AS BIGINT))
-                           AS rate_micro
-                FROM sm, tot
-            ), kcopies AS (
-                SELECT d.doc_id, rr.rate_micro,
-                       (rr.rate_micro // 1000000)
-                       + CASE WHEN ((d.doc_id % 2147483647) * 48271)
-                                   % 2147483647 % 1000000
-                                   < (rr.rate_micro % 1000000)
-                              THEN 1 ELSE 0 END AS n_copies
-                FROM base d JOIN rr USING (source)
+    4 whole epochs) decide per-doc copy counts, the BPE chain trains on
+    the epoch-0 support (each unique surviving doc once), and the
+    split/pack/epoch tail runs over the (doc_id, epoch)-keyed expansion
+    -- packing window ordered by the composite key, total order
+    tie-broken on the epoch."""
+    prefix = (
+        _EXPORT_MIX_BASE
+        + _temperature_rates(
+            "base", "(big_n * 2500) // 1000", "CAST(4000000 AS BIGINT)"
+        )
+        + f""", kcopies AS (
+                {_upsample_copies("base")}
             ), mixdocs AS (
                 SELECT d.* FROM base d JOIN kcopies k USING (doc_id)
                 WHERE k.n_copies > 0
             ), """
-    return _oracle_bpe_chain(
-        rounds, tokclass, doc_rel="mixdocs", prefix=prefix
-    ) + f"""
-            , nt AS (
-                SELECT d.doc_id, d.lang, d.source,
-                       CAST(COALESCE(SUM(len(x.ids)), 0) AS BIGINT)
-                           AS n_tokens
-                FROM mixdocs d
-                LEFT JOIN (
-                    SELECT dw.doc_id, w.ids
-                    FROM dw JOIN wids w USING (word)
-                ) x ON d.doc_id = x.doc_id
-                GROUP BY d.doc_id, d.lang, d.source
-            ), ex AS (
+    )
+    return (
+        _oracle_bpe_chain(rounds, tokclass, doc_rel="mixdocs", prefix=prefix)
+        + _export_token_counts("mixdocs", "d.doc_id, d.lang, d.source")
+        + f""", ex AS (
                 SELECT n.doc_id, n.lang, n.source, n.n_tokens,
                        k.rate_micro,
                        unnest(generate_series(0, k.n_copies - 1)) AS epoch
                 FROM nt n JOIN kcopies k USING (doc_id)
             ), tagged AS (
                 SELECT doc_id, epoch, lang, source, n_tokens, rate_micro,
-                       CASE WHEN {h60(f"(doc_id::VARCHAR || ':{seed}')")}
-                                 % {val_mod} = 0
-                            THEN 'val' ELSE 'train' END AS split
+                       {_EXPORT_SPLIT}
                 FROM ex
-            ), packed AS (
-                SELECT doc_id, epoch, split, lang, source, rate_micro,
-                       CAST(n_tokens AS BIGINT) AS pack_tokens,
-                       (SUM(n_tokens) OVER (PARTITION BY split, lang
-                                            ORDER BY doc_id, epoch
-                                            ROWS UNBOUNDED PRECEDING)
-                        - n_tokens) // {capacity} AS bin_id
-                FROM tagged
-            ), keyed AS (
-                SELECT *,
-                       CAST((48271::HUGEINT * {h60(
-                           "(split || '/' || lang || '/' || "
-                           f"bin_id::VARCHAR || ':{seed}')"
-                       )}) % 2305843009213693951 AS BIGINT) AS shuffle_key
-                FROM packed
-            )
-            SELECT doc_id, CAST(epoch AS INT) AS epoch, split, lang,
-                   source, CAST(bin_id AS BIGINT) AS bin_id, pack_tokens,
-                   rate_micro, shuffle_key,
-                   CAST(ROW_NUMBER() OVER (
-                       ORDER BY shuffle_key, split, lang, bin_id,
-                                doc_id, epoch
-                   ) AS BIGINT) AS epoch_rank
-            FROM keyed"""
-
-
-def oracle_pagerank_sql(
-    iterations: int = 3,
-    damping_pct: int = 85,
-    base: int = 10**12,
-    limit: int = 25,
-) -> str:
-    """DuckDB oracle for graph.pagerank at any iteration count."""
-    parts = [_trade_graph_head_sql(base)]
-    for i in range(1, iterations + 1):
-        parts.append(
-            """, c{i} AS (
-                SELECT e.dst, p.pr // o.outdeg AS contrib
-                FROM edges e JOIN p{j} p ON e.src = p.node
-                             JOIN outdeg o ON e.src = o.src
-            ), f{i} AS (
-                SELECT dst, SUM(contrib) AS inflow FROM c{i} GROUP BY dst
-            ), p{i} AS (
-                SELECT nodes.node,
-                       (({tp} * ({base} // nn.n)) + {d} * COALESCE(f.inflow, 0)) // 100 AS pr
-                FROM nodes LEFT JOIN f{i} f ON nodes.node = f.dst CROSS JOIN nn
-            )""".format(
-                i=i, j=i - 1, base=base, d=damping_pct, tp=100 - damping_pct
-            )
+            ), """
+        + _export_pack_rank(
+            "doc_id, epoch, split, lang, source, rate_micro", "n_tokens",
+            "doc_id, epoch",
+            "doc_id, CAST(epoch AS INT) AS epoch, split, lang, source,"
+            " CAST(bin_id AS BIGINT) AS bin_id, pack_tokens, rate_micro",
         )
-    parts.append(
-        """
-            SELECT node, CAST(pr AS BIGINT) AS rank_nano
-            FROM p{last}
-            ORDER BY rank_nano DESC, node ASC LIMIT {limit}
-        """.format(last=iterations, limit=limit)
     )
-    return "".join(parts)
 
 
-def oracle_ppr_sql(
-    iterations: int = 3,
-    damping_pct: int = 85,
-    base: int = 10**12,
-    limit: int = 25,
-) -> str:
+def oracle_pagerank_sql(iterations: int = 3, damping_pct: int = 85) -> str:
+    """DuckDB oracle for graph.pagerank at any iteration count."""
+    return _trade_graph_head_sql() + _rank_rounds(
+        iterations, damping_pct, "p", f"({graph.RANK_BASE} // nn.n)",
+        "CROSS JOIN nn",
+    )
+
+
+def oracle_ppr_sql(iterations: int = 3) -> str:
     """DuckDB oracle for graph.personalized_pagerank (nation-0 customer
-    seeds) at any iteration count."""
-    parts = [
-        _trade_graph_head_sql(base)
-        + """, seeds AS (
+    seeds, damping 85) at any iteration count."""
+    teleport = f"CASE WHEN sg.node IS NOT NULL THEN {graph.RANK_BASE} // ss.s ELSE 0 END"
+    return (
+        _trade_graph_head_sql()
+        + f""", seeds AS (
                 SELECT DISTINCT 'c' || CAST(c_custkey AS VARCHAR) AS node
                 FROM customer WHERE c_nationkey = 0
             ), sg AS (
@@ -5454,48 +5572,27 @@ def oracle_ppr_sql(
             ), ss AS (
                 SELECT COUNT(*) AS s FROM sg
             ), q0 AS (
-                SELECT n.node,
-                       CASE WHEN sg.node IS NOT NULL
-                            THEN {base} // ss.s ELSE 0 END AS pr
+                SELECT n.node, {teleport} AS pr
                 FROM nodes n LEFT JOIN sg ON n.node = sg.node CROSS JOIN ss
-            )""".format(base=base)
-    ]
-    for i in range(1, iterations + 1):
-        parts.append(
-            """, d{i} AS (
-                SELECT e.dst, p.pr // o.outdeg AS contrib
-                FROM edges e JOIN q{j} p ON e.src = p.node
-                             JOIN outdeg o ON e.src = o.src
-            ), g{i} AS (
-                SELECT dst, SUM(contrib) AS inflow FROM d{i} GROUP BY dst
-            ), q{i} AS (
-                SELECT n.node,
-                       (({tp} * CASE WHEN sg.node IS NOT NULL
-                                     THEN {base} // ss.s ELSE 0 END)
-                        + {d} * COALESCE(g.inflow, 0)) // 100 AS pr
-                FROM nodes n LEFT JOIN g{i} g ON n.node = g.dst
-                             LEFT JOIN sg ON n.node = sg.node
-                             CROSS JOIN ss
-            )""".format(
-                i=i, j=i - 1, base=base, d=damping_pct, tp=100 - damping_pct
-            )
+            )"""
+        + _rank_rounds(
+            iterations, 85, "q", teleport,
+            "LEFT JOIN sg ON n.node = sg.node CROSS JOIN ss",
         )
-    parts.append(
-        """
-            SELECT node, CAST(pr AS BIGINT) AS rank_nano
-            FROM q{last}
-            ORDER BY rank_nano DESC, node ASC LIMIT {limit}
-        """.format(last=iterations, limit=limit)
     )
-    return "".join(parts)
 
 
 def oracle_k_core_sql(k: int = 80, rounds: int = 4) -> str:
     """DuckDB oracle for graph.k_core_membership over the part
-    co-occurrence graph at any (k, rounds)."""
+    co-occurrence graph at any (k, rounds).
+
+    The edge sets e{i} and keep-sets keep{i} are each read more than once
+    per round, so they are MATERIALIZED: DuckDB inlines a plain CTE at
+    every reference, which expanded the lineitem self-join e0 3^rounds
+    times."""
     parts = [
         """
-            WITH e0 AS (
+            WITH e0 AS MATERIALIZED (
                 SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
                 FROM lineitem a JOIN lineitem b
                   ON a.l_orderkey = b.l_orderkey
@@ -5503,30 +5600,79 @@ def oracle_k_core_sql(k: int = 80, rounds: int = 4) -> str:
             )"""
     ]
     for i in range(1, rounds + 1):
-        parts.append(
-            """, deg{i} AS (
+        parts.append(f""", deg{i} AS (
                 SELECT node, COUNT(*) AS d FROM (
-                    SELECT a AS node FROM e{j}
+                    SELECT a AS node FROM e{i - 1}
                     UNION ALL
-                    SELECT b AS node FROM e{j}
+                    SELECT b AS node FROM e{i - 1}
                 ) GROUP BY node
-            ), keep{i} AS (
+            ), keep{i} AS MATERIALIZED (
                 SELECT node FROM deg{i} WHERE d >= {k}
-            ), e{i} AS (
-                SELECT a, b FROM e{j}
+            ), e{i} AS MATERIALIZED (
+                SELECT a, b FROM e{i - 1}
                 WHERE a IN (SELECT node FROM keep{i})
                   AND b IN (SELECT node FROM keep{i})
-            )""".format(i=i, j=i - 1, k=k)
-        )
-    parts.append(
-        """
+            )""")
+    parts.append(f"""
             SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
-                SELECT a AS node FROM e{last}
+                SELECT a AS node FROM e{rounds}
                 UNION ALL
-                SELECT b AS node FROM e{last}
+                SELECT b AS node FROM e{rounds}
             ) GROUP BY node HAVING COUNT(*) >= {k}
-        """.format(last=rounds, k=k)
-    )
+        """)
+    return "".join(parts)
+
+
+def _argmin(src: str, x: str, cents: str, out: str) -> str:
+    """Each row of ``src`` (vec_id, list column ``x``) with its nearest
+    centroid of ``cents`` (cid, c) by list_distance, ties to the smaller
+    cid; ``out`` picks from (vec_id, x, cid, d)."""
+    return f"""SELECT {out} FROM (
+                    SELECT p.vec_id, p.{x}, c.cid, list_distance(p.{x}, c.c) AS d,
+                           ROW_NUMBER() OVER (
+                               PARTITION BY p.vec_id
+                               ORDER BY list_distance(p.{x}, c.c) ASC, c.cid ASC
+                           ) AS rn
+                    FROM {src} p CROSS JOIN {cents} c
+                ) WHERE rn = 1"""
+
+
+def _first_k_seeds(pre: str, src: str, x: str, k: int) -> str:
+    """{pre}c0: the first ``k`` rows of ``src`` by vec_id as centroids 0..k-1."""
+    return f""", {pre}c0 AS (
+                SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cid,
+                       {x} AS c
+                FROM (SELECT vec_id, {x} FROM {src} ORDER BY vec_id LIMIT {k})
+            )"""
+
+
+def _lloyd_ctes(pre: str, fit: str, x: str, n_assign: int, full: str = "") -> str:
+    """The float Lloyd recurrence of similarity.kmeans_lloyd from the
+    seeds {pre}c0: ``n_assign`` assignments {pre}a{i} (vec_id, x, cid, d)
+    of ``fit`` and n_assign-1 decimal-mean updates {pre}u{i} -> {pre}c{i}.
+    With ``full``, the last assignment encodes ``full`` instead (pq_train's
+    sampled fit: the codebook trains on a subset, every vector gets a
+    code). Used by kmeans_lloyd, the PQ subspace chains and the SemDeDup
+    corpus build."""
+    parts = []
+    for i in range(1, n_assign + 1):
+        src = full if full and i == n_assign else fit
+        parts.append(f""", {pre}a{i} AS (
+                {_argmin(src, x, f"{pre}c{i - 1}", f"vec_id, {x}, cid, d")}
+            )""")
+        if i < n_assign:
+            parts.append(f""", {pre}u{i} AS (
+                SELECT cid, dim,
+                       {_dec_mean("v")} AS val
+                FROM (
+                    SELECT cid, CAST(generate_subscripts({x}, 1) - 1 AS INT) AS dim,
+                           unnest({x}) AS v
+                    FROM {pre}a{i}
+                )
+                GROUP BY cid, dim
+            ), {pre}c{i} AS (
+                SELECT cid, list(val ORDER BY dim) AS c FROM {pre}u{i} GROUP BY cid
+            )""")
     return "".join(parts)
 
 
@@ -5535,307 +5681,233 @@ def oracle_kmeans_sql(k: int = 8, n_assign: int = 3) -> str:
     n_assign assignment rounds, n_assign-1 decimal-exact centroid
     updates. list_distance == Spark's sequential (x-y)^2 fold + sqrt
     (proven by the euclidean oracles)."""
-    parts = [
+    return (
         """
             WITH pts AS (
                 SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings
-            ), c0 AS (
-                SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cid,
-                       x AS c
-                FROM (SELECT vec_id, x FROM pts ORDER BY vec_id LIMIT {k})
-            )""".format(k=k)
-    ]
-    for i in range(1, n_assign + 1):
-        parts.append(
-            """, a{i} AS (
-                SELECT vec_id, x, cid, d FROM (
-                    SELECT p.vec_id, p.x, c.cid, list_distance(p.x, c.c) AS d,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.x, c.c) ASC, c.cid ASC
-                           ) AS rn
-                    FROM pts p CROSS JOIN c{j} c
-                ) WHERE rn = 1
-            )""".format(i=i, j=i - 1)
-        )
-        if i < n_assign:
-            parts.append(
-                """, u{i} AS (
-                SELECT cid, dim,
-                       CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,18))) AS DOUBLE)
-                                 / COUNT(*) AS DECIMAL(28,8)) AS DOUBLE) AS val
-                FROM (
-                    SELECT cid, CAST(generate_subscripts(x, 1) - 1 AS INT) AS dim,
-                           unnest(x) AS v
-                    FROM a{i}
-                )
-                GROUP BY cid, dim
-            ), c{i} AS (
-                SELECT cid, list(val ORDER BY dim) AS c FROM u{i} GROUP BY cid
-            )""".format(i=i)
-            )
-    parts.append(
-        """
+            )"""
+        + _first_k_seeds("", "pts", "x", k)
+        + _lloyd_ctes("", "pts", "x", n_assign)
+        + f"""
             SELECT vec_id, CAST(cid AS INT) AS cluster_id, ROUND(d, 6) AS dist
-            FROM a{last}
-        """.format(last=n_assign)
+            FROM a{n_assign}
+        """
     )
+
+
+def _pq_subspace_ctes(
+    rel: str, vec: str, m: int, k: int, n_assign: int, dim: int, gate: str = ""
+) -> str:
+    """similarity.pq_train + pq_encode over the list column ``vec`` of
+    ``rel``: subspace s is the contiguous slice s{s}p, its codebook the
+    _lloyd_ctes chain from the first k slices. ``gate`` restricts seeds
+    and updates to the fit subset s{s}pf. Codes are s{s}a{n_assign},
+    codebooks s{s}c{n_assign - 1}. Used by every pq_search* key."""
+    sub = dim // m
+    parts = []
+    for s in range(m):
+        fit = f"s{s}pf" if gate else f"s{s}p"
+        parts.append(f""", s{s}p AS (
+                SELECT vec_id, {vec}[{s * sub + 1}:{(s + 1) * sub}] AS sx FROM {rel}
+            )""")
+        if gate:
+            parts.append(f""", s{s}pf AS (
+                SELECT vec_id, sx FROM s{s}p WHERE {gate}
+            )""")
+        parts.append(_first_k_seeds(f"s{s}", fit, "sx", k))
+        parts.append(_lloyd_ctes(f"s{s}", fit, "sx", n_assign, full=f"s{s}p"))
     return "".join(parts)
 
 
-def oracle_pq_search_sql(
-    m: int = 4,
-    k: int = 8,
-    n_assign: int = 2,
-    dim: int = 64,
-    topk: int = 10,
-    n_queries: int = 5,
-) -> str:
-    """DuckDB oracle for the PQ lifecycle (q_pq_search): per-subspace
-    Lloyd chains (same decimal-mean recurrence as oracle_kmeans_sql,
-    over contiguous slices), encode argmins (list_distance, ties by
-    cid), and ADC scoring as the LEFT-TO-RIGHT sum of per-subspace L2
-    distances — the exact op order the Spark fold uses."""
+def _pq_adc(qvec: str, src: str, m: int, n_assign: int, dim: int) -> str:
+    """adc: each (query q, candidate p) pair of ``src`` with its ADC
+    distance, the LEFT-TO-RIGHT sum over subspaces of list_distance(query
+    slice of ``qvec``, p's codeword) -- the Spark fold's op order --
+    rounded to 6 places."""
     sub = dim // m
-    parts = ["""
-            WITH pts AS (
-                SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings
-            )"""]
-    for s in range(m):
-        lo, hi = s * sub + 1, (s + 1) * sub
-        parts.append(
-            """, s{s}p AS (
-                SELECT vec_id, x[{lo}:{hi}] AS sx FROM pts
-            ), s{s}c0 AS (
-                SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT)
-                           AS cid,
-                       sx AS c
-                FROM (SELECT vec_id, sx FROM s{s}p ORDER BY vec_id LIMIT {k})
-            )""".format(s=s, lo=lo, hi=hi, k=k)
-        )
-        for i in range(1, n_assign + 1):
-            parts.append(
-                """, s{s}a{i} AS (
-                SELECT vec_id, sx, cid, d FROM (
-                    SELECT p.vec_id, p.sx, c.cid,
-                           list_distance(p.sx, c.c) AS d,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.sx, c.c) ASC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM s{s}p p CROSS JOIN s{s}c{j} c
-                ) WHERE rn = 1
-            )""".format(s=s, i=i, j=i - 1)
-            )
-            if i < n_assign:
-                parts.append(
-                    """, s{s}u{i} AS (
-                SELECT cid, dim,
-                       CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,18))) AS DOUBLE)
-                                 / COUNT(*) AS DECIMAL(28,8)) AS DOUBLE) AS val
-                FROM (
-                    SELECT cid, CAST(generate_subscripts(sx, 1) - 1 AS INT)
-                               AS dim,
-                           unnest(sx) AS v
-                    FROM s{s}a{i}
-                )
-                GROUP BY cid, dim
-            ), s{s}c{i} AS (
-                SELECT cid, list(val ORDER BY dim) AS c
-                FROM s{s}u{i} GROUP BY cid
-            )""".format(s=s, i=i)
-                )
-    last, lastc = n_assign, n_assign - 1
-    dist_terms = " + ".join(
-        "list_distance(q.x[{lo}:{hi}], c{s}.c)".format(
-            lo=s * sub + 1, hi=(s + 1) * sub, s=s
-        )
+    terms = " + ".join(
+        f"list_distance({qvec}[{s * sub + 1}:{(s + 1) * sub}], c{s}.c)"
         for s in range(m)
     )
     joins = " ".join(
-        "JOIN s{s}a{last} e{s} ON e{s}.vec_id = p.vec_id "
-        "JOIN s{s}c{lastc} c{s} ON c{s}.cid = e{s}.cid".format(
-            s=s, last=last, lastc=lastc
-        )
+        f"JOIN s{s}a{n_assign} e{s} ON e{s}.vec_id = p.vec_id "
+        f"JOIN s{s}c{n_assign - 1} c{s} ON c{s}.cid = e{s}.cid"
         for s in range(m)
     )
-    parts.append(
-        """, qs AS (
-                SELECT vec_id AS query_id, x FROM pts WHERE vec_id < {nq}
-            ), adc AS (
+    return f""", adc AS (
                 SELECT q.query_id, p.vec_id,
                        ROUND({terms}, 6) AS approx_dist
-                FROM pts p {joins} CROSS JOIN qs q
-            )
-            SELECT query_id, vec_id, CAST(rank AS INT) AS rank, approx_dist
+                FROM {src}
+                {joins}
+            )"""
+
+
+def _top_per_query(rel: str, score: str, order: str, topk: int) -> str:
+    """The first ``topk`` rows of each query of ``rel`` by ``score``
+    ``order``, ties to the smaller vec_id, with their INT rank from 1.
+    Used by every pq_search* key."""
+    return f"""
+            SELECT query_id, vec_id, CAST(rank AS INT) AS rank, {score}
             FROM (
-                SELECT query_id, vec_id, approx_dist,
+                SELECT query_id, vec_id, {score},
                        ROW_NUMBER() OVER (
                            PARTITION BY query_id
-                           ORDER BY approx_dist ASC, vec_id ASC
+                           ORDER BY {score} {order}, vec_id ASC
                        ) AS rank
-                FROM adc
+                FROM {rel}
             ) WHERE rank <= {topk}
-        """.format(nq=n_queries, terms=dist_terms, joins=joins, topk=topk)
+        """
+
+
+def oracle_pq_search_sql(
+    m: int = 4, k: int = 8, n_assign: int = 2, dim: int = 64, topk: int = 10
+) -> str:
+    """DuckDB oracle for the PQ lifecycle (q_pq_search): per-subspace
+    Lloyd codebooks and codes (_pq_subspace_ctes), and the ADC top-k of
+    the first 5 vectors as queries."""
+    return (
+        """
+            WITH pts AS (
+                SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings
+            )"""
+        + _pq_subspace_ctes("pts", "x", m, k, n_assign, dim)
+        + """, qs AS (
+                SELECT vec_id AS query_id, x FROM pts WHERE vec_id < 5
+            )"""
+        + _pq_adc("q.x", "pts p CROSS JOIN qs q", m, n_assign, dim)
+        + _top_per_query("adc", "approx_dist", "ASC", topk)
     )
-    return "".join(parts)
+
+
+# The exact-integer IVF of similarity.ivf_build_index_exact / ivf_assign_
+# exact / ivf_search_index_exact (n_lists=16, scale_bits=20): base holds
+# each vector as DOUBLE (cv) and quantized floor(x * 2^20 + 0.5) (qv);
+# _ivf_d2 is the exact squared distance over the 64 quantized dims.
+_IVF_BASE = """base AS (
+                SELECT vec_id, embedding::DOUBLE[] AS cv,
+                       list_transform(embedding::DOUBLE[],
+                           x -> CAST(floor(x * 1048576.0 + 0.5) AS BIGINT))
+                           AS qv
+                FROM embeddings
+            )"""
+
+
+def _ivf_d2(a: str, c: str = "c.c") -> str:
+    return (
+        f"list_sum(list_transform(range(1, 65),"
+        f" i -> ({a}[i] - {c}[i]) * ({a}[i] - {c}[i])))"
+    )
+
+
+def _ivf_lloyd_ctes(src: str) -> str:
+    """a0 -> (m1,c1,d1,a1) -> (m2,c2,d2,a2) over ``src`` (vec_id, cv, qv):
+    a0 is the md5_hash60(id) mod 16 partition, then two Lloyd steps whose
+    centroid means are the sign-factored truncating division of exact
+    integer sums. a2/c2 are the index's assignment and centroids. Used
+    by similarity_ivf*, similarity_incremental and the IVF-PQ keys."""
+    parts = [
+        f"""a0 AS (
+                SELECT vec_id, cv, qv,
+                       CAST({_h60("CAST(vec_id AS VARCHAR)")} % 16 AS INTEGER) AS l
+                FROM {src}
+            )"""
+    ]
+    for r in (1, 2):
+        parts.append(
+            f"""m{r} AS (
+                SELECT l, gs.i AS i, SUM(qv[gs.i]) AS s, COUNT(*) AS n
+                FROM a{r - 1}, generate_series(1, 64) gs(i)
+                GROUP BY 1, 2
+            ), c{r} AS (
+                SELECT l, list(CASE WHEN s < 0 THEN -((-s) // n)
+                                    ELSE s // n END ORDER BY i) AS c
+                FROM m{r} GROUP BY 1
+            ), d{r} AS (
+                SELECT a.vec_id, a.cv, a.qv, c.l, {_ivf_d2("a.qv")} AS d2
+                FROM a0 a CROSS JOIN c{r} c
+            ), a{r} AS (
+                SELECT vec_id, cv, qv, l FROM (
+                    SELECT vec_id, cv, qv, l,
+                           ROW_NUMBER() OVER (PARTITION BY vec_id
+                               ORDER BY d2 ASC, l ASC) AS rn
+                    FROM d{r}
+                ) WHERE rn = 1
+            )"""
+        )
+    return ", ".join(parts)
+
+
+def _ivf_probe(qrel: str, n_probe: int, cols: tuple[str, ...] = ("query_id",)) -> str:
+    """pd -> pr: each query of ``qrel`` (quantized vector qqv) with its
+    ``n_probe`` nearest coarse lists of c2 by exact d2, ties to the
+    smaller list id; ``cols`` are kept from the query. Used by
+    similarity_ivf*, similarity_incremental and the IVF-PQ keys."""
+    return f"""pd AS (
+                SELECT {", ".join(f"q.{c}" for c in cols)}, c.l,
+                       {_ivf_d2("q.qqv")} AS d2
+                FROM {qrel} q CROSS JOIN c2 c
+            ), pr AS (
+                SELECT {", ".join(cols)}, l FROM (
+                    SELECT {", ".join(cols)}, l,
+                           ROW_NUMBER() OVER (PARTITION BY query_id
+                               ORDER BY d2 ASC, l ASC) AS rn
+                    FROM pd
+                ) WHERE rn <= {n_probe}
+            )"""
+
+
+def _pq_fit_gate(fit_micro: int) -> str:
+    """pq_train's fit_fraction sample: vec_ids whose md5_hash60 falls
+    under ``fit_micro`` parts per million."""
+    return f"{_h60('CAST(vec_id AS VARCHAR)')} % 1000000 < {fit_micro}"
 
 
 def oracle_pq_search_ivf_sql(
-    ivf_base: str,
-    ivf_lloyd: str,
-    ivf_d2: str,
     m: int = 4,
     k: int = 8,
     n_assign: int = 2,
     dim: int = 64,
     topk: int = 10,
-    n_queries: int = 5,
     n_probe: int = 4,
     fit_micro: int = 500_000,
     rerank_shortlist: "int | None" = None,
 ) -> str:
     """DuckDB oracle for the composed IVF-PQ lifecycle (q_pq_search_ivf
-    and its persisted twin): the md5-gated sampled-fit subspace Lloyd
-    chains (pq_train fit_fraction — seeds and updates over the FIT
-    subset, encode argmins over the FULL corpus), the exact-integer
-    coarse IVF build (the same a0..c2 chain the similarity_ivf oracle
-    replays — passed in as CTE text), per-query probe selection (n_probe
-    nearest lists, ties by list id), and ADC restricted to probed lists
-    as the left-to-right sum of per-subspace L2 distances.
+    and its persisted twin): the sampled-fit subspace codebooks over
+    the md5-gated fit subset with full-corpus codes, the exact-integer
+    coarse IVF build (_ivf_lloyd_ctes), per-query probe selection
+    (_ivf_probe), and ADC over the probed lists' members.
 
     ``rerank_shortlist`` (q_pq_search_rerank): instead of emitting the
     ADC order, shortlist that many candidates per query by approximate
-    distance and emit the EXACT-cosine re-rank of the shortlist — the
+    distance and emit the EXACT-cosine re-rank of the shortlist -- the
     FAISS two-stage tail."""
-    sub = dim // m
-    gate = (
-        "(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT) "
-        f"% 1000000 < {fit_micro}"
-    )
-    parts = [f"""
+    sql = (
+        f"""
             WITH pts AS (
                 SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings
-            ), {ivf_base},
-            {ivf_lloyd},
-            idx AS (SELECT vec_id, l FROM a2)"""]
-    lastc = n_assign - 1
-    for s in range(m):
-        lo, hi = s * sub + 1, (s + 1) * sub
-        parts.append(
-            f""", s{s}p AS (
-                SELECT vec_id, x[{lo}:{hi}] AS sx FROM pts
-            ), s{s}pf AS (
-                SELECT vec_id, sx FROM s{s}p WHERE {gate}
-            ), s{s}c0 AS (
-                SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT)
-                           AS cid,
-                       sx AS c
-                FROM (SELECT vec_id, sx FROM s{s}pf ORDER BY vec_id LIMIT {k})
-            )"""
-        )
-        for i in range(1, n_assign):
-            parts.append(
-                f""", s{s}a{i} AS (
-                SELECT vec_id, sx, cid FROM (
-                    SELECT p.vec_id, p.sx, c.cid,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.sx, c.c) ASC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM s{s}pf p CROSS JOIN s{s}c{i - 1} c
-                ) WHERE rn = 1
-            ), s{s}u{i} AS (
-                SELECT cid, dim,
-                       CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,18))) AS DOUBLE)
-                                 / COUNT(*) AS DECIMAL(28,8)) AS DOUBLE) AS val
-                FROM (
-                    SELECT cid, CAST(generate_subscripts(sx, 1) - 1 AS INT)
-                               AS dim,
-                           unnest(sx) AS v
-                    FROM s{s}a{i}
-                )
-                GROUP BY cid, dim
-            ), s{s}c{i} AS (
-                SELECT cid, list(val ORDER BY dim) AS c
-                FROM s{s}u{i} GROUP BY cid
-            )"""
-            )
-        # encode: FULL-corpus argmin against the final sampled-fit codebook
-        parts.append(
-            f""", s{s}e AS (
-                SELECT vec_id, cid FROM (
-                    SELECT p.vec_id, c.cid,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.sx, c.c) ASC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM s{s}p p CROSS JOIN s{s}c{lastc} c
-                ) WHERE rn = 1
-            )"""
-        )
-    dist_terms = " + ".join(
-        f"list_distance(q.qx[{s * sub + 1}:{(s + 1) * sub}], c{s}.c)"
-        for s in range(m)
-    )
-    pq_joins = " ".join(
-        f"JOIN s{s}e e{s} ON e{s}.vec_id = p.vec_id "
-        f"JOIN s{s}c{lastc} c{s} ON c{s}.cid = e{s}.cid"
-        for s in range(m)
-    )
-    probe_d2 = ivf_d2.format(a="q.qqv", c="c.c")
-    parts.append(
-        f""", qs AS (
+            ), {_IVF_BASE},
+            {_ivf_lloyd_ctes("base")},
+            idx AS (SELECT vec_id, l FROM a2)"""
+        + _pq_subspace_ctes("pts", "x", m, k, n_assign, dim, _pq_fit_gate(fit_micro))
+        + f""", qs AS (
                 SELECT vec_id AS query_id, cv AS qx, qv AS qqv
-                FROM base WHERE vec_id < {n_queries}
-            ), pd AS (
-                SELECT q.query_id, c.l, {probe_d2} AS d2
-                FROM qs q CROSS JOIN c2 c
-            ), pr AS (
-                SELECT query_id, l FROM (
-                    SELECT query_id, l,
-                           ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY d2 ASC, l ASC) AS rn
-                    FROM pd
-                ) WHERE rn <= {n_probe}
-            ), adc AS (
-                SELECT q.query_id, p.vec_id,
-                       ROUND({dist_terms}, 6) AS approx_dist
-                FROM pts p
+                FROM base WHERE vec_id < 5
+            ), {_ivf_probe("qs", n_probe)}"""
+        + _pq_adc(
+            "q.qx",
+            """pts p
                 JOIN idx ix ON ix.vec_id = p.vec_id
                 JOIN pr ON pr.l = ix.l
-                JOIN qs q ON q.query_id = pr.query_id
-                {pq_joins}
-            )"""
+                JOIN qs q ON q.query_id = pr.query_id""",
+            m, n_assign, dim,
+        )
     )
     if rerank_shortlist is None:
-        parts.append(
-            f"""
-            SELECT query_id, vec_id, CAST(rank AS INT) AS rank, approx_dist
-            FROM (
-                SELECT query_id, vec_id, approx_dist,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY query_id
-                           ORDER BY approx_dist ASC, vec_id ASC
-                       ) AS rank
-                FROM adc
-            ) WHERE rank <= {topk}
-        """
-        )
-    else:
-        parts.append(
-            f""", sl AS (
-                SELECT query_id, vec_id FROM (
-                    SELECT query_id, vec_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY query_id
-                               ORDER BY approx_dist ASC, vec_id ASC
-                           ) AS rn
-                    FROM adc
-                ) WHERE rn <= {rerank_shortlist}
+        return sql + _top_per_query("adc", "approx_dist", "ASC", topk)
+    return (
+        sql
+        + f""", sl AS ({_top_per_query("adc", "approx_dist", "ASC", rerank_shortlist)}
             ), ex AS (
                 SELECT s.query_id, s.vec_id,
                        ROUND(list_dot_product(q.qx, p.x)
@@ -5845,160 +5917,122 @@ def oracle_pq_search_ivf_sql(
                 FROM sl s
                 JOIN pts p ON p.vec_id = s.vec_id
                 JOIN qs q ON q.query_id = s.query_id
-            )
-            SELECT query_id, vec_id, CAST(rank AS INT) AS rank, cosine
-            FROM (
-                SELECT query_id, vec_id, cosine,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY query_id
-                           ORDER BY cosine DESC, vec_id ASC
-                       ) AS rank
-                FROM ex
-            ) WHERE rank <= {topk}
-        """
-        )
-    return "".join(parts)
+            )"""
+        + _top_per_query("ex", "cosine", "DESC", topk)
+    )
 
 
 def oracle_pq_ivf_residual_sql(
-    ivf_base: str,
-    ivf_lloyd: str,
-    ivf_d2: str,
     m: int = 4,
     k: int = 8,
     n_assign: int = 2,
     dim: int = 64,
     topk: int = 10,
-    n_queries: int = 5,
     n_probe: int = 4,
     fit_micro: int = 500_000,
 ) -> str:
     """DuckDB oracle for TRUE IVFADC (q_pq_search_ivf_residual): the
     coarse integer build, exact residuals (qv - c)/2^20 per assigned
-    point, md5-gated sampled-fit subspace Lloyd chains over RESIDUAL
-    slices, full-corpus residual encode, probe selection, and the
-    per-(query, list) residual LUT fold in Spark's left-to-right
-    order."""
-    sub = dim // m
-    gate = (
-        "(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT) "
-        f"% 1000000 < {fit_micro}"
-    )
-    parts = [f"""
-            WITH {ivf_base},
-            {ivf_lloyd},
+    point, sampled-fit subspace codebooks over the RESIDUAL slices with
+    full-corpus residual codes, probe selection, and the per-(query,
+    list) residual ADC in Spark's left-to-right order."""
+    return (
+        f"""
+            WITH {_IVF_BASE},
+            {_ivf_lloyd_ctes("base")},
             rv AS (
                 SELECT a.vec_id, a.l,
                        list_transform(range(1, {dim + 1}),
                            i -> (a.qv[i] - c.c[i]) / 1048576.0) AS r
                 FROM a2 a JOIN c2 c USING (l)
-            )"""]
-    lastc = n_assign - 1
-    for s in range(m):
-        lo, hi = s * sub + 1, (s + 1) * sub
-        parts.append(
-            f""", s{s}p AS (
-                SELECT vec_id, r[{lo}:{hi}] AS sx FROM rv
-            ), s{s}pf AS (
-                SELECT vec_id, sx FROM s{s}p WHERE {gate}
-            ), s{s}c0 AS (
-                SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT)
-                           AS cid,
-                       sx AS c
-                FROM (SELECT vec_id, sx FROM s{s}pf ORDER BY vec_id LIMIT {k})
             )"""
-        )
-        for i in range(1, n_assign):
-            parts.append(
-                f""", s{s}a{i} AS (
-                SELECT vec_id, sx, cid FROM (
-                    SELECT p.vec_id, p.sx, c.cid,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.sx, c.c) ASC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM s{s}pf p CROSS JOIN s{s}c{i - 1} c
-                ) WHERE rn = 1
-            ), s{s}u{i} AS (
-                SELECT cid, dim,
-                       CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,18))) AS DOUBLE)
-                                 / COUNT(*) AS DECIMAL(28,8)) AS DOUBLE) AS val
-                FROM (
-                    SELECT cid, CAST(generate_subscripts(sx, 1) - 1 AS INT)
-                               AS dim,
-                           unnest(sx) AS v
-                    FROM s{s}a{i}
-                )
-                GROUP BY cid, dim
-            ), s{s}c{i} AS (
-                SELECT cid, list(val ORDER BY dim) AS c
-                FROM s{s}u{i} GROUP BY cid
-            )"""
-            )
-        parts.append(
-            f""", s{s}e AS (
-                SELECT vec_id, cid FROM (
-                    SELECT p.vec_id, c.cid,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.sx, c.c) ASC,
-                                        c.cid ASC
-                           ) AS rn
-                    FROM s{s}p p CROSS JOIN s{s}c{lastc} c
-                ) WHERE rn = 1
-            )"""
-        )
-    dist_terms = " + ".join(
-        f"list_distance(q.r[{s * sub + 1}:{(s + 1) * sub}], c{s}.c)"
-        for s in range(m)
-    )
-    pq_joins = " ".join(
-        f"JOIN s{s}e e{s} ON e{s}.vec_id = p.vec_id "
-        f"JOIN s{s}c{lastc} c{s} ON c{s}.cid = e{s}.cid"
-        for s in range(m)
-    )
-    probe_d2 = ivf_d2.format(a="q.qqv", c="c.c")
-    parts.append(
-        f""", qs AS (
+        + _pq_subspace_ctes("rv", "r", m, k, n_assign, dim, _pq_fit_gate(fit_micro))
+        + f""", qs AS (
                 SELECT vec_id AS query_id, qv AS qqv
-                FROM base WHERE vec_id < {n_queries}
-            ), pd AS (
-                SELECT q.query_id, c.l, {probe_d2} AS d2
-                FROM qs q CROSS JOIN c2 c
-            ), pr AS (
-                SELECT query_id, l FROM (
-                    SELECT query_id, l,
-                           ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY d2 ASC, l ASC) AS rn
-                    FROM pd
-                ) WHERE rn <= {n_probe}
-            ), qr AS (
+                FROM base WHERE vec_id < 5
+            ), {_ivf_probe("qs", n_probe)}, qr AS (
                 SELECT p.query_id, p.l,
                        list_transform(range(1, {dim + 1}),
                            i -> (q.qqv[i] - c.c[i]) / 1048576.0) AS r
                 FROM pr p
                 JOIN c2 c USING (l)
                 JOIN qs q USING (query_id)
-            ), adc AS (
-                SELECT q.query_id, p.vec_id,
-                       ROUND({dist_terms}, 6) AS approx_dist
-                FROM rv p
-                JOIN qr q ON q.l = p.l
-                {pq_joins}
-            )
-            SELECT query_id, vec_id, CAST(rank AS INT) AS rank, approx_dist
-            FROM (
-                SELECT query_id, vec_id, approx_dist,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY query_id
-                           ORDER BY approx_dist ASC, vec_id ASC
-                       ) AS rank
-                FROM adc
-            ) WHERE rank <= {topk}
-        """
+            )"""
+        + _pq_adc("q.r", "rv p JOIN qr q ON q.l = p.l", m, n_assign, dim)
+        + _top_per_query("adc", "approx_dist", "ASC", topk)
     )
-    return "".join(parts)
+
+
+# Unit-normalized embedding (x / ||x||), as similarity.semantic_dedup
+# normalizes before clustering.
+_UNIT_EMBEDDING = (
+    "list_transform(embedding::DOUBLE[], "
+    "x -> x / sqrt(list_dot_product(embedding::DOUBLE[], "
+    "embedding::DOUBLE[])))"
+)
+
+
+# The embeddings plus planted x2 copies (ids + 100000) of vec_id < 10,
+# and their unit vectors v: the near-duplicate corpus of semantic_dedup,
+# embedding_dedup and embedding_dedup_groups.
+_PLANTED_X2 = """all_vecs AS (
+                SELECT vec_id, embedding FROM embeddings
+                UNION ALL
+                SELECT vec_id + 100000,
+                       list_transform(embedding, x -> CAST(x * 2 AS FLOAT))
+                FROM embeddings WHERE vec_id < 10
+            )"""
+_PLANTED_X2_NORMED = (
+    _PLANTED_X2
+    + f""", normed AS (
+                SELECT vec_id, {_UNIT_EMBEDDING} AS v FROM all_vecs
+            )"""
+)
+
+
+def _beaten(q: str, p: str) -> str:
+    """1 when neighbor ``q`` outranks ``p`` in the canonical-neighbor rule
+    (strictly smaller rounded dist, ties by the smaller id), else 0."""
+    return (
+        f"CASE WHEN {q}.dist < {p}.dist\n"
+        f"                                  OR ({q}.dist = {p}.dist AND {q}.vec_id < {p}.vec_id)\n"
+        "                                THEN 1 ELSE 0 END"
+    )
+
+
+def _semdedup_corpus(
+    src: str, n_assign: int, threshold: float, target_cluster_size: int
+) -> str:
+    """SemDeDup's corpus build over ``src`` (vec_id, embedding): unit
+    normalization, the corpus-relative auto-k (clamped ceil(n/target),
+    min 8 -- a scalar CTE, so the unrolled chain is independent of k),
+    the Lloyd chain on the unit sphere, its final assignment fin, and
+    the canonical-neighbor prune nbr (n_close in-cluster neighbors at
+    rounded cosine >= threshold, pruned when one of them outranks).
+    Used by semantic_dedup and, through _semdedup_state, the incremental
+    and daily keys."""
+    return f"""pts AS (
+                SELECT vec_id, {_UNIT_EMBEDDING} AS x FROM {src}
+            ), kk AS (
+                SELECT GREATEST(8, LEAST(COUNT(*),
+                           CAST(CEIL(COUNT(*) / {target_cluster_size}.0) AS BIGINT))) AS k
+                FROM pts
+            ), c0 AS (
+                SELECT CAST(rn - 1 AS INT) AS cid, x AS c
+                FROM (SELECT x, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
+                      FROM pts) CROSS JOIN kk
+                WHERE rn <= kk.k
+            ){_lloyd_ctes("", "pts", "x", n_assign)}, fin AS (
+                SELECT vec_id, x, cid, ROUND(d, 6) AS dist FROM a{n_assign}
+            ), nbr AS (
+                SELECT pp.vec_id AS pid,
+                       CAST(COUNT(*) AS BIGINT) AS n_close,
+                       MAX({_beaten("q", "pp")}) AS pruned
+                FROM fin pp JOIN fin q
+                  ON pp.cid = q.cid AND pp.vec_id <> q.vec_id
+                WHERE ROUND(list_dot_product(pp.x, q.x), 6) >= {threshold}
+                GROUP BY pp.vec_id
+            )"""
 
 
 def oracle_semantic_dedup_sql(
@@ -6007,87 +6041,80 @@ def oracle_semantic_dedup_sql(
     target_cluster_size: int = 64,
 ) -> str:
     """DuckDB oracle for similarity.semantic_dedup over the planted
-    x2-copy union: normalization, corpus-relative auto-k (clamped
-    ceil(n/target), min 8 — replayed as a scalar CTE so the unrolled
-    chain stays k-independent), the full Lloyd recurrence on the unit
-    sphere, and the canonical-neighbor prune (strictly smaller rounded
-    dist, ties by id)."""
-    parts = [
+    x2-copy union: the _semdedup_corpus build and its per-vector audit."""
+    return (
         """
-            WITH all_vecs AS (
-                SELECT vec_id, embedding FROM embeddings
-                UNION ALL
-                SELECT vec_id + 100000,
-                       list_transform(embedding, x -> CAST(x * 2 AS FLOAT))
-                FROM embeddings WHERE vec_id < 10
-            ), pts AS (
-                SELECT vec_id,
-                       list_transform(embedding::DOUBLE[],
-                           x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
-                                                          embedding::DOUBLE[]))) AS x
-                FROM all_vecs
-            ), kk AS (
-                SELECT GREATEST(8, LEAST(COUNT(*),
-                           CAST(CEIL(COUNT(*) / {target}.0) AS BIGINT))) AS k
-                FROM pts
-            ), c0 AS (
-                SELECT CAST(rn - 1 AS INT) AS cid, x AS c
-                FROM (SELECT x, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-                      FROM pts) CROSS JOIN kk
-                WHERE rn <= kk.k
-            )""".format(target=target_cluster_size)
-    ]
-    for i in range(1, n_assign + 1):
-        parts.append(
-            """, a{i} AS (
-                SELECT vec_id, x, cid, d FROM (
-                    SELECT p.vec_id, p.x, c.cid, list_distance(p.x, c.c) AS d,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.x, c.c) ASC, c.cid ASC
-                           ) AS rn
-                    FROM pts p CROSS JOIN c{j} c
-                ) WHERE rn = 1
-            )""".format(i=i, j=i - 1)
-        )
-        if i < n_assign:
-            parts.append(
-                """, u{i} AS (
-                SELECT cid, dim,
-                       CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,18))) AS DOUBLE)
-                                 / COUNT(*) AS DECIMAL(28,8)) AS DOUBLE) AS val
-                FROM (
-                    SELECT cid, CAST(generate_subscripts(x, 1) - 1 AS INT) AS dim,
-                           unnest(x) AS v
-                    FROM a{i}
-                )
-                GROUP BY cid, dim
-            ), c{i} AS (
-                SELECT cid, list(val ORDER BY dim) AS c FROM u{i} GROUP BY cid
-            )""".format(i=i)
-            )
-    parts.append(
-        """, fin AS (
-                SELECT vec_id, x, cid, ROUND(d, 6) AS dist FROM a{last}
-            ), nbr AS (
-                SELECT pp.vec_id AS pid,
-                       CAST(COUNT(*) AS BIGINT) AS n_close,
-                       MAX(CASE WHEN q.dist < pp.dist
-                                  OR (q.dist = pp.dist AND q.vec_id < pp.vec_id)
-                                THEN 1 ELSE 0 END) AS pruned
-                FROM fin pp JOIN fin q
-                  ON pp.cid = q.cid AND pp.vec_id <> q.vec_id
-                WHERE ROUND(list_dot_product(pp.x, q.x), 6) >= {thr}
-                GROUP BY pp.vec_id
-            )
+            WITH """
+        + _PLANTED_X2
+        + ", "
+        + _semdedup_corpus("all_vecs", n_assign, threshold, target_cluster_size)
+        + """
             SELECT f.vec_id, CAST(f.cid AS INT) AS cluster_id, f.dist,
                    CAST(COALESCE(n.n_close, 0) AS BIGINT) AS n_close,
                    CAST(CASE WHEN COALESCE(n.pruned, 0) = 0
                              THEN 1 ELSE 0 END AS INT) AS keep
             FROM fin f LEFT JOIN nbr n ON f.vec_id = n.pid
-        """.format(last=n_assign, thr=threshold)
+        """
     )
-    return "".join(parts)
+
+
+def _semdedup_state(n_assign: int, threshold: float, target_cluster_size: int) -> str:
+    """The stored SemDeDup state: the _semdedup_corpus build over the
+    corpus (vec_id % 5 <> 0) and its kept-set keptc (unpruned vectors
+    with their cluster and unit vector)."""
+    return (
+        """
+            WITH corpus AS (
+                SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 <> 0
+            ), """
+        + _semdedup_corpus("corpus", n_assign, threshold, target_cluster_size)
+        + """, keptc AS (
+                SELECT f.vec_id, f.cid, f.x
+                FROM fin f LEFT JOIN nbr n ON f.vec_id = n.pid
+                WHERE COALESCE(n.pruned, 0) = 0
+            )"""
+    )
+
+
+def _semdedup_batch(
+    tag: str, batch_sql: str, kept_rel: str, n_assign: int, threshold: float
+) -> str:
+    """One batch judged against a stored state: the vectors of
+    ``batch_sql`` ({tag}all) normalized, assigned to the frozen final
+    centroids ({tag}a), and flagged ({tag}nbr -> {tag}stats) by any kept
+    vector of ``kept_rel`` in their cluster at rounded cosine >=
+    threshold, or by the within-batch canonical rule."""
+    return f""", {tag}all AS ({batch_sql}
+            ), {tag}pts AS (
+                SELECT vec_id, {_UNIT_EMBEDDING} AS x FROM {tag}all
+            ), {tag}a AS (
+                {_argmin(f"{tag}pts", "x", f"c{n_assign - 1}", "vec_id, x, cid, ROUND(d, 6) AS dist")}
+            ), {tag}nbr AS (
+                SELECT b.vec_id AS pid, 1 AS flag
+                FROM {tag}a b JOIN {kept_rel} k2 ON b.cid = k2.cid
+                WHERE ROUND(list_dot_product(b.x, k2.x), 6) >= {threshold}
+                UNION ALL
+                SELECT p.vec_id AS pid,
+                       {_beaten("q", "p")} AS flag
+                FROM {tag}a p JOIN {tag}a q
+                  ON p.cid = q.cid AND p.vec_id <> q.vec_id
+                WHERE ROUND(list_dot_product(p.x, q.x), 6) >= {threshold}
+            ), {tag}stats AS (
+                SELECT pid, CAST(COUNT(*) AS BIGINT) AS n_close,
+                       MAX(flag) AS pruned
+                FROM {tag}nbr GROUP BY pid
+            )"""
+
+
+def _semdedup_audit(tag: str) -> str:
+    """The per-vector audit of the batch ``tag`` of _semdedup_batch."""
+    return f"""
+            SELECT b.vec_id, CAST(b.cid AS INT) AS cluster_id, b.dist,
+                   CAST(COALESCE(s.n_close, 0) AS BIGINT) AS n_close,
+                   CAST(CASE WHEN COALESCE(s.pruned, 0) = 0
+                             THEN 1 ELSE 0 END AS INT) AS keep
+            FROM {tag}a b LEFT JOIN {tag}stats s ON b.vec_id = s.pid
+        """
 
 
 def oracle_semantic_dedup_incremental_sql(
@@ -6095,121 +6122,20 @@ def oracle_semantic_dedup_incremental_sql(
     threshold: float = 0.9,
     target_cluster_size: int = 64,
 ) -> str:
-    """DuckDB oracle for q_semantic_dedup_incremental — replays the FULL
-    incremental lifecycle: corpus (vec_id % 5 <> 0) normalization,
-    auto-k, the corpus Lloyd chain, the corpus canonical prune (-> the
-    kept-set), then the batch (vec_id % 5 = 0 plus planted x2 copies of
-    corpus ids < 10) assigned by argmin against the FROZEN final
-    centroids, pruned by (a) any kept incumbent at cosine >= threshold
-    and (b) the within-batch canonical rule."""
-    norm = (
-        "list_transform(embedding::DOUBLE[], "
-        "x -> x / sqrt(list_dot_product(embedding::DOUBLE[], "
-        "embedding::DOUBLE[])))"
-    )
-    parts = [
-        """
-            WITH corpus AS (
-                SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 <> 0
-            ), pts AS (
-                SELECT vec_id, {norm} AS x FROM corpus
-            ), kk AS (
-                SELECT GREATEST(8, LEAST(COUNT(*),
-                           CAST(CEIL(COUNT(*) / {target}.0) AS BIGINT))) AS k
-                FROM pts
-            ), c0 AS (
-                SELECT CAST(rn - 1 AS INT) AS cid, x AS c
-                FROM (SELECT x, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-                      FROM pts) CROSS JOIN kk
-                WHERE rn <= kk.k
-            )""".format(norm=norm, target=target_cluster_size)
-    ]
-    for i in range(1, n_assign + 1):
-        parts.append(
-            """, a{i} AS (
-                SELECT vec_id, x, cid, d FROM (
-                    SELECT p.vec_id, p.x, c.cid, list_distance(p.x, c.c) AS d,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.x, c.c) ASC, c.cid ASC
-                           ) AS rn
-                    FROM pts p CROSS JOIN c{j} c
-                ) WHERE rn = 1
-            )""".format(i=i, j=i - 1)
-        )
-        if i < n_assign:
-            parts.append(
-                """, u{i} AS (
-                SELECT cid, dim,
-                       CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,18))) AS DOUBLE)
-                                 / COUNT(*) AS DECIMAL(28,8)) AS DOUBLE) AS val
-                FROM (
-                    SELECT cid, CAST(generate_subscripts(x, 1) - 1 AS INT) AS dim,
-                           unnest(x) AS v
-                    FROM a{i}
-                )
-                GROUP BY cid, dim
-            ), c{i} AS (
-                SELECT cid, list(val ORDER BY dim) AS c FROM u{i} GROUP BY cid
-            )""".format(i=i)
-            )
-    parts.append(
-        """, fin AS (
-                SELECT vec_id, x, cid, ROUND(d, 6) AS dist FROM a{last}
-            ), nbrc AS (
-                SELECT pp.vec_id AS pid,
-                       MAX(CASE WHEN q.dist < pp.dist
-                                  OR (q.dist = pp.dist AND q.vec_id < pp.vec_id)
-                                THEN 1 ELSE 0 END) AS pruned
-                FROM fin pp JOIN fin q
-                  ON pp.cid = q.cid AND pp.vec_id <> q.vec_id
-                WHERE ROUND(list_dot_product(pp.x, q.x), 6) >= {thr}
-                GROUP BY pp.vec_id
-            ), keptc AS (
-                SELECT f.vec_id, f.cid, f.x
-                FROM fin f LEFT JOIN nbrc n ON f.vec_id = n.pid
-                WHERE COALESCE(n.pruned, 0) = 0
-            ), ball AS (
+    """DuckDB oracle for q_semantic_dedup_incremental: the stored state
+    (_semdedup_state) and one batch -- vec_id % 5 = 0 plus planted x2
+    copies of corpus ids < 10 -- judged against it (_semdedup_batch)."""
+    batch = """
                 SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 = 0
                 UNION ALL
                 SELECT vec_id + 100000,
                        list_transform(embedding, x -> CAST(x * 2 AS FLOAT))
-                FROM embeddings WHERE vec_id < 10 AND vec_id % 5 <> 0
-            ), bpts AS (
-                SELECT vec_id, {norm} AS x FROM ball
-            ), ab AS (
-                SELECT vec_id, x, cid, ROUND(d, 6) AS dist FROM (
-                    SELECT p.vec_id, p.x, c.cid, list_distance(p.x, c.c) AS d,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.x, c.c) ASC, c.cid ASC
-                           ) AS rn
-                    FROM bpts p CROSS JOIN c{lastc} c
-                ) WHERE rn = 1
-            ), nbru AS (
-                SELECT b.vec_id AS pid, 1 AS flag
-                FROM ab b JOIN keptc k2 ON b.cid = k2.cid
-                WHERE ROUND(list_dot_product(b.x, k2.x), 6) >= {thr}
-                UNION ALL
-                SELECT p.vec_id AS pid,
-                       CASE WHEN q.dist < p.dist
-                              OR (q.dist = p.dist AND q.vec_id < p.vec_id)
-                            THEN 1 ELSE 0 END AS flag
-                FROM ab p JOIN ab q ON p.cid = q.cid AND p.vec_id <> q.vec_id
-                WHERE ROUND(list_dot_product(p.x, q.x), 6) >= {thr}
-            ), stats AS (
-                SELECT pid, CAST(COUNT(*) AS BIGINT) AS n_close,
-                       MAX(flag) AS pruned
-                FROM nbru GROUP BY pid
-            )
-            SELECT b.vec_id, CAST(b.cid AS INT) AS cluster_id, b.dist,
-                   CAST(COALESCE(s.n_close, 0) AS BIGINT) AS n_close,
-                   CAST(CASE WHEN COALESCE(s.pruned, 0) = 0
-                             THEN 1 ELSE 0 END AS INT) AS keep
-            FROM ab b LEFT JOIN stats s ON b.vec_id = s.pid
-        """.format(last=n_assign, lastc=n_assign - 1, thr=threshold, norm=norm)
+                FROM embeddings WHERE vec_id < 10 AND vec_id % 5 <> 0"""
+    return (
+        _semdedup_state(n_assign, threshold, target_cluster_size)
+        + _semdedup_batch("b", batch, "keptc", n_assign, threshold)
+        + _semdedup_audit("b")
     )
-    return "".join(parts)
 
 
 def oracle_semantic_dedup_daily_sql(
@@ -6217,118 +6143,11 @@ def oracle_semantic_dedup_daily_sql(
     threshold: float = 0.9,
     target_cluster_size: int = 64,
 ) -> str:
-    """DuckDB oracle for q_semantic_dedup_daily — the TWO-DAY artifact
-    lifecycle: the corpus build chain of
-    :func:`oracle_semantic_dedup_incremental_sql` (normalization,
-    auto-k, Lloyd rounds, corpus prune -> keptc), then day 1 judged
-    against keptc under the frozen final centroids, the kept-set GROWN
-    by day-1 keepers (the append_semantic_state fold, replayed as a
-    plain UNION), and day 2 judged against the grown set.  Emits the
-    day-2 audit."""
-    norm = (
-        "list_transform(embedding::DOUBLE[], "
-        "x -> x / sqrt(list_dot_product(embedding::DOUBLE[], "
-        "embedding::DOUBLE[])))"
-    )
-    parts = [
-        """
-            WITH corpus AS (
-                SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 <> 0
-            ), pts AS (
-                SELECT vec_id, {norm} AS x FROM corpus
-            ), kk AS (
-                SELECT GREATEST(8, LEAST(COUNT(*),
-                           CAST(CEIL(COUNT(*) / {target}.0) AS BIGINT))) AS k
-                FROM pts
-            ), c0 AS (
-                SELECT CAST(rn - 1 AS INT) AS cid, x AS c
-                FROM (SELECT x, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-                      FROM pts) CROSS JOIN kk
-                WHERE rn <= kk.k
-            )""".format(norm=norm, target=target_cluster_size)
-    ]
-    for i in range(1, n_assign + 1):
-        parts.append(
-            """, a{i} AS (
-                SELECT vec_id, x, cid, d FROM (
-                    SELECT p.vec_id, p.x, c.cid, list_distance(p.x, c.c) AS d,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.x, c.c) ASC, c.cid ASC
-                           ) AS rn
-                    FROM pts p CROSS JOIN c{j} c
-                ) WHERE rn = 1
-            )""".format(i=i, j=i - 1)
-        )
-        if i < n_assign:
-            parts.append(
-                """, u{i} AS (
-                SELECT cid, dim,
-                       CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,18))) AS DOUBLE)
-                                 / COUNT(*) AS DECIMAL(28,8)) AS DOUBLE) AS val
-                FROM (
-                    SELECT cid, CAST(generate_subscripts(x, 1) - 1 AS INT) AS dim,
-                           unnest(x) AS v
-                    FROM a{i}
-                )
-                GROUP BY cid, dim
-            ), c{i} AS (
-                SELECT cid, list(val ORDER BY dim) AS c FROM u{i} GROUP BY cid
-            )""".format(i=i)
-            )
-    parts.append(
-        """, fin AS (
-                SELECT vec_id, x, cid, ROUND(d, 6) AS dist FROM a{last}
-            ), nbrc AS (
-                SELECT pp.vec_id AS pid,
-                       MAX(CASE WHEN q.dist < pp.dist
-                                  OR (q.dist = pp.dist AND q.vec_id < pp.vec_id)
-                                THEN 1 ELSE 0 END) AS pruned
-                FROM fin pp JOIN fin q
-                  ON pp.cid = q.cid AND pp.vec_id <> q.vec_id
-                WHERE ROUND(list_dot_product(pp.x, q.x), 6) >= {thr}
-                GROUP BY pp.vec_id
-            ), keptc AS (
-                SELECT f.vec_id, f.cid, f.x
-                FROM fin f LEFT JOIN nbrc n ON f.vec_id = n.pid
-                WHERE COALESCE(n.pruned, 0) = 0
-            )""".format(last=n_assign, thr=threshold)
-    )
-
-    def _day(tag: str, batch_sql: str, kept_rel: str) -> str:
-        return """, {tag}all AS ({batch}
-            ), {tag}pts AS (
-                SELECT vec_id, {norm} AS x FROM {tag}all
-            ), {tag}a AS (
-                SELECT vec_id, x, cid, ROUND(d, 6) AS dist FROM (
-                    SELECT p.vec_id, p.x, c.cid, list_distance(p.x, c.c) AS d,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY p.vec_id
-                               ORDER BY list_distance(p.x, c.c) ASC, c.cid ASC
-                           ) AS rn
-                    FROM {tag}pts p CROSS JOIN c{lastc} c
-                ) WHERE rn = 1
-            ), {tag}nbr AS (
-                SELECT b.vec_id AS pid, 1 AS flag
-                FROM {tag}a b JOIN {kept} k2 ON b.cid = k2.cid
-                WHERE ROUND(list_dot_product(b.x, k2.x), 6) >= {thr}
-                UNION ALL
-                SELECT p.vec_id AS pid,
-                       CASE WHEN q.dist < p.dist
-                              OR (q.dist = p.dist AND q.vec_id < p.vec_id)
-                            THEN 1 ELSE 0 END AS flag
-                FROM {tag}a p JOIN {tag}a q
-                  ON p.cid = q.cid AND p.vec_id <> q.vec_id
-                WHERE ROUND(list_dot_product(p.x, q.x), 6) >= {thr}
-            ), {tag}stats AS (
-                SELECT pid, CAST(COUNT(*) AS BIGINT) AS n_close,
-                       MAX(flag) AS pruned
-                FROM {tag}nbr GROUP BY pid
-            )""".format(
-            tag=tag, batch=batch_sql, norm=norm, lastc=n_assign - 1,
-            kept=kept_rel, thr=threshold,
-        )
-
+    """DuckDB oracle for q_semantic_dedup_daily -- the TWO-DAY artifact
+    lifecycle: the stored state (_semdedup_state), day 1 judged against
+    keptc, the kept-set GROWN by day-1 keepers (the append_semantic_state
+    fold, replayed as a plain UNION), and day 2 judged against the grown
+    set. Emits the day-2 audit."""
     d1_batch = """
                 SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 = 0
                 UNION ALL
@@ -6341,28 +6160,19 @@ def oracle_semantic_dedup_daily_sql(
                 SELECT vec_id + 200000,
                        list_transform(embedding, x -> CAST(x * 3 AS FLOAT))
                 FROM embeddings WHERE vec_id % 10 = 0 AND vec_id < 40"""
-    parts.append(_day("d1", d1_batch, "keptc"))
-    # the append_semantic_state fold: kept-set grown by day-1 keepers
-    parts.append(
-        """, kept2 AS (
+    return (
+        _semdedup_state(n_assign, threshold, target_cluster_size)
+        + _semdedup_batch("d1", d1_batch, "keptc", n_assign, threshold)
+        + """, kept2 AS (
                 SELECT vec_id, cid, x FROM keptc
                 UNION ALL
                 SELECT a.vec_id, a.cid, a.x
                 FROM d1a a LEFT JOIN d1stats s ON a.vec_id = s.pid
                 WHERE COALESCE(s.pruned, 0) = 0
             )"""
+        + _semdedup_batch("d2", d2_batch, "kept2", n_assign, threshold)
+        + _semdedup_audit("d2")
     )
-    parts.append(_day("d2", d2_batch, "kept2"))
-    parts.append(
-        """
-            SELECT b.vec_id, CAST(b.cid AS INT) AS cluster_id, b.dist,
-                   CAST(COALESCE(s.n_close, 0) AS BIGINT) AS n_close,
-                   CAST(CASE WHEN COALESCE(s.pruned, 0) = 0
-                             THEN 1 ELSE 0 END AS INT) AS keep
-            FROM d2a b LEFT JOIN d2stats s ON b.vec_id = s.pid
-        """
-    )
-    return "".join(parts)
 
 
 def oracle_sql() -> dict[str, str]:
@@ -6374,9 +6184,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT l_returnflag, l_linestatus,
                    {dec_sum('l_quantity')} AS sum_qty,
                    {dec_sum('l_extendedprice')} AS sum_base_price,
-                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                            AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
+                   {_DISC_REVENUE} AS sum_disc_price,
                    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
                                  * CAST(1 - l_discount AS DECIMAL(4,2))
                                  * CAST(1 + l_tax AS DECIMAL(4,2))
@@ -6532,11 +6340,10 @@ def oracle_sql() -> dict[str, str]:
                 FROM orders
             ) WHERE rank <= 3
         """,
-        "embedding_dim_stats": """
+        "embedding_dim_stats": f"""
             SELECT dim,
                    COUNT(*) AS n,
-                   CAST(CAST(CAST(SUM(CAST(CAST(val AS DOUBLE) AS DECIMAL(28,18))) AS DOUBLE)
-                             / COUNT(*) AS DECIMAL(28,8)) AS DOUBLE) AS mean_val,
+                   {_dec_mean("CAST(val AS DOUBLE)")} AS mean_val,
                    CAST(CAST(MIN(CAST(val AS DOUBLE)) AS DECIMAL(28,8)) AS DOUBLE) AS min_val,
                    CAST(CAST(MAX(CAST(val AS DOUBLE)) AS DECIMAL(28,8)) AS DOUBLE) AS max_val
             FROM (
@@ -6770,7 +6577,7 @@ def oracle_sql() -> dict[str, str]:
                    len(regexp_extract_all(lower(text), '\p{L}+|\p{N}+|[^\p{L}\p{N}\s]')) AS bpe_ish_tokens
             FROM documents
         """,
-        "text_quality": r"""
+        "text_quality": f"""
             SELECT doc_id,
                    CAST(len(toks) AS INT) AS n_tokens,
                    ROUND(punct / greatest(n_chars_c, 1), 6) AS punct_ratio,
@@ -6780,56 +6587,12 @@ def oracle_sql() -> dict[str, str]:
                               THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE)
                                    / len(toks)
                               ELSE 0.0 END, 6) AS mean_word_len,
-                   ROUND(
-                       (CASE WHEN len(toks) BETWEEN 5 AND 100000 THEN 0.25 ELSE 0.0 END)
-                     + (CASE WHEN ROUND(punct / greatest(n_chars_c, 1), 6) <= 0.2 THEN 0.25 ELSE 0.0 END)
-                     + (CASE WHEN ROUND(stop_hits / greatest(len(toks), 1), 6) >= 0.01 THEN 0.25 ELSE 0.0 END)
-                     + (CASE WHEN ROUND(CASE WHEN len(toks) > 0
-                                  THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks)
-                                  ELSE 0.0 END, 6) BETWEEN 2 AND 12 THEN 0.25 ELSE 0.0 END),
-                   2) AS quality_score
+                   {_QUALITY_SCORE} AS quality_score
             FROM (
-                SELECT doc_id,
-                       length(text) AS n_chars_c,
-                       length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS punct,
-                       length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS digits,
-                       list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks,
-                       len(list_filter(
-                           list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> ''),
-                           t -> list_contains(['the','and','of','to','a','in','is','that'], t))) AS stop_hits
-                FROM documents
+                {_quality_features("doc_id", "documents")}
             )
         """,
-        "language_id": r"""
-            SELECT doc_id, lang,
-                   CASE
-                     WHEN s_zh >= s_fr AND s_zh >= s_es AND s_zh >= s_en AND s_zh >= s_de THEN 'zh'
-                     WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-                     WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-                     WHEN s_en >= s_de THEN 'en'
-                     ELSE 'de'
-                   END AS lang_pred
-            FROM (
-                SELECT doc_id, lang,
-                       len(list_filter(toks, t -> list_contains(['der','die','und','das','ist','nicht','ein','zu'], t))) AS s_de,
-                       len(list_filter(toks, t -> list_contains(['the','and','of','to','a','in','is','that'], t))) AS s_en,
-                       len(list_filter(toks, t -> list_contains(['el','la','de','que','y','los','en','un'], t))) AS s_es,
-                       len(list_filter(toks, t -> list_contains(['le','la','et','les','des','un','une','est'], t))) AS s_fr,
-                         (length(text) - length(regexp_replace(text, '的', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '是', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '了', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '在', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '我', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '有', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '和', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '不', '', 'g'))) AS s_zh
-                FROM (
-                    SELECT doc_id, lang, text,
-                           list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks
-                    FROM documents
-                )
-            )
-        """,
+        "language_id": _lang_id_sql("doc_id, lang", "documents"),
         "pii_redaction": r"""
             WITH salted AS (
                 SELECT doc_id,
@@ -6874,23 +6637,9 @@ def oracle_sql() -> dict[str, str]:
                 SELECT lang, n_chars,
                        len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS ws_tokens,
                        len(regexp_extract_all(lower(text), '\p{{L}}+|\p{{N}}+|[^\p{{L}}\p{{N}}\s]')) AS bpe_ish_tokens,
-                       ROUND(
-                           (CASE WHEN len(toks) BETWEEN 5 AND 100000 THEN 0.25 ELSE 0.0 END)
-                         + (CASE WHEN ROUND(punct / greatest(n_chars_c, 1), 6) <= 0.2 THEN 0.25 ELSE 0.0 END)
-                         + (CASE WHEN ROUND(stop_hits / greatest(len(toks), 1), 6) >= 0.01 THEN 0.25 ELSE 0.0 END)
-                         + (CASE WHEN ROUND(CASE WHEN len(toks) > 0
-                                      THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks)
-                                      ELSE 0.0 END, 6) BETWEEN 2 AND 12 THEN 0.25 ELSE 0.0 END),
-                       2) AS quality_score
+                       {_QUALITY_SCORE} AS quality_score
                 FROM (
-                    SELECT lang, n_chars, text,
-                           length(text) AS n_chars_c,
-                           length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS punct,
-                           list_filter(regexp_split_to_array(lower(text), '[^\p{{L}}\p{{N}}]+'), t -> t <> '') AS toks,
-                           len(list_filter(
-                               list_filter(regexp_split_to_array(lower(text), '[^\p{{L}}\p{{N}}]+'), t -> t <> ''),
-                               t -> list_contains(['the','and','of','to','a','in','is','that'], t))) AS stop_hits
-                    FROM documents
+                    {_quality_features("lang, n_chars, text", "documents")}
                 )
             )
             SELECT lang, COUNT(*) AS doc_count,
@@ -6907,76 +6656,32 @@ def oracle_sql() -> dict[str, str]:
                    ROUND(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) AS l2_norm
             FROM embeddings
         """,
-        "stratified_sample": """
+        "stratified_sample": f"""
             SELECT lang, COUNT(*) AS doc_count
             FROM documents
-            WHERE ((doc_id % 2147483647) * 48271) % 2147483647 % 1000000 <
+            WHERE {_lehmer_micro("doc_id")} <
                   CASE WHEN lang = 'en' THEN 300000 ELSE 1000000 END
             GROUP BY lang
         """,
-        "temperature_mixture": """
-            WITH per AS (
-                SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
-                FROM documents GROUP BY source
-            ), s AS (
-                SELECT source, n_docs,
-                       CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000)
-                            AS BIGINT) AS s_micro
-                FROM per
-            ), tot AS (
-                SELECT CAST(SUM(s_micro) AS HUGEINT) AS big_s,
-                       CAST(SUM(n_docs) AS HUGEINT) AS big_n
-                FROM s
-            ), r AS (
-                SELECT source, n_docs,
-                       least(1000000,
-                             CAST(((big_n // 2) * s_micro * 1000000)
-                                  // (big_s * n_docs) AS BIGINT))
-                           AS rate_micro
-                FROM s, tot
-            ), k AS (
+        "temperature_mixture": f"""
+            WITH {_temperature_rates("documents", "big_n // 2", "1000000")}, k AS (
                 SELECT d.source, d.doc_id
-                FROM documents d JOIN r USING (source)
-                WHERE ((d.doc_id % 2147483647) * 48271) % 2147483647
-                      % 1000000 < r.rate_micro
+                FROM documents d JOIN rr USING (source)
+                WHERE {_lehmer_micro("d.doc_id")} < rr.rate_micro
             )
-            SELECT r.source, r.n_docs,
+            SELECT rr.source, rr.n_docs,
                    CAST(COALESCE(g.cnt, 0) AS BIGINT) AS n_sampled,
                    CAST(COALESCE(g.idsum, 0) AS BIGINT) AS id_sum
-            FROM r LEFT JOIN (
+            FROM rr LEFT JOIN (
                 SELECT source, COUNT(*) AS cnt, SUM(doc_id) AS idsum
                 FROM k GROUP BY source
             ) g USING (source)
         """,
-        "mixture_upsample": """
-            WITH per AS (
-                SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
-                FROM documents GROUP BY source
-            ), s AS (
-                SELECT source, n_docs,
-                       CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000)
-                            AS BIGINT) AS s_micro
-                FROM per
-            ), tot AS (
-                SELECT CAST(SUM(s_micro) AS HUGEINT) AS big_s,
-                       CAST(SUM(n_docs) AS HUGEINT) AS big_n
-                FROM s
-            ), r AS (
-                SELECT source,
-                       least(CAST(4000000 AS BIGINT),
-                             CAST((((big_n * 3000) // 1000)
-                                   * s_micro * 1000000)
-                                  // (big_s * n_docs) AS BIGINT))
-                           AS rate_micro
-                FROM s, tot
-            ), k AS (
-                SELECT d.source, d.doc_id, r.rate_micro,
-                       (r.rate_micro // 1000000)
-                       + CASE WHEN ((d.doc_id % 2147483647) * 48271)
-                                   % 2147483647 % 1000000
-                                   < (r.rate_micro % 1000000)
-                              THEN 1 ELSE 0 END AS n_copies
-                FROM documents d JOIN r USING (source)
+        "mixture_upsample": f"""
+            WITH {_temperature_rates(
+                "documents", "(big_n * 3000) // 1000", "CAST(4000000 AS BIGINT)"
+            )}, k AS (
+                {_upsample_copies("documents")}
             ), e AS (
                 SELECT source, doc_id, rate_micro,
                        unnest(generate_series(0, n_copies - 1)) AS epoch
@@ -7099,21 +6804,8 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT doc_id, host FROM ranked WHERE rn <= 2
         """,
-        "decontaminate": r"""
-            WITH toks AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(lower(text), '[^\p{L}\p{N}]+'),
-                                   x -> x != '') AS toks
-                FROM documents
-            ), doc_grams AS (
-                SELECT DISTINCT doc_id, gram FROM (
-                    SELECT doc_id,
-                           unnest(list_transform(
-                               range(0, greatest(len(toks) - 8, 0) + 1),
-                               i -> array_to_string(toks[i+1:i+8], ' '))) AS gram
-                    FROM toks
-                ) WHERE gram <> ''
-            ), bench AS (
+        "decontaminate": rf"""
+            WITH {_DOC_GRAMS8}, bench AS (
                 SELECT DISTINCT gram FROM doc_grams WHERE doc_id % 37 = 0
             )
             SELECT d.doc_id,
@@ -7204,21 +6896,8 @@ def oracle_sql() -> dict[str, str]:
                                 AS DOUBLE), 0) AS r2
             FROM pred, g
         """,
-        "boilerplate_spans": r"""
-            WITH toks AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(lower(text), '[^\p{L}\p{N}]+'),
-                                   x -> x != '') AS toks
-                FROM documents
-            ), doc_grams AS (
-                SELECT DISTINCT doc_id, gram FROM (
-                    SELECT doc_id,
-                           unnest(list_transform(
-                               range(0, greatest(len(toks) - 8, 0) + 1),
-                               i -> array_to_string(toks[i+1:i+8], ' '))) AS gram
-                    FROM toks
-                ) WHERE gram <> ''
-            ), freq AS (
+        "boilerplate_spans": rf"""
+            WITH {_DOC_GRAMS8}, freq AS (
                 SELECT gram, CAST(COUNT(*) AS BIGINT) AS doc_freq
                 FROM doc_grams GROUP BY gram
             )
@@ -7368,28 +7047,13 @@ def oracle_sql() -> dict[str, str]:
                    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(19,4)) * CAST(l_extendedprice AS DECIMAL(19,4)) AS DECIMAL(38,8))) AS DOUBLE) AS sum_y2
             FROM lineitem
         """,
-        "mixture_allocation": r"""
+        "mixture_allocation": rf"""
             WITH scored AS (
                 SELECT source,
-                       len(regexp_extract_all(lower(text), '\p{L}+|\p{N}+|[^\p{L}\p{N}\s]')) AS bpe_tokens,
-                       CAST(ROUND(
-                           (CASE WHEN len(toks) BETWEEN 5 AND 100000 THEN 0.25 ELSE 0.0 END)
-                         + (CASE WHEN ROUND(punct / greatest(n_chars_c, 1), 6) <= 0.2 THEN 0.25 ELSE 0.0 END)
-                         + (CASE WHEN ROUND(stop_hits / greatest(len(toks), 1), 6) >= 0.01 THEN 0.25 ELSE 0.0 END)
-                         + (CASE WHEN ROUND(CASE WHEN len(toks) > 0
-                                      THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks)
-                                      ELSE 0.0 END, 6) BETWEEN 2 AND 12 THEN 0.25 ELSE 0.0 END),
-                       2) * 100 AS BIGINT) AS q_centi
+                       len(regexp_extract_all(lower(text), '\p{{L}}+|\p{{N}}+|[^\p{{L}}\p{{N}}\s]')) AS bpe_tokens,
+                       CAST({_QUALITY_SCORE} * 100 AS BIGINT) AS q_centi
                 FROM (
-                    SELECT source, text,
-                           length(text) AS n_chars_c,
-                           length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS punct,
-                           length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS digits,
-                           list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks,
-                           len(list_filter(
-                               list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> ''),
-                               t -> list_contains(['the','and','of','to','a','in','is','that'], t))) AS stop_hits
-                    FROM documents
+                    {_quality_features("source, text", "documents")}
                 )
             ), per AS (
                 SELECT source,
@@ -7564,11 +7228,10 @@ def oracle_sql() -> dict[str, str]:
             FROM pts
             WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
         """,
-        "embedding_centroids": r"""
+        "embedding_centroids": rf"""
             SELECT label, dim,
                    COUNT(*) AS n,
-                   CAST(CAST(CAST(SUM(CAST(CAST(val AS DOUBLE) AS DECIMAL(28,18))) AS DOUBLE)
-                             / COUNT(*) AS DECIMAL(28,8)) AS DOUBLE) AS centroid_val
+                   {_dec_mean("CAST(val AS DOUBLE)")} AS centroid_val
             FROM (
                 SELECT label,
                        CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS dim,
@@ -7615,12 +7278,10 @@ def oracle_sql() -> dict[str, str]:
             JOIN sh sa ON sa.doc_id = p.id_a
             JOIN sh sb ON sb.doc_id = p.id_b
         """,
-        "regional_revenue": r"""
+        "regional_revenue": rf"""
             SELECT n_name,
                    CAST(COUNT(*) AS BIGINT) AS n_lines,
-                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                            AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+                   {_DISC_REVENUE} AS revenue
             FROM lineitem
             JOIN orders   ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey
@@ -7632,11 +7293,9 @@ def oracle_sql() -> dict[str, str]:
               AND o_orderdate < TIMESTAMP '1997-01-01'
             GROUP BY n_name
         """,
-        "bloom_join": r"""
+        "bloom_join": rf"""
             SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n_lines,
-                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                            AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+                   {_DISC_REVENUE} AS revenue
             FROM lineitem JOIN part ON l_partkey = p_partkey
             WHERE p_size = 1
             GROUP BY p_brand
@@ -7781,39 +7440,15 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN (SELECT p_partkey, p_retailprice FROM part WHERE p_size <= 25) p
               ON e.l_partkey = p.p_partkey
         """,
-        "embedding_dedup": """
-            WITH all_vecs AS (
-                SELECT vec_id, embedding FROM embeddings
-                UNION ALL
-                SELECT vec_id + 100000,
-                       list_transform(embedding, x -> CAST(x * 2 AS FLOAT))
-                FROM embeddings WHERE vec_id < 10
-            ), normed AS (
-                SELECT vec_id,
-                       list_transform(embedding::DOUBLE[],
-                           x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
-                                                          embedding::DOUBLE[]))) AS v
-                FROM all_vecs
-            )
+        "embedding_dedup": f"""
+            WITH {_PLANTED_X2_NORMED}
             SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                    ROUND(list_dot_product(a.v, b.v), 6) AS cosine
             FROM normed a JOIN normed b ON a.vec_id < b.vec_id
             WHERE ROUND(list_dot_product(a.v, b.v), 6) >= 0.9
         """,
-        "embedding_dedup_groups": """
-            WITH RECURSIVE all_vecs AS (
-                SELECT vec_id, embedding FROM embeddings
-                UNION ALL
-                SELECT vec_id + 100000,
-                       list_transform(embedding, x -> CAST(x * 2 AS FLOAT))
-                FROM embeddings WHERE vec_id < 10
-            ), normed AS (
-                SELECT vec_id,
-                       list_transform(embedding::DOUBLE[],
-                           x -> x / sqrt(list_dot_product(embedding::DOUBLE[],
-                                                          embedding::DOUBLE[]))) AS v
-                FROM all_vecs
-            ), pairs AS (
+        "embedding_dedup_groups": f"""
+            WITH RECURSIVE {_PLANTED_X2_NORMED}, pairs AS (
                 SELECT a.vec_id AS id_a, b.vec_id AS id_b
                 FROM normed a JOIN normed b ON a.vec_id < b.vec_id
                 WHERE ROUND(list_dot_product(a.v, b.v), 6) >= 0.9
@@ -7891,73 +7526,14 @@ def oracle_sql() -> dict[str, str]:
         ) WHERE rank <= 10
     """
 
-    # ---- exact-replayable IVF oracles (round 7): the quantizer is
-    # random-partition init (md5_hash60(id) mod n_lists) + 2 unrolled
-    # Lloyd steps in exact integer arithmetic (vectors quantized to
-    # floor(x * 2^20 + 0.5); centroid means = sign-factored truncating
-    # division of exact integer sums) — so DuckDB replays the WHOLE
-    # lifecycle: init, both Lloyd steps, frozen-centroid ingest, probe
-    # selection and in-list exact cosine.  Mirrors
-    # similarity.ivf_build_index_exact / ivf_assign_exact /
-    # ivf_search_index_exact with n_lists=16, scale_bits=20.
-    _ivf_d2 = (
-        "list_sum(list_transform(range(1, 65),"
-        " i -> ({a}[i] - {c}[i]) * ({a}[i] - {c}[i])))"
-    )
-
-    def _ivf_lloyd_ctes(src: str, rounds: int = 2) -> str:
-        """CTE chain a0 -> (m1,c1,d1,a1) -> ... over assignment source
-        ``src`` (must expose vec_id, cv, qv).  a0 is the hash-partition
-        init; a{r}/c{r} are the round-r assignment and centroids."""
-        h = "(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT)"
-        parts = [
-            f"""a0 AS (
-                SELECT vec_id, cv, qv,
-                       CAST({h} % 16 AS INTEGER) AS l
-                FROM {src}
-            )"""
-        ]
-        for r in range(1, rounds + 1):
-            prev = f"a{r - 1}"
-            d2 = _ivf_d2.format(a="a.qv", c="c.c")
-            parts.append(
-                f"""m{r} AS (
-                SELECT l, gs.i AS i, SUM(qv[gs.i]) AS s, COUNT(*) AS n
-                FROM {prev}, generate_series(1, 64) gs(i)
-                GROUP BY 1, 2
-            ), c{r} AS (
-                SELECT l, list(CASE WHEN s < 0 THEN -((-s) // n)
-                                    ELSE s // n END ORDER BY i) AS c
-                FROM m{r} GROUP BY 1
-            ), d{r} AS (
-                SELECT a.vec_id, a.cv, a.qv, c.l, {d2} AS d2
-                FROM a0 a CROSS JOIN c{r} c
-            ), a{r} AS (
-                SELECT vec_id, cv, qv, l FROM (
-                    SELECT vec_id, cv, qv, l,
-                           ROW_NUMBER() OVER (PARTITION BY vec_id
-                               ORDER BY d2 ASC, l ASC) AS rn
-                    FROM d{r}
-                ) WHERE rn = 1
-            )"""
-            )
-        return ", ".join(parts)
-
+    # Exact-replayable IVF: the whole lifecycle (hash-partition init, both
+    # integer Lloyd steps, frozen-centroid ingest, probe selection and
+    # in-list exact cosine) through _IVF_BASE, _ivf_lloyd_ctes and
+    # _ivf_probe.
     _ivf_search_tail = f"""qr AS (
                 SELECT vec_id AS query_id, cv AS qcv, qv AS qqv
                 FROM base WHERE vec_id < 5
-            ), pd AS (
-                SELECT q.query_id, q.qcv, c.l,
-                       {_ivf_d2.format(a="q.qqv", c="c.c")} AS d2
-                FROM qr q CROSS JOIN c2 c
-            ), pr AS (
-                SELECT query_id, qcv, l FROM (
-                    SELECT query_id, qcv, l,
-                           ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY d2 ASC, l ASC) AS rn
-                    FROM pd
-                ) WHERE rn <= 4
-            ), sc AS (
+            ), {_ivf_probe("qr", 4, ("query_id", "qcv"))}, sc AS (
                 SELECT p.query_id, a.vec_id,
                        ROUND(list_dot_product(p.qcv, a.cv)
                              / (sqrt(list_dot_product(p.qcv, p.qcv))
@@ -7973,32 +7549,24 @@ def oracle_sql() -> dict[str, str]:
                 FROM sc
             ) WHERE rank <= 10"""
 
-    _ivf_base = """base AS (
-                SELECT vec_id, embedding::DOUBLE[] AS cv,
-                       list_transform(embedding::DOUBLE[],
-                           x -> CAST(floor(x * 1048576.0 + 0.5) AS BIGINT))
-                           AS qv
-                FROM embeddings
-            )"""
-
     sqls["similarity_ivf"] = f"""
-            WITH {_ivf_base},
+            WITH {_IVF_BASE},
             {_ivf_lloyd_ctes("base")},
             idx AS (SELECT vec_id, cv, l FROM a2),
             {_ivf_search_tail}
         """
-    # round 10: build->save->load->search must equal the in-session
-    # lifecycle — same replay, so artifact fidelity is driver-checked
+    # build -> save -> load -> search equals the in-session lifecycle, so
+    # the persisted twin shares the oracle
     sqls["similarity_ivf_persisted"] = sqls["similarity_ivf"]
 
     sqls["similarity_incremental"] = f"""
-            WITH {_ivf_base},
+            WITH {_IVF_BASE},
             bb AS (SELECT * FROM base WHERE vec_id % 10 <> 0),
             {_ivf_lloyd_ctes("bb")},
             nb AS (SELECT * FROM base WHERE vec_id % 10 = 0),
             dn AS (
                 SELECT n.vec_id, n.cv, c.l,
-                       {_ivf_d2.format(a="n.qv", c="c.c")} AS d2
+                       {_ivf_d2("n.qv")} AS d2
                 FROM nb n CROSS JOIN c2 c
             ), an AS (
                 SELECT vec_id, cv, l FROM (
@@ -8097,7 +7665,6 @@ def oracle_sql() -> dict[str, str]:
         minhash_coefficients,
     )
 
-    h60 = lambda x: f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"  # noqa: E731
     tokclass = r"'[^\p{L}\p{N}]+'"
     coefs = minhash_coefficients(32)
 
@@ -8156,7 +7723,7 @@ def oracle_sql() -> dict[str, str]:
                        ) AS s
                 FROM tok
             ), hx AS (
-                SELECT doc_id, {h60('g')} % 2147483647 AS x
+                SELECT doc_id, {_h60('g')} % 2147483647 AS x
                 FROM (SELECT doc_id, unnest(s) AS g FROM sh)
             ), sig AS (
                 SELECT doc_id, {mins}
@@ -8242,67 +7809,25 @@ def oracle_sql() -> dict[str, str]:
 
     # curate_corpus oracle: the ENTIRE composed flow — quality formula →
     # threshold filter → lang-ID heuristic → md5-mode MinHash dedup →
-    # recursive-CTE components → min-id canonical filter. The quality and
-    # lang-ID sub-SQL are verbatim from the text_quality / language_id
-    # oracles (each independently hash-proven); the dedup chain is the
-    # shared _minhash_ctes generator running over the KEPT set.
-    curate_quality = r"""
+    # recursive-CTE components → min-id canonical filter. The quality
+    # score is the _QUALITY_SCORE fragment of text_quality, the lang-ID
+    # sub-SQL the _lang_id_sql fragment of language_id, and the dedup
+    # chain the shared _minhash_ctes generator running over the KEPT set.
+    curate_quality = f"""
             SELECT doc_id,
                    CAST(len(toks) AS INT) AS n_tokens,
-                   ROUND(
-                       (CASE WHEN len(toks) BETWEEN 5 AND 100000 THEN 0.25 ELSE 0.0 END)
-                     + (CASE WHEN ROUND(punct / greatest(n_chars_c, 1), 6) <= 0.2 THEN 0.25 ELSE 0.0 END)
-                     + (CASE WHEN ROUND(stop_hits / greatest(len(toks), 1), 6) >= 0.01 THEN 0.25 ELSE 0.0 END)
-                     + (CASE WHEN ROUND(CASE WHEN len(toks) > 0
-                                  THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks)
-                                  ELSE 0.0 END, 6) BETWEEN 2 AND 12 THEN 0.25 ELSE 0.0 END),
-                   2) AS quality_score
+                   {_QUALITY_SCORE} AS quality_score
             FROM (
-                SELECT doc_id,
-                       length(text) AS n_chars_c,
-                       length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS punct,
-                       list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks,
-                       len(list_filter(
-                           list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> ''),
-                           t -> list_contains(['the','and','of','to','a','in','is','that'], t))) AS stop_hits
-                FROM corpus
+                {_quality_features("doc_id", "corpus")}
             )"""
-    curate_lang = r"""
-            SELECT doc_id,
-                   CASE
-                     WHEN s_zh >= s_fr AND s_zh >= s_es AND s_zh >= s_en AND s_zh >= s_de THEN 'zh'
-                     WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-                     WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-                     WHEN s_en >= s_de THEN 'en'
-                     ELSE 'de'
-                   END AS lang_pred
-            FROM (
-                SELECT doc_id,
-                       len(list_filter(toks, t -> list_contains(['der','die','und','das','ist','nicht','ein','zu'], t))) AS s_de,
-                       len(list_filter(toks, t -> list_contains(['the','and','of','to','a','in','is','that'], t))) AS s_en,
-                       len(list_filter(toks, t -> list_contains(['el','la','de','que','y','los','en','un'], t))) AS s_es,
-                       len(list_filter(toks, t -> list_contains(['le','la','et','les','des','un','une','est'], t))) AS s_fr,
-                         (length(text) - length(regexp_replace(text, '的', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '是', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '了', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '在', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '我', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '有', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '和', '', 'g')))
-                       + (length(text) - length(regexp_replace(text, '不', '', 'g'))) AS s_zh
-                FROM (
-                    SELECT doc_id, text,
-                           list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks
-                    FROM kept
-                )
-            )"""
+    curate_lang = _lang_id_sql("doc_id", "kept")
     def _curate_chain(
         src_sql: str, threshold: float, score_artifact: str | None = None
     ) -> str:
         """CTE chain corpus→qual→kept→langp→(minhash)→grp mirroring
         curate_corpus(hash_fn="md5") up to the canonical filter.
 
-        ``score_artifact`` (round 11) swaps the quality gate onto a
+        ``score_artifact`` swaps the quality gate onto a
         persisted per-doc score parquet — the classifier-gated flow
         with the model's scores as the shared ground truth (n_tokens
         still comes from the heuristic CTE, exactly as the Spark
@@ -8367,11 +7892,11 @@ def oracle_sql() -> dict[str, str]:
         "WITH RECURSIVE " + _curate_chain(curate_src, 0.5) + curate_select
     )
 
-    # round 11: the classifier-gated flow, oracle-promoted — the LR's
-    # per-doc scores persist as a parquet artifact (the ml_classifier_
-    # metrics discipline) and DuckDB replays the whole downstream flow
-    # (threshold → lang-ID → md5 MinHash dedup → components → canonical)
-    # from the same file.  Spam corpus: 40 repeats of 'buy'||(id%7).
+    # The classifier-gated flow: the LR's per-doc scores persist as a
+    # parquet artifact (the ml_classifier_metrics discipline) and DuckDB
+    # replays the whole downstream flow (threshold → lang-ID → md5 MinHash
+    # dedup → components → canonical) from the same file. Spam corpus:
+    # 40 repeats of 'buy'||(id%7).
     curate_scored_src = """
                 SELECT doc_id, text, lang, source, n_chars FROM documents
                 UNION ALL
@@ -8391,26 +7916,26 @@ def oracle_sql() -> dict[str, str]:
         + curate_select
     )
 
-    # export_manifest: curation (defaults: threshold 0.7, no planting) →
-    # seeded md5 hash-mod split → per-(split, lang) packing (the
-    # pack_sequences contract, already independently oracle-proven) →
-    # per-cell manifest. The whole final-mile flow differentially checked.
-    sqls["export_manifest"] = (
+    # export_manifest / export_shuffled: curation (threshold 0.7, no
+    # planting), the seeded md5 split and per-doc pack_tokens over the
+    # curated docs; the manifest sums per-(split, lang) cells and bins
+    # (the pack_sequences contract), the shuffled export packs and orders
+    # rows through _export_pack_rank.
+    export_tagged = (
         "WITH RECURSIVE "
         + _curate_chain("SELECT doc_id, text, lang, source, n_chars FROM documents", 0.7)
         + ", curated AS ("
         + curate_select
-        + r"""
+        + rf"""
             ), tagged AS (
                 SELECT doc_id, lang,
-                       CASE WHEN """
-        + h60("(doc_id::VARCHAR || ':42')")
-        + r""" % 10 = 0
-                            THEN 'val' ELSE 'train' END AS split,
+                       {_EXPORT_SPLIT},
                        len(regexp_extract_all(lower(text),
-                           '\p{L}+|\p{N}+|[^\p{L}\p{N}\s]')) AS pack_tokens
+                           '\p{{L}}+|\p{{N}}+|[^\p{{L}}\p{{N}}\s]')) AS pack_tokens
                 FROM curated
-            ), cum AS (
+            )"""
+    )
+    sqls["export_manifest"] = export_tagged + """, cum AS (
                 SELECT split, lang, pack_tokens,
                        SUM(pack_tokens) OVER (PARTITION BY split, lang
                                               ORDER BY doc_id
@@ -8424,48 +7949,9 @@ def oracle_sql() -> dict[str, str]:
                    CAST(MAX((cum_tokens - pack_tokens) // 2048) + 1 AS BIGINT)
                        AS n_bins
             FROM cum GROUP BY split, lang"""
-    )
-
-    # export_shuffled (round 9): the same curation/split/packing chain,
-    # then the Lehmer-md5 epoch key ((48271 * h60) mod 2^61-1, multiply
-    # through HUGEINT mirroring Spark's DECIMAL(38,0) route) and the
-    # exact total order.
-    sqls["export_shuffled"] = (
-        "WITH RECURSIVE "
-        + _curate_chain("SELECT doc_id, text, lang, source, n_chars FROM documents", 0.7)
-        + ", curated AS ("
-        + curate_select
-        + r"""
-            ), tagged AS (
-                SELECT doc_id, lang,
-                       CASE WHEN """
-        + h60("(doc_id::VARCHAR || ':42')")
-        + r""" % 10 = 0
-                            THEN 'val' ELSE 'train' END AS split,
-                       len(regexp_extract_all(lower(text),
-                           '\p{L}+|\p{N}+|[^\p{L}\p{N}\s]')) AS pack_tokens
-                FROM curated
-            ), packed AS (
-                SELECT doc_id, split, lang,
-                       CAST(pack_tokens AS BIGINT) AS pack_tokens,
-                       (SUM(pack_tokens) OVER (PARTITION BY split, lang
-                                               ORDER BY doc_id
-                                               ROWS UNBOUNDED PRECEDING)
-                        - pack_tokens) // 2048 AS bin_id
-                FROM tagged
-            ), keyed AS (
-                SELECT *,
-                       CAST((48271::HUGEINT * """
-        + h60("(split || '/' || lang || '/' || bin_id::VARCHAR || ':42')")
-        + r""") % 2305843009213693951 AS BIGINT) AS shuffle_key
-                FROM packed
-            )
-            SELECT doc_id, split, lang, CAST(bin_id AS BIGINT) AS bin_id,
-                   pack_tokens, shuffle_key,
-                   CAST(ROW_NUMBER() OVER (
-                       ORDER BY shuffle_key, split, lang, bin_id, doc_id
-                   ) AS BIGINT) AS epoch_rank
-            FROM keyed"""
+    sqls["export_shuffled"] = export_tagged + ", " + _export_pack_rank(
+        "doc_id, split, lang", "pack_tokens", "doc_id",
+        "doc_id, split, lang, CAST(bin_id AS BIGINT) AS bin_id, pack_tokens",
     )
 
     # dup_ngram_spans oracle: positioned 8-gram shingles (zipped unnest →
@@ -8495,7 +7981,7 @@ def oracle_sql() -> dict[str, str]:
                 SELECT doc_id, unnest(s) AS g, unnest(range(0, len(s))) AS pos
                 FROM sh
             ), hx AS (
-                SELECT doc_id, pos, {h60('g')} AS h FROM posed
+                SELECT doc_id, pos, {_h60('g')} AS h FROM posed
             ), ubiq AS (
                 SELECT h FROM hx GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
             ), dup AS (
@@ -8709,7 +8195,7 @@ def oracle_sql() -> dict[str, str]:
 
     norm_text = r"lower(regexp_replace(text, '\s+', ' ', 'g'))"
     sqls["fingerprint_dedup"] = f"""
-            SELECT {h60(norm_text)}
+            SELECT {_h60(norm_text)}
                        AS fingerprint,
                    MIN(doc_id) AS doc_id, COUNT(*) AS dup_count
             FROM (
@@ -8735,7 +8221,7 @@ def oracle_sql() -> dict[str, str]:
                                 x -> x <> '')) AS t
                 FROM documents
             ), hx AS (
-                SELECT doc_id, {h60('t')} AS h FROM tok
+                SELECT doc_id, {_h60('t')} AS h FROM tok
             ), votes AS (
                 SELECT doc_id,
                        {simhash_bits}
@@ -8765,7 +8251,7 @@ def oracle_sql() -> dict[str, str]:
     sqls["dedup_consensus"] = (
         "WITH RECURSIVE " + _minhash_ctes(consensus_src, 0.4)
         + f""", shx AS (
-                SELECT doc_id, {h60('tt')} AS h
+                SELECT doc_id, {_h60('tt')} AS h
                 FROM (SELECT doc_id, unnest(t) AS tt FROM tok)
             ), svotes AS (
                 SELECT doc_id,
@@ -8941,26 +8427,8 @@ def oracle_sql() -> dict[str, str]:
             FROM pri ORDER BY priority DESC, doc_id LIMIT 100
         """
 
-    sqls["session_stats"] = """
-            WITH s AS (
-                SELECT event_id, user_id, event_type, ts,
-                       CAST(SUM(brk) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id
-                                           ROWS UNBOUNDED PRECEDING)
-                            AS BIGINT) AS session_id
-                FROM (
-                    SELECT event_id, user_id, event_type, ts,
-                           CASE WHEN LAG(ts) OVER (PARTITION BY user_id
-                                                   ORDER BY ts, event_id)
-                                     IS NULL
-                                     OR floor(epoch(ts))
-                                        - floor(epoch(LAG(ts) OVER (
-                                            PARTITION BY user_id
-                                            ORDER BY ts, event_id))) > 1800
-                                THEN 1 ELSE 0 END AS brk
-                    FROM events
-                )
-            )
+    sqls["session_stats"] = f"""
+            WITH {_SESSIONS}
             SELECT user_id, session_id,
                    COUNT(*) AS n_events,
                    CAST(floor(epoch(MAX(ts))) - floor(epoch(MIN(ts)))
@@ -9154,26 +8622,8 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY roll.col
         """
 
-    sqls["top_paths"] = """
-            WITH s AS (
-                SELECT event_id, user_id, event_type, ts,
-                       CAST(SUM(brk) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id
-                                           ROWS UNBOUNDED PRECEDING)
-                            AS BIGINT) AS session_id
-                FROM (
-                    SELECT event_id, user_id, event_type, ts,
-                           CASE WHEN LAG(ts) OVER (PARTITION BY user_id
-                                                   ORDER BY ts, event_id)
-                                     IS NULL
-                                     OR floor(epoch(ts))
-                                        - floor(epoch(LAG(ts) OVER (
-                                            PARTITION BY user_id
-                                            ORDER BY ts, event_id))) > 1800
-                                THEN 1 ELSE 0 END AS brk
-                    FROM events
-                )
-            ), paths AS (
+    sqls["top_paths"] = f"""
+            WITH {_SESSIONS}, paths AS (
                 SELECT user_id, session_id,
                        array_to_string(
                            list_slice(
@@ -9187,26 +8637,8 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY n_sessions DESC, path ASC LIMIT 20
         """
 
-    sqls["co_visitation"] = """
-            WITH s AS (
-                SELECT user_id, event_type,
-                       CAST(SUM(brk) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id
-                                           ROWS UNBOUNDED PRECEDING)
-                            AS BIGINT) AS session_id
-                FROM (
-                    SELECT event_id, user_id, event_type, ts,
-                           CASE WHEN LAG(ts) OVER (PARTITION BY user_id
-                                                   ORDER BY ts, event_id)
-                                     IS NULL
-                                     OR floor(epoch(ts))
-                                        - floor(epoch(LAG(ts) OVER (
-                                            PARTITION BY user_id
-                                            ORDER BY ts, event_id))) > 1800
-                                THEN 1 ELSE 0 END AS brk
-                    FROM events
-                )
-            ), present AS (
+    sqls["co_visitation"] = f"""
+            WITH {_SESSIONS}, present AS (
                 SELECT DISTINCT user_id, session_id, event_type FROM s
             )
             SELECT a.event_type AS type_a, b.event_type AS type_b,
@@ -9256,14 +8688,8 @@ def oracle_sql() -> dict[str, str]:
             FROM scored GROUP BY source
         """
 
-    # PageRank / personalized PageRank: the iteration CTE chains are
-    # generated by parameterized builders (oracle_pagerank_sql /
-    # oracle_ppr_sql below), mirroring the Spark loop in
-    # operators/graph.py round for round — all-BIGINT fixed-point
-    # arithmetic, so the comparison is exact. The builders take the
-    # iteration count so tests/test_recurrence_probes.py can
-    # differentially check the RECURRENCE at alternate counts, not just
-    # this registry unrolling.
+    # PageRank / personalized PageRank: _rank_rounds over the trade graph,
+    # all-BIGINT fixed-point like operators/graph.py, at 3 iterations.
     sqls["pagerank"] = oracle_pagerank_sql(iterations=3)
     sqls["pagerank_personalized"] = oracle_ppr_sql(iterations=3)
 
@@ -9424,9 +8850,8 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY dev.grp
         """
 
-    # k-core: generated peel chain mirroring the Spark loop round for
-    # round (including the final degree>=k filter after the last peel);
-    # parameterized builder — see the recurrence-probe note on pagerank.
+    # k-core: the peel chain, including the final degree>=k filter after
+    # the last peel.
     sqls["k_core"] = oracle_k_core_sql(k=80, rounds=4)
 
     sqls["quantile_normalize"] = """
@@ -9442,11 +8867,9 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
         """
 
-    sqls["local_supplier_volume"] = """
+    sqls["local_supplier_volume"] = f"""
             SELECT n_name,
-                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                            AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+                   {_DISC_REVENUE} AS revenue
             FROM lineitem
             JOIN orders   ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey
@@ -9461,13 +8884,11 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY revenue DESC, n_name ASC
         """
 
-    sqls["trade_volume"] = """
+    sqls["trade_volume"] = f"""
             SELECT n1.n_name AS supp_nation,
                    n2.n_name AS cust_nation,
                    CAST(year(l_shipdate) AS INT) AS ship_year,
-                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                            AS DECIMAL(18,4))) AS DOUBLE) AS volume
+                   {_DISC_REVENUE} AS volume
             FROM lineitem
             JOIN orders   ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey
@@ -9586,48 +9007,37 @@ def oracle_sql() -> dict[str, str]:
         """
 
     sqls["kmeans_lloyd"] = oracle_kmeans_sql(k=8, n_assign=3)
-    # PQ lifecycle (round 10): per-subspace Lloyd + encode + ADC replay
+    # PQ lifecycle: per-subspace Lloyd codebooks, codes and ADC top-k
     sqls["pq_search"] = oracle_pq_search_sql(
         m=4, k=8, n_assign=2, dim=64, topk=10
     )
-    # round 11: the composed IVF-PQ tier (IVFADC) — sampled-fit PQ
-    # codebooks + coarse integer-IVF probe + list-pruned ADC, replayed
-    # end to end; the persisted twin must equal the in-session search,
-    # so artifact fidelity is driver-checked differentially.
+    # The IVF-PQ tier (IVFADC): sampled-fit PQ codebooks, coarse integer-
+    # IVF probe and list-pruned ADC. Each persisted twin equals its
+    # in-session search, so it shares the oracle.
     sqls["pq_search_ivf"] = oracle_pq_search_ivf_sql(
-        _ivf_base, _ivf_lloyd_ctes("base"), _ivf_d2,
         m=4, k=8, n_assign=2, dim=64, topk=10, n_probe=4,
         fit_micro=500_000,
     )
     sqls["pq_search_ivf_persisted"] = sqls["pq_search_ivf"]
     sqls["pq_search_rerank"] = oracle_pq_search_ivf_sql(
-        _ivf_base, _ivf_lloyd_ctes("base"), _ivf_d2,
         m=4, k=8, n_assign=2, dim=64, topk=10, n_probe=4,
         fit_micro=500_000, rerank_shortlist=50,
     )
     sqls["pq_search_ivf_residual"] = oracle_pq_ivf_residual_sql(
-        _ivf_base, _ivf_lloyd_ctes("base"), _ivf_d2,
         m=4, k=8, n_assign=2, dim=64, topk=10, n_probe=4,
         fit_micro=500_000,
     )
-    # persisted twin: save(encoding="residual") -> pq_search_index
-    # dispatch -> search must equal the in-session residual lifecycle
     sqls["pq_search_ivf_residual_persisted"] = sqls["pq_search_ivf_residual"]
-    # SemDeDup (round 9): the kmeans chain re-unrolled on the unit
-    # sphere + canonical-neighbor prune; auto-k replayed as a scalar CTE.
+    # SemDeDup: the corpus build and audit, one frozen-centroid batch
+    # judged against the stored state, and the two-day lifecycle whose
+    # kept-set grows between days. semantic_dedup_ivf is rows-only:
+    # MLlib k-means|| is engine-internal.
     sqls["semantic_dedup"] = oracle_semantic_dedup_sql(
         n_assign=3, threshold=0.9, target_cluster_size=64
     )
-    # Incremental SemDeDup (round 10): corpus build + frozen-centroid
-    # batch judgment replayed end-to-end.  semantic_dedup_ivf is
-    # deliberately absent here (rows-only): MLlib k-means|| is
-    # engine-internal.
     sqls["semantic_dedup_incremental"] = oracle_semantic_dedup_incremental_sql(
         n_assign=3, threshold=0.9, target_cluster_size=64
     )
-    # round 11: the two-day artifact lifecycle — the kept-set fold
-    # between days replayed as a plain UNION, so the append itself is
-    # differentially checked, not just each day's judge
     sqls["semantic_dedup_daily"] = oracle_semantic_dedup_daily_sql(
         n_assign=3, threshold=0.9, target_cluster_size=64
     )
@@ -9643,7 +9053,7 @@ def oracle_sql() -> dict[str, str]:
     sqls["table_checksum"] = f"""
             SELECT CAST(month(l_shipdate) AS INT) AS ship_month,
                    COUNT(*) AS n_rows,
-                   CAST(bit_xor({h60(_canon)}) AS BIGINT) AS checksum
+                   CAST(bit_xor({_h60(_canon)}) AS BIGINT) AS checksum
             FROM lineitem
             GROUP BY 1
         """
@@ -9685,7 +9095,7 @@ def oracle_sql() -> dict[str, str]:
                             ELSE [array_to_string(t, ' ')] END AS s
                 FROM tok
             ), g AS (
-                SELECT doc_id, {h60('gg')} AS h FROM (
+                SELECT doc_id, {_h60('gg')} AS h FROM (
                     SELECT DISTINCT doc_id, unnest(s) AS gg FROM sh
                 )
             ), first_seen AS (
@@ -9759,12 +9169,10 @@ def oracle_sql() -> dict[str, str]:
             FROM marked WHERE cm IS NULL OR cm < o_orderdate
         """
 
-    sqls["returned_customers"] = """
+    sqls["returned_customers"] = f"""
             SELECT c_custkey, c_name, n_name,
                    CAST(COUNT(*) AS BIGINT) AS n_lines,
-                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                            AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+                   {_DISC_REVENUE} AS revenue
             FROM lineitem
             JOIN orders   ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey
@@ -9776,11 +9184,9 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY revenue DESC, c_custkey LIMIT 20
         """
 
-    sqls["shipping_priority"] = """
+    sqls["shipping_priority"] = f"""
             SELECT o_orderkey, o_orderdate, o_orderpriority,
-                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                            AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+                   {_DISC_REVENUE} AS revenue
             FROM lineitem
             JOIN orders   ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey
@@ -9842,13 +9248,11 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY value_cents DESC, s_suppkey ASC
         """
 
-    sqls["promo_revenue_share"] = """
+    sqls["promo_revenue_share"] = f"""
             WITH li AS (
                 SELECT date_trunc('month', l_shipdate) AS ship_month,
                        p_type,
-                       CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                                 AS DECIMAL(18,4)) * 10000 AS BIGINT) AS rev_e4
+                       CAST({_DISC_PRICE} * 10000 AS BIGINT) AS rev_e4
                 FROM lineitem JOIN part ON l_partkey = p_partkey
             )
             SELECT ship_month,
@@ -10472,37 +9876,8 @@ def oracle_sql() -> dict[str, str]:
             FROM sc GROUP BY col ORDER BY col
         """
 
-    sqls["kaplan_meier"] = """
-            WITH starts AS (
-                SELECT user_id, MIN(ts) AS s FROM events
-                WHERE event_type = 'signup' GROUP BY 1
-            ), fc AS (
-                SELECT st.user_id, st.s, MIN(e.ts) AS p
-                FROM starts st LEFT JOIN events e
-                  ON e.user_id = st.user_id
-                 AND e.event_type = 'purchase' AND e.ts >= st.s
-                GROUP BY 1, 2
-            ), endt AS (SELECT MAX(ts) AS e FROM events),
-            durs AS (
-                SELECT CAST(FLOOR((FLOOR(epoch(COALESCE(p, endt.e)))
-                                   - FLOOR(epoch(s))) / 3600)
-                            AS BIGINT) AS t,
-                       CASE WHEN p IS NOT NULL THEN 1 ELSE 0 END AS is_event
-                FROM fc CROSS JOIN endt
-            ), per_t AS (
-                SELECT t, SUM(is_event) AS n_events,
-                       SUM(1 - is_event) AS n_censored
-                FROM durs GROUP BY t
-            ), tot AS (
-                SELECT SUM(n_events + n_censored) AS n_total FROM per_t
-            ), risk AS (
-                SELECT t, n_events, n_censored,
-                       n_total - COALESCE(SUM(n_events + n_censored) OVER (
-                           ORDER BY t
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                       ), 0) AS n_risk
-                FROM per_t CROSS JOIN tot
-            ), curve AS (
+    sqls["kaplan_meier"] = f"""
+            WITH {_SURVIVAL_RISK}, curve AS (
                 SELECT t, n_risk, n_events, n_censored,
                        CASE WHEN n_risk > n_events THEN
                            CAST(round(ln((n_risk - n_events) / n_risk) * 1e9,
@@ -10556,13 +9931,11 @@ def oracle_sql() -> dict[str, str]:
               AND l_quantity < 24
         """
 
-    sqls["market_share"] = """
+    sqls["market_share"] = f"""
             WITH rev AS (
                 SELECT CAST(year(o_orderdate) AS INT) AS o_year,
                        n2.n_name AS supp_nation,
-                       CAST(SUM(CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                                 AS DECIMAL(18,4)) * 10000 AS BIGINT))
+                       CAST(SUM(CAST({_DISC_PRICE} * 10000 AS BIGINT))
                             AS BIGINT) AS nation_e4
                 FROM lineitem
                 JOIN part ON l_partkey = p_partkey AND p_type = 'STANDARD'
@@ -10584,12 +9957,10 @@ def oracle_sql() -> dict[str, str]:
             FROM rev ORDER BY o_year, supp_nation
         """
 
-    sqls["product_profit"] = """
+    sqls["product_profit"] = f"""
             SELECT n_name AS supp_nation,
                    CAST(year(o_orderdate) AS INT) AS o_year,
-                   CAST(SUM(CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                                 AS DECIMAL(18,4)) * 10000 AS BIGINT)
+                   CAST(SUM(CAST({_DISC_PRICE} * 10000 AS BIGINT)
                             - CAST(l_quantity AS BIGINT)
                               * ((CAST(CAST(p_retailprice AS DECIMAL(12,2))
                                        * 100 AS BIGINT) * 3) // 5)
@@ -10617,13 +9988,11 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY 1 ORDER BY ship_channel
         """
 
-    sqls["top_supplier"] = """
+    sqls["top_supplier"] = f"""
             WITH rev AS (
                 SELECT date_trunc('quarter', l_shipdate) AS quarter,
                        l_suppkey,
-                       CAST(SUM(CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                                 AS DECIMAL(18,4)) * 10000 AS BIGINT))
+                       CAST(SUM(CAST({_DISC_PRICE} * 10000 AS BIGINT))
                             AS BIGINT) AS revenue_e4
                 FROM lineitem
                 WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -10650,11 +10019,9 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY 1, 2 ORDER BY p_brand, size_bucket
         """
 
-    sqls["disjunctive_revenue"] = """
+    sqls["disjunctive_revenue"] = f"""
             SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
-                   CAST(SUM(CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                                 AS DECIMAL(18,4)) * 10000 AS BIGINT))
+                   CAST(SUM(CAST({_DISC_PRICE} * 10000 AS BIGINT))
                         AS BIGINT) AS revenue_e4
             FROM lineitem JOIN part ON l_partkey = p_partkey
             WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
@@ -10833,37 +10200,8 @@ def oracle_sql() -> dict[str, str]:
             FROM c
         """
     )
-    sqls["nelson_aalen"] = """
-            WITH starts AS (
-                SELECT user_id, MIN(ts) AS s FROM events
-                WHERE event_type = 'signup' GROUP BY 1
-            ), fc AS (
-                SELECT st.user_id, st.s, MIN(e.ts) AS p
-                FROM starts st LEFT JOIN events e
-                  ON e.user_id = st.user_id
-                 AND e.event_type = 'purchase' AND e.ts >= st.s
-                GROUP BY 1, 2
-            ), endt AS (SELECT MAX(ts) AS e FROM events),
-            durs AS (
-                SELECT CAST(FLOOR((FLOOR(epoch(COALESCE(p, endt.e)))
-                                   - FLOOR(epoch(s))) / 3600)
-                            AS BIGINT) AS t,
-                       CASE WHEN p IS NOT NULL THEN 1 ELSE 0 END AS is_event
-                FROM fc CROSS JOIN endt
-            ), per_t AS (
-                SELECT t, SUM(is_event) AS n_events,
-                       SUM(1 - is_event) AS n_censored
-                FROM durs GROUP BY t
-            ), tot AS (
-                SELECT SUM(n_events + n_censored) AS n_total FROM per_t
-            ), risk AS (
-                SELECT t, n_events, n_censored,
-                       n_total - COALESCE(SUM(n_events + n_censored) OVER (
-                           ORDER BY t
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                       ), 0) AS n_risk
-                FROM per_t CROSS JOIN tot
-            ), hz AS (
+    sqls["nelson_aalen"] = f"""
+            WITH {_SURVIVAL_RISK}, hz AS (
                 SELECT t, n_risk, n_events, n_censored,
                        (CAST(n_events AS HUGEINT) * 1000000000) // n_risk
                            AS hazard_nano
@@ -11260,7 +10598,6 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY true_count DESC, key ASC
         """
     sqls["label_propagation"] = oracle_lpa_sql(rounds=3)
-    _w60 = "(('0x' || substr(md5(g), 1, 15))::BIGINT)"
     sqls["winnow_pairs"] = f"""
             WITH src AS (
                 SELECT doc_id, text FROM documents
@@ -11283,7 +10620,7 @@ def oracle_sql() -> dict[str, str]:
                        unnest(range(0, len(gl))) AS pos
                 FROM gs
             ), hx AS (
-                SELECT doc_id, n, pos, {_w60} AS h FROM posed
+                SELECT doc_id, n, pos, {_h60('g')} AS h FROM posed
             ), fan AS (
                 SELECT doc_id, pos, h, pos - o.off AS wstart,
                        greatest(n - 4, 0) AS maxstart
@@ -11377,11 +10714,9 @@ def oracle_sql() -> dict[str, str]:
                         AS INT) AS at_risk
             FROM classes GROUP BY class_size ORDER BY class_size
         """
-    sqls["skew_join"] = """
+    sqls["skew_join"] = f"""
             SELECT p_brand,
-                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                 * CAST(1 - l_discount AS DECIMAL(4,2))
-                            AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+                   {_DISC_REVENUE} AS revenue,
                    CAST(COUNT(*) AS BIGINT) AS n_lines
             FROM lineitem JOIN part ON p_partkey = l_partkey
             GROUP BY p_brand ORDER BY p_brand
@@ -11413,17 +10748,13 @@ def oracle_sql() -> dict[str, str]:
                    round(CAST(sum_sq AS DOUBLE) / n, 6) AS brier
             FROM agg ORDER BY bin
         """
-    # BPE: unrolled merge chain (pair-count CTE, top-1 CTE, 5-pass
-    # replace merge per round) — generated by oracle_bpe_sql so the
-    # recurrence probes can re-unroll it at alternate round counts.
+    # BPE: the training replay (_bpe_train_ctes) at 3 rounds; the encode
+    # keys add the vocabulary and id lists (_oracle_bpe_chain). The
+    # save -> load -> frozen-vocab encode equals the direct path on the
+    # training corpus, so bpe_persisted_encode shares the oracle; the
+    # export keys replay flows.export_tokenized_set end to end.
     sqls["bpe_merges"] = oracle_bpe_sql(rounds=3, tokclass=tokclass)
-    # BPE encode (round 9): the training chain re-unrolled WITH the
-    # final merge applied, then vocabulary/id-sequence reassembly —
-    # n_tokens and the exact per-doc id string both replayed.
     sqls["bpe_encode"] = oracle_bpe_encode_sql(rounds=3, tokclass=tokclass)
-    # round 10: save->load->frozen-vocab encode must equal the direct
-    # path on the training corpus — same oracle, so artifact fidelity
-    # is driver-checked differentially
     sqls["bpe_persisted_encode"] = oracle_bpe_encode_sql(
         rounds=3, tokclass=tokclass
     )
@@ -11433,17 +10764,14 @@ def oracle_sql() -> dict[str, str]:
     sqls["export_tokenized"] = oracle_export_tokenized_sql(
         rounds=3, tokclass=tokclass
     )
-    # round 10: the mixture-composed final mile (rebalance -> tokenize
-    # -> split -> pack -> epoch order) replayed end-to-end
     sqls["export_mixture"] = oracle_export_mixture_sql(
         rounds=3, tokclass=tokclass
     )
     sqls["export_upsampled"] = oracle_export_upsampled_sql(
         rounds=3, tokclass=tokclass
     )
-    # DSIR (r12): hashed unigram+bigram bucket fits, nanonat log ratios,
+    # DSIR: hashed unigram+bigram bucket fits, nanonat log ratios,
     # per-doc BIGINT weights, deterministic top-k — full replay.
-    _h60f = "(('0x' || substr(md5(f), 1, 15))::BIGINT)"
     sqls["dsir_select"] = f"""
             WITH tgt AS (
                 SELECT * FROM documents WHERE source = 'src0'
@@ -11472,10 +10800,10 @@ def oracle_sql() -> dict[str, str]:
                 FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i
                       FROM rws)
             ), ctb AS (
-                SELECT {_h60f} % 4096 AS bucket, COUNT(*) AS ct
+                SELECT {_h60('f')} % 4096 AS bucket, COUNT(*) AS ct
                 FROM tf GROUP BY 1
             ), crb AS (
-                SELECT {_h60f} % 4096 AS bucket, COUNT(*) AS cr
+                SELECT {_h60('f')} % 4096 AS bucket, COUNT(*) AS cr
                 FROM rf GROUP BY 1
             ), nt AS (SELECT SUM(ct) AS n FROM ctb),
             nr AS (SELECT SUM(cr) AS n FROM crb),
@@ -11490,7 +10818,7 @@ def oracle_sql() -> dict[str, str]:
                 FROM crb r LEFT JOIN ctb t USING (bucket)
                 CROSS JOIN nt CROSS JOIN nr
             ), db AS (
-                SELECT doc_id, {_h60f} % 4096 AS bucket, COUNT(*) AS n_db
+                SELECT doc_id, {_h60('f')} % 4096 AS bucket, COUNT(*) AS n_db
                 FROM rf GROUP BY 1, 2
             ), wts AS (
                 SELECT doc_id,

@@ -355,13 +355,18 @@ def test_registry_without_readable_driver_records(tmp_path):
 
 
 def _public_defs():
-    """(rel, FunctionDef) for every module-level public function."""
+    """(rel, FunctionDef) for every module-level public function of the
+    package, and for the entry file's public oracle_* SQL generators."""
     for p in _src_files():
         for node in ast.parse(p.read_text()).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and (
                 not node.name.startswith("_")
             ):
                 yield str(p.relative_to(SRC)), node
+    entry = REPO / "__spark_entry__.py"
+    for node in ast.parse(entry.read_text()).body:
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("oracle_"):
+            yield entry.name, node
 
 
 def _named_params(fn) -> list[str]:
@@ -518,4 +523,29 @@ def test_every_tuning_knob_is_set_somewhere():
     assert not offenders, (
         "defaulted public parameters no call sets (inline the value, or "
         f"name the reason in DATA_PARAM_ALLOWED): {offenders}"
+    )
+
+
+# Text that only one DuckDB oracle fragment of the entry file spells out,
+# with the builder that owns it.  A second occurrence means a CTE chain
+# was copied instead of built by its fragment.
+ORACLE_FRAGMENT_MARKERS = {
+    "AS DECIMAL(28,18)))": "_dec_mean (Lloyd updates, embedding means)",
+    "ORDER BY list_distance(": "_argmin (Lloyd, PQ and SemDeDup assignments)",
+    "48271::HUGEINT": "_export_pack_rank (epoch shuffle key)",
+    "floor(sqrt(CAST(n_docs AS DOUBLE))": "_temperature_rates",
+    "% 2147483647) * 48271) % 2147483647 % 1000000": "_lehmer_micro",
+    "GREATEST(8, LEAST(COUNT(*)": "_semdedup_corpus (auto-k)",
+    "ORDER BY cnt DESC, l ASC, r ASC LIMIT 1": "_bpe_train_ctes (top pair)",
+    "THEN 'val' ELSE 'train'": "_EXPORT_SPLIT",
+    "[[:punct:]]": "_quality_features",
+}
+
+
+def test_each_oracle_fragment_is_spelled_out_once():
+    text = (REPO / "__spark_entry__.py").read_text()
+    counts = {m: text.count(m) for m in ORACLE_FRAGMENT_MARKERS}
+    assert all(n == 1 for n in counts.values()), (
+        "oracle fragment text repeated or missing (call its builder): "
+        f"{ {m: n for m, n in counts.items() if n != 1} }"
     )

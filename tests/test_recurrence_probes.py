@@ -117,6 +117,20 @@ def test_kmeans_alternate_rounds(spark, duck):
     _assert_match(out, duck, entrymod.oracle_kmeans_sql(k=8, n_assign=2))
 
 
+def test_pq_search_alternate_rounds(spark, duck):
+    """PQ train -> encode -> ADC search with 3 Lloyd assignments per
+    subspace (the registry oracle runs 2): pins the subspace chain's
+    assignment/update coupling through the codes and the ADC order."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    queries_df = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    cb = similarity.pq_train(emb, m=4, k=8, n_assign=3)
+    enc = similarity.pq_encode(emb, cb, m=4)
+    out = similarity.pq_search_adc(enc, cb, queries_df, k=10, m=4)
+    _assert_match(out, duck, entrymod.oracle_pq_search_sql(n_assign=3))
+
+
 @pytest.mark.parametrize("rounds", [2, 4])
 def test_label_propagation_alternate_rounds(spark, duck, rounds):
     """The LPA registry oracle unrolls 3 rounds; re-unrolling at 2 and 4
